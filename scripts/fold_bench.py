@@ -32,15 +32,40 @@ store_build_sec. n_failed is derived from the folded queries map itself
 (ADVICE r13: the max-over-runs form could report failures the fold had
 already healed).
 
+Inputs are rejected (exit 2, no OUT written) when any carries
+`deadline_truncated`, when a record's `n_queries` disagrees with its own
+queries map, or when RUN1 and RUN2 differ in `n_queries`.
+
 Usage: fold_bench.py OUT.json RUN1.json RUN2.json [RUN_OR_PATCH.json ...]
 """
 import json
 import sys
 
 
+def reject(msg: str) -> None:
+    print(f"fold_bench: {msg}", file=sys.stderr)
+    sys.exit(2)
+
+
 def main() -> None:
     out_path, run_paths = sys.argv[1], sys.argv[2:]
     runs = [json.load(open(p)) for p in run_paths]
+    # A deadline-truncated run measured a smaller catalog than it was
+    # asked to; two of them truncated at the same point would fold into
+    # an unmarked artifact with silently fewer queries (ADVICE r16).
+    for p, r in zip(run_paths, runs):
+        if r.get("deadline_truncated"):
+            reject(f"{p}: deadline-truncated run "
+                   f"(n_skipped={r.get('n_skipped')})")
+        if r["n_queries"] != len(r["queries"]):
+            reject(f"{p}: n_queries={r['n_queries']} but "
+                   f"{len(r['queries'])} queries recorded")
+    # RUN1 and RUN2 are the full runs by contract; only the optional
+    # later inputs may be targeted patch runs over a subset.
+    if len(runs) < 2 or runs[0]["n_queries"] != runs[1]["n_queries"]:
+        reject("RUN1 and RUN2 must be full runs with equal n_queries: "
+               + ", ".join(f"{p}={r['n_queries']}"
+                           for p, r in zip(run_paths, runs)))
     names = set(runs[0]["queries"])
     full, patches = [], []
     for p, r in zip(run_paths, runs):

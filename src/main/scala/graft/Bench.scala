@@ -536,7 +536,7 @@ object Bench {
     // "queries" object the baseline parser reads, plus the full
     // diagnostic surface as structured fields.
     sys.env.get("SPARK_GRAFT_BENCH_LOCAL_OUT").foreach { path =>
-      val rec = s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","runs":$runs,"n_queries":${results.size},"n_failed":$nFailed,"store_build_sec":$storeTotal,"stores":$stores,"queries":$qs,"queries_sweep":$qsSweep,"queries_median":$qsMed,"queries_dispersion":$qsDisp,"isolated":$iso,"total":$total}"""
+      val rec = s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","runs":$runs,"n_queries":${results.size},"n_failed":$nFailed,"store_build_sec":$storeTotal,"stores":$stores,"queries":$qs,"queries_sweep":$qsSweep,"queries_median":$qsMed,"queries_dispersion":$qsDisp,"isolated":$iso$truncMark,"total":$total}"""
       java.nio.file.Files.writeString(java.nio.file.Paths.get(path),
         rec + "\n"): Unit
       System.err.println(s"[bench] local record written to $path")

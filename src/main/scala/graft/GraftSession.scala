@@ -86,9 +86,11 @@ object GraftSession {
     * 30.8 s inside a 12-query run whose predecessors leaked checkpoints
     * vs 2.35 s in a fresh JVM — old-gen pressure, exactly the aged-heap
     * effect Bench's fresh-JVM isolation exists to dodge. Safe between
-    * queries: no module-level memo holds a DataFrame (stores memoize
-    * directory paths), so every registered query rebuilds its plan from
-    * parquet and nothing re-reads a truncated lineage. */
+    * queries: no module-level memo holds a DataFrame — stores memoize
+    * directory paths and [[Tables.read]]'s schema memo holds only
+    * `StructType`s keyed on file identity — so every registered query
+    * rebuilds its plan from parquet and nothing re-reads a truncated
+    * lineage. */
   def releaseCaches(s: SparkSession): Unit = {
     s.catalog.clearCache()
     s.sparkContext.getPersistentRDDs.values

@@ -218,7 +218,17 @@ object AdsQueries extends QueryModule {
     * `sum(when(isR, …))` reproduces the padding exactly: it is NULL
     * precisely on keys with no refund rows, where the full outer join
     * produced NULLs (never a spurious 0). The oracle keeps the
-    * full-outer SQL verbatim, so the hash gate proves the algebra. */
+    * full-outer SQL verbatim, so the hash gate proves the algebra.
+    *
+    * The rewrite equals the full-outer form ONLY when every grouping key
+    * is non-null: the outer join never matches a NULL key, so it emits a
+    * separate order-side and refund-side row for it, while `groupBy`
+    * folds NULL keys into one group. The part-dim keys are non-null here
+    * on two counts: the inner broadcast join keeps only lineitem rows
+    * that matched a `part` row, and the projected `p_brand` / `p_type` /
+    * `p_size` are filled on every part row of the generated data (zero
+    * NULLs at every sf). A caller grouping on a nullable key must not
+    * reuse this template. */
   private def orderVsRefund(s: SparkSession, d: String,
                             keys: Seq[String]): DataFrame = {
     val li = Tables.lineitem(s, d)

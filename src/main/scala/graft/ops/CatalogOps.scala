@@ -100,15 +100,14 @@ object CatalogOps extends QueryModule {
     val li = Tables.lineitem(s, d)
     val cores = s.sparkContext.defaultParallelism
     val splitBytes = s.sessionState.conf.filesMaxPartitionBytes
-    // Directory-aware size: a production-scale table is a DIRECTORY of
-    // part files (File.length() on a dir is filesystem noise, not data
-    // size) — sum the parts so the gate turns OFF exactly when the scan
-    // has enough real splits.
-    val src = new java.io.File(d, "lineitem.parquet")
-    val inputBytes =
-      if (src.isDirectory)
-        Option(src.listFiles()).map(_.map(_.length()).sum).getOrElse(0L)
-      else src.length()
+    // Size through the table path's Hadoop FileSystem, recursively: a
+    // production-scale table is a DIRECTORY of part files, possibly
+    // nested by partition, on a remote store — a local non-recursive
+    // listing reads 0 bytes there and undercounts nested partitions, so
+    // the gate would turn the wrong way exactly off the test box.
+    val src = new org.apache.hadoop.fs.Path(s"$d/lineitem.parquet")
+    val inputBytes = src.getFileSystem(s.sessionState.newHadoopConf())
+      .getContentSummary(src).getLength
     val spread =
       if (inputBytes > 0 && inputBytes < cores.toLong * splitBytes)
         li.repartition(cores)
@@ -210,7 +209,7 @@ object CatalogOps extends QueryModule {
     * the frag layout), each output task streams one bin (≈ the target
     * size by construction), and nothing else is touched. */
   private def compactStore(s: SparkSession, d: String): String =
-    compactBuilt.computeIfAbsent(StoreDirs.freshKey(d), k =>
+    compactBuilt.computeIfAbsent(StoreDirs.freshKey(s, d), k =>
       StoreDirs.ensureBuilt("compact", k) { base =>
         Tables.events(s, d)
           .withColumn("day", date_format(col("ts"), "yyyy-MM-dd"))
@@ -219,7 +218,7 @@ object CatalogOps extends QueryModule {
           .parquet(s"$base/frag")
         val assign = partBins(s, d)
           .select(col("event_type"), col("day"), col("bin_id"))
-        s.read.parquet(s"$base/frag")
+        Tables.read(s, s"$base/frag")
           .withColumn("day", col("day").cast("string"))
           .join(broadcast(assign), Seq("event_type", "day"))
           .repartition(col("event_type"), col("bin_id"))
@@ -231,7 +230,7 @@ object CatalogOps extends QueryModule {
     * CompactionSpec's full-column multiset-equality check. */
   private[graft] def compactedStoreForTest(s: SparkSession,
       d: String): DataFrame =
-    s.read.parquet(s"${compactStore(s, d)}/compacted")
+    Tables.read(s, s"${compactStore(s, d)}/compacted")
       .withColumn("day", col("day").cast("string"))
       .drop("bin_id")
 
@@ -254,14 +253,14 @@ object CatalogOps extends QueryModule {
     val base = compactStore(s, d)
     val assign = partBins(s, d)
       .select(col("event_type"), col("day"), col("bin_id"))
-    val beforeFiles = s.read.parquet(s"$base/frag")
+    val beforeFiles = Tables.read(s, s"$base/frag")
       .select(col("event_type"), col("day").cast("string").as("day"),
         col("_metadata.file_path").as("f"))
       .distinct()
       .join(broadcast(assign), Seq("event_type", "day"))
       .groupBy(col("event_type"), col("bin_id"))
       .agg(countDistinct(col("f")).as("files_before"))
-    val after = s.read.parquet(s"$base/compacted")
+    val after = Tables.read(s, s"$base/compacted")
       .select(col("event_type"), col("bin_id").cast("long").as("bin_id"),
         col("_metadata.file_path").as("f"))
       .groupBy(col("event_type"), col("bin_id"))
@@ -290,7 +289,7 @@ object CatalogOps extends QueryModule {
     * audit, so the executor can never cluster by a different curve than
     * the one `q_zorder_layout` scores. */
   private def zorderStore(s: SparkSession, d: String): String =
-    zorderBuilt.computeIfAbsent(StoreDirs.freshKey(d), k =>
+    zorderBuilt.computeIfAbsent(StoreDirs.freshKey(s, d), k =>
       StoreDirs.ensureBuilt("zexec", k) { base =>
         val b = Relational.zorderBuckets(s, d)
           .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"),
@@ -320,7 +319,7 @@ object CatalogOps extends QueryModule {
     val base = zorderStore(s, d)
     val mpk = Tables.lineitem(s, d).agg(max(col("l_partkey")).as("mpk"))
     def audit(dir: String, bcol: String, layout: String): DataFrame =
-      s.read.parquet(s"$base/$dir")
+      Tables.read(s, s"$base/$dir")
         .select(col(bcol).cast("long").as("file_id"),
           col("l_partkey"), col("l_suppkey"),
           col("_metadata.file_path").as("f"))

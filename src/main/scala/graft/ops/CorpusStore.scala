@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Tables
 import graft.functions.TextFunctions.fingerprint
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -35,7 +36,7 @@ object CorpusStore {
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   private def ensure(s: SparkSession, d: String): String =
-    built.computeIfAbsent(StoreDirs.freshKey(d), k =>
+    built.computeIfAbsent(StoreDirs.freshKey(s, d), k =>
       StoreDirs.ensureBuilt("corpussurv", k) { base =>
         TextOps.filteredCorpusCompute(s, d)
           .write.mode("overwrite").parquet(s"$base/surv")
@@ -43,7 +44,7 @@ object CorpusStore {
 
   /** The materialized survivor manifest (doc_id, source, n_tok, char_sum). */
   def survivors(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(s"${ensure(s, d)}/surv")
+    Tables.read(s, s"${ensure(s, d)}/surv")
 
   /** The STREAMING face of the corpus filter — fold one ingest batch of
     * (doc_id, text, source) rows into the manifest rooted at `base` (the
@@ -104,7 +105,7 @@ object CorpusStore {
     def existing(p: String): Option[DataFrame] = committedDirs(base, p)
       match {
         case Seq() => None
-        case dirs => Some(s.read.parquet(dirs: _*))
+        case dirs => Some(Tables.read(s, dirs: _*))
       }
 
     val withFp = TextOps.corpusGate(batch)
@@ -181,6 +182,6 @@ object CorpusStore {
   def state(s: SparkSession, base: String, surface: String): DataFrame = {
     val dirs = committedDirs(base, s"$base/$surface")
     require(dirs.nonEmpty, s"no committed folds under $base/$surface")
-    s.read.parquet(dirs: _*)
+    Tables.read(s, dirs: _*)
   }
 }

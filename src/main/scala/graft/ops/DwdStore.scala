@@ -1,5 +1,7 @@
 package graft.ops
 
+import graft.Tables
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Materialized DWD layer — the warehouse architecture the reference uses:
@@ -160,44 +162,67 @@ private[graft] object StoreDirs {
     new java.io.File(dir).exists()
   }
 
-  /** Input-freshness cache key: the sfDir path plus a digest of every
-    * file's (path, mtime, length) under it. The driver can REGENERATE the
-    * input parquet mid-round (CLAUDE.md: the events timestamp precision
-    * flipped mid-round in r6); a store memoized on the path alone would
-    * then probe STALE artifacts while the oracles recompute from the fresh
-    * inputs — a gate failure disguised as a query bug. Keying both the
-    * memo map and the store directory on this fingerprint makes input
-    * regeneration invalidate every store automatically (the superseded
-    * directory lingers until JVM exit — metadata-sized, reclaimed by the
-    * shutdown hook). The walk is a metadata-only listing of a few dozen
-    * files, so calling it on every store access is free relative to a
-    * query. */
-  def freshKey(d: String): String = {
-    def walk(f: java.io.File): Seq[java.io.File] = {
-      val c = f.listFiles()
-      if (c == null) Seq(f)
-      else f +: c.sortBy(_.getName).toSeq.flatMap(walk)
+  /** Input-freshness key: the path plus a digest of every file's (path,
+    * mtime, length) under it, and of each file's last 64 bytes. The
+    * driver can REGENERATE the input parquet mid-round (CLAUDE.md: the
+    * events timestamp precision flipped mid-round in r6); a store
+    * memoized on the path alone would then probe STALE artifacts while
+    * the oracles recompute from the fresh inputs — a gate failure
+    * disguised as a query bug. Keying both the memo map and the store
+    * directory on this fingerprint makes input regeneration invalidate
+    * every store automatically (the superseded directory lingers until
+    * JVM exit — metadata-sized, reclaimed by the shutdown hook).
+    *
+    * It is also the file identity behind [[graft.Tables.read]]'s schema
+    * memo, so the code has ONE notion of "same files": a store dir
+    * rewritten by [[durableOverwrite]], an appended batch dir or a
+    * regenerated input table changes the key and forces a fresh schema
+    * inference.
+    *
+    * The walk goes through the Hadoop `FileSystem` of the path (with the
+    * session's Hadoop conf), the same listing a Spark scan uses: a
+    * `java.io.File` walk of an `hdfs://` or `s3a://` path sees no files,
+    * which would pin one key — and so a stale memo — forever. The path
+    * is globbed the way a parquet scan globs it; a missing path
+    * digests to the empty walk. The last 64 bytes of each file cover the
+    * parquet footer tail (metadata offsets + row-group stats), which any
+    * content change perturbs: metadata alone misses a regeneration that
+    * preserves sizes under coarse mtimes or an atomic rename keeping
+    * timestamps. The walk is a metadata listing plus one 64-byte read
+    * per file, so calling it on every store access is free relative to
+    * a query. */
+  def freshKey(s: SparkSession, d: String): String = {
+    val root = new Path(d)
+    val fs = root.getFileSystem(s.sessionState.newHadoopConf())
+    // tails bypass the local checksum layer, which opens a `.crc` side
+    // file per read (measured 4x the cost of the rest of the walk); a
+    // fingerprint needs no verification of the bytes it hashes
+    val tails = fs match {
+      case c: ChecksumFileSystem => c.getRawFileSystem
+      case other => other
     }
     val md = java.security.MessageDigest.getInstance("MD5")
-    walk(new java.io.File(d)).foreach { f =>
-      md.update(s"${f.getPath}|${f.lastModified}|${f.length}\n"
+    def visit(st: FileStatus): Unit = {
+      md.update(s"${st.getPath}|${st.getModificationTime}|${st.getLen}\n"
         .getBytes("UTF-8"))
-      // defense in depth: metadata alone misses a regeneration that
-      // preserves sizes under coarse mtimes (or an atomic rename keeping
-      // timestamps). The last 64 bytes of each file cover the parquet
-      // footer — metadata offsets + row-group stats — which any content
-      // change perturbs; 64 bytes × a few dozen files is still free.
-      if (f.isFile && f.length > 0) {
-        val raf = new java.io.RandomAccessFile(f, "r")
-        try {
-          val n = math.min(64L, raf.length).toInt
-          raf.seek(raf.length - n)
+      try {
+        if (st.isDirectory)
+          fs.listStatus(st.getPath).sortBy(_.getPath.getName).foreach(visit)
+        else if (st.getLen > 0) {
+          val n = math.min(64L, st.getLen).toInt
           val buf = new Array[Byte](n)
-          raf.readFully(buf)
+          val in = tails.open(st.getPath)
+          try in.readFully(st.getLen - n, buf) finally in.close()
           md.update(buf)
-        } finally raf.close()
+        }
+      } catch {
+        // deleted between the listing and the read (a concurrent
+        // overwrite): the key differs from both states, which is safe
+        case _: java.io.FileNotFoundException => md.update(0: Byte)
       }
     }
+    Option(fs.globStatus(root)).toSeq.flatten
+      .sortBy(_.getPath.toString).foreach(visit)
     d + "@" + md.digest().map("%02x".format(_)).mkString.take(12)
   }
 }
@@ -207,7 +232,7 @@ object DwdStore {
   private val built = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   private def ensure(s: SparkSession, d: String): String =
-    built.computeIfAbsent(StoreDirs.freshKey(d), k =>
+    built.computeIfAbsent(StoreDirs.freshKey(s, d), k =>
       StoreDirs.ensureBuilt("dwd", k) { base =>
         val wide = OrderWide.buildWide(
           OrderWide.detail(s, d), OrderWide.info(s, d),
@@ -216,15 +241,15 @@ object DwdStore {
         // latest derives from the STORED wide (one scan of the materialized
         // table, not a second run of the join subtree)
         OrderWide.keepLatestBatch(
-            OrderWide.versions(s.read.parquet(s"$base/wide")))
+            OrderWide.versions(Tables.read(s, s"$base/wide")))
           .write.mode("overwrite").parquet(s"$base/latest")
       })
 
   /** The materialized five-table wide join. */
   def wide(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(s"${ensure(s, d)}/wide")
+    Tables.read(s, s"${ensure(s, d)}/wide")
 
   /** The materialized keep-latest deduped changelog. */
   def latest(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(s"${ensure(s, d)}/latest")
+    Tables.read(s, s"${ensure(s, d)}/latest")
 }

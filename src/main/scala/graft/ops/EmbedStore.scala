@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -48,16 +49,16 @@ object EmbedStore {
       "doc_id")
 
   private def ensure(s: SparkSession, d: String): String =
-    built.computeIfAbsent(StoreDirs.freshKey(d), k =>
+    built.computeIfAbsent(StoreDirs.freshKey(s, d), k =>
       StoreDirs.ensureBuilt("embed", k) { base =>
-        val docs = graft.Tables.documents(s, d)
+        val docs = Tables.documents(s, d)
           .repartition(s.sparkContext.defaultParallelism)
         vectorsOf(docs).write.mode("overwrite").parquet(s"$base/vectors")
       })
 
   /** The materialized (doc_id, b, cnt) sparse document vectors. */
   def vectors(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(s"${ensure(s, d)}/vectors")
+    Tables.read(s, s"${ensure(s, d)}/vectors")
 
   /** Incremental maintenance: merge stored vectors with a fresh batch's.
     * Append-only corpus ⇒ doc_ids union disjointly; a replayed document
@@ -82,7 +83,7 @@ object EmbedStore {
     val fresh = vectorsOf(batch)
     val merged =
       if (StoreDirs.recoverThenExists(vDir))
-        mergeVectors(s.read.parquet(vDir), fresh).localCheckpoint()
+        mergeVectors(Tables.read(s, vDir), fresh).localCheckpoint()
       else fresh.localCheckpoint()
     StoreDirs.durableOverwrite(merged, vDir)
     Relational.unpersistCheckpoint(merged)

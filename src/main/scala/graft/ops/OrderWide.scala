@@ -357,7 +357,7 @@ object OrderWide extends QueryModule {
   def scd2Refresh(s: SparkSession, histDir: String, batch: DataFrame): Unit = {
     val h =
       if (StoreDirs.recoverThenExists(histDir))
-        Scd2.applyBatch(s.read.parquet(histDir), batch,
+        Scd2.applyBatch(Tables.read(s, histDir), batch,
           "detail_id", "op_ts", chainOrder).localCheckpoint()
       else
         Scd2.fromLog(batch, "detail_id", "op_ts", chainOrder)
@@ -669,7 +669,7 @@ object Scd2Store {
   private val built = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   private def ensure(s: SparkSession, d: String): String =
-    built.computeIfAbsent(StoreDirs.freshKey(d), k =>
+    built.computeIfAbsent(StoreDirs.freshKey(s, d), k =>
       StoreDirs.ensureBuilt("scd2h", k) { base =>
         Scd2.fromLog(OrderWide.versions(DwdStore.wide(s, d)),
           "detail_id", "op_ts", OrderWide.chainOrder)
@@ -678,5 +678,5 @@ object Scd2Store {
 
   /** The materialized raw SCD2 history. */
   def hist(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(s"${ensure(s, d)}/hist")
+    Tables.read(s, s"${ensure(s, d)}/hist")
 }

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -30,9 +31,9 @@ object PostingStore {
   private val built = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   private def ensure(s: SparkSession, d: String): String =
-    built.computeIfAbsent(StoreDirs.freshKey(d), k =>
+    built.computeIfAbsent(StoreDirs.freshKey(s, d), k =>
       StoreDirs.ensureBuilt("postings", k) { base =>
-        val docs = graft.Tables.documents(s, d)
+        val docs = Tables.documents(s, d)
           .repartition(s.sparkContext.defaultParallelism)
         RetrievalOps.postingsOf(docs)
           .write.mode("overwrite").parquet(s"$base/postings")
@@ -43,11 +44,11 @@ object PostingStore {
 
   /** The materialized (term, doc_id, tf) posting lists. */
   def postings(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(s"${ensure(s, d)}/postings")
+    Tables.read(s, s"${ensure(s, d)}/postings")
 
   /** The materialized (doc_id, dl) document lengths. */
   def doclen(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(s"${ensure(s, d)}/doclen")
+    Tables.read(s, s"${ensure(s, d)}/doclen")
 
   /** The STREAMING face of the store: merge one ingest batch of
     * (doc_id, text) rows into the index rooted at `base` — the
@@ -77,12 +78,12 @@ object PostingStore {
       size(split(col("text"), " ")).cast("long").as("dl"))
     val mergedP =
       if (StoreDirs.recoverThenExists(pDir))
-        RetrievalOps.mergePostings(s.read.parquet(pDir), freshP)
+        RetrievalOps.mergePostings(Tables.read(s, pDir), freshP)
           .localCheckpoint()
       else freshP.localCheckpoint()
     val mergedD =
       if (StoreDirs.recoverThenExists(dDir))
-        s.read.parquet(dDir).unionByName(freshD)
+        Tables.read(s, dDir).unionByName(freshD)
           .groupBy(col("doc_id")).agg(max(col("dl")).as("dl"))
           .localCheckpoint()
       else freshD.localCheckpoint()

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -31,7 +32,7 @@ object TextIndexStore {
   private val built = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   private def ensure(s: SparkSession, d: String): String =
-    built.computeIfAbsent(StoreDirs.freshKey(d), k =>
+    built.computeIfAbsent(StoreDirs.freshKey(s, d), k =>
       StoreDirs.ensureBuilt("textidx", k) { base =>
         val index = TextOps.deltaIndex(s, d)
         index.select(col("doc_id"), col("source"), md5(col("text")).as("fp"))
@@ -42,14 +43,14 @@ object TextIndexStore {
 
   /** The materialized (doc_id, source, fp) exact-dedup index. */
   def fp(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(s"${ensure(s, d)}/fp")
+    Tables.read(s, s"${ensure(s, d)}/fp")
 
   /** The materialized MinHash signature store (doc_id, mh0..mh7). */
   def sig(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(s"${ensure(s, d)}/sig")
+    Tables.read(s, s"${ensure(s, d)}/sig")
 
   private def ensureCorpus(s: SparkSession, d: String): String =
-    built.computeIfAbsent("corpus|" + StoreDirs.freshKey(d), k =>
+    built.computeIfAbsent("corpus|" + StoreDirs.freshKey(s, d), k =>
       StoreDirs.ensureBuilt("textcorpus", k.stripPrefix("corpus|")) { base =>
         val docs = TextOps.docsParallel(s, d)
         TextOps.minhashSignaturesOf(s, docs)
@@ -67,9 +68,9 @@ object TextIndexStore {
     * verification surface: candidate-id semi-joins read stored shingle
     * arrays instead of re-tokenizing the text. */
   def corpusSig(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(s"${ensureCorpus(s, d)}/sig")
+    Tables.read(s, s"${ensureCorpus(s, d)}/sig")
 
   /** The materialized (doc_id, shset) verification surface. */
   def corpusShset(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(s"${ensureCorpus(s, d)}/shset")
+    Tables.read(s, s"${ensureCorpus(s, d)}/shset")
 }

@@ -647,7 +647,7 @@ object TextOps extends QueryModule {
     val b = cmsCellsOf(batch)
     val merged =
       (if (StoreDirs.recoverThenExists(dir))
-        s.read.parquet(dir).unionByName(b)
+        Tables.read(s, dir).unionByName(b)
           .groupBy(col("j"), col("b")).agg(sum(col("n")).as("n"))
       else b).localCheckpoint()
     StoreDirs.durableOverwrite(merged, dir)

@@ -820,29 +820,29 @@ object VectorOps extends QueryModule {
   private val pqBuilt =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def pqStore(s: SparkSession, d: String): String =
-    pqBuilt.computeIfAbsent(StoreDirs.freshKey(d), k =>
+    pqBuilt.computeIfAbsent(StoreDirs.freshKey(s, d), k =>
       StoreDirs.ensureBuilt("pqindex", k) { base =>
         val e = embParallel(s, d)
         pqCodebook(e).write.mode("overwrite").parquet(s"$base/codebook")
         pqAssign(subspaced(e, "vec_id", "embedding"),
-            s.read.parquet(s"$base/codebook"))
+            Tables.read(s, s"$base/codebook"))
           .write.mode("overwrite").parquet(s"$base/codes")
         // the IVFADC coarse layer: trained centroids + each vector's
         // inverted-list assignment, both ingest-time artifacts (a vector's
         // list never changes after indexing)
         coarseCodebook(e).write.mode("overwrite").parquet(s"$base/coarse")
-        pqAssign(coarseSub(e), s.read.parquet(s"$base/coarse"))
+        pqAssign(coarseSub(e), Tables.read(s, s"$base/coarse"))
           .select(col("vec_id"), col("code").as("list"))
           .write.mode("overwrite").parquet(s"$base/lists")
       })
   private def storedCodebook(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(s"${pqStore(s, d)}/codebook")
+    Tables.read(s, s"${pqStore(s, d)}/codebook")
   private def storedCodes(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(s"${pqStore(s, d)}/codes")
+    Tables.read(s, s"${pqStore(s, d)}/codes")
   private def storedLists(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(s"${pqStore(s, d)}/lists")
+    Tables.read(s, s"${pqStore(s, d)}/lists")
   private def storedCoarse(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(s"${pqStore(s, d)}/coarse")
+    Tables.read(s, s"${pqStore(s, d)}/coarse")
 
   /** Cluster-balanced sampling (the D4/cluster-aware data-selection
     * class): flatten the SEMANTIC cluster histogram the way
@@ -983,8 +983,8 @@ object VectorOps extends QueryModule {
   /** Encode + assign one ingest batch against the stored codebooks and
     * append to the index (see [[pqIndexInit]]). */
   def pqIndexIngest(s: SparkSession, base: String, batch: DataFrame): Unit = {
-    val cw = s.read.parquet(s"$base/codebook")
-    val coarse = s.read.parquet(s"$base/coarse")
+    val cw = Tables.read(s, s"$base/codebook")
+    val coarse = Tables.read(s, s"$base/coarse")
     pqAssign(subspaced(batch, "vec_id", "embedding"), cw)
       .write.mode("append").parquet(s"$base/codes")
     pqAssign(coarseSub(batch), coarse)
@@ -1542,7 +1542,7 @@ object VectorOps extends QueryModule {
     * recomputing the exact arm from scratch, so a corrupted store breaks
     * the hash, never passes silently. */
   private def exactTop5(s: SparkSession, d: String): DataFrame = {
-    val dir = truthBuilt.computeIfAbsent(StoreDirs.freshKey(d), k =>
+    val dir = truthBuilt.computeIfAbsent(StoreDirs.freshKey(s, d), k =>
       StoreDirs.ensureBuilt("anntruth", k) { base =>
         val e = embParallel(s, d)
         val probes = e.filter(col("vec_id") < 8)
@@ -1559,7 +1559,7 @@ object VectorOps extends QueryModule {
           .select(col("probe_id"), col("neighbor_id"))
           .write.mode("overwrite").parquet(s"$base/top5")
       })
-    s.read.parquet(s"$dir/top5")
+    Tables.read(s, s"$dir/top5")
   }
 
   private def recallVsExactL2(s: SparkSession, d: String,

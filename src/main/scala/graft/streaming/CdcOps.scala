@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -86,7 +87,7 @@ object CdcOps {
         val touched = rows.select(col("_pk_bucket")).distinct()
           .collect().map(_.getInt(0)).toSeq
         val existing =
-          try Some(spark.read.parquet(dir)
+          try Some(Tables.read(spark, dir)
             .filter(col("_pk_bucket").isin(touched: _*)))
           catch {
             // ONLY first-write path-not-found means "no store yet"; any
