@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.Tables
+import graft.ops.Relational
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -116,6 +117,8 @@ object CdcOps {
           .option("partitionOverwriteMode", "dynamic")
           .partitionBy("_pk_bucket").parquet(dir)
         rows.unpersist()
+        // a foreachBatch body: an unreleased pin would outlive every batch
+        Relational.unpersistCheckpoint(merged)
         r.sinkTable -> n
       }.toMap
     } finally cached.unpersist()

@@ -14,10 +14,12 @@ import org.apache.spark.sql.functions._
   * Spark-first shape: `from_json` returns NULL on bad input (that IS the
   * dirty branch — no try/catch per record), and the five outputs are five
   * filtered projections of ONE parsed DataFrame. In streaming the caller
-  * wraps this in `foreachBatch` and writes each branch to its sink; the
-  * parse runs once per micro-batch (cache the parsed frame), not five
-  * times. All transforms are pure `DataFrame => DataFrame` so the same
-  * code serves the batch oracle and the stream.
+  * wraps this in `foreachBatch` and writes each branch to its sink. Nothing
+  * here caches: each branch written is its own job and re-runs the parse,
+  * so the caller persists the micro-batch before writing the branches (the
+  * source is then read once) and unpersists it after. All transforms are
+  * pure `DataFrame => DataFrame` so the same code serves the batch oracle
+  * and the stream.
   */
 object LogSplitter {
 
@@ -63,7 +65,10 @@ object LogSplitter {
         col("parsed.page").as("page"), col("parsed.ts").as("ts"),
         explode(col("parsed.actions")).as("action"))
 
-  /** All five branches off one cached parse — the foreachBatch body. */
+  /** The dirty side output and the five branches, as lazy frames over one
+    * parse plan — the foreachBatch body. Each branch written re-runs
+    * `from_json` over `raw`; persist `raw` first so none re-reads the
+    * source, and unpersist it after the writes. */
   def splitAll(raw: DataFrame, rawCol: String = "line"): Map[String, DataFrame] = {
     val p = parse(raw, rawCol)
     Map(

@@ -33,9 +33,10 @@ class FileStreamSpec extends AnyFunSuite {
       .writeStream
       .option("checkpointLocation", ckpt)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        LogSplitter.splitAll(batch).foreach { case (name, df) =>
+        batch.persist()
+        try LogSplitter.splitAll(batch).foreach { case (name, df) =>
           df.write.mode("append").json(s"$out/$name")
-        }
+        } finally batch.unpersist()
       }
       .start()
 
@@ -96,5 +97,72 @@ class FileStreamSpec extends AnyFunSuite {
       .as[StatefulOps.IngestDoc].collect().map(d => d.fp -> d.docId).toMap
     assert(got === Map("A" -> 1, "B" -> 3, "C" -> 5),
       s"recovered state failed to suppress the cross-restart duplicate: $got")
+  }
+
+  test("transformWithState restart ≡ batch: keepLatestTws resumes its held " +
+      "rows and event-time timers from the checkpoint") {
+    import graft.streaming.StatefulOps.{VersionedRow, keepLatestTws}
+    import org.apache.spark.sql.expressions.Window
+    import spark.implicits._
+    val src = Files.createTempDirectory("klsrc").toString
+    val out = Files.createTempDirectory("klout").toString
+    val ckpt = Files.createTempDirectory("klckpt").toString
+    val schema = "key STRING, opTs LONG, payload STRING"
+    val t0 = System.currentTimeMillis() - 100000L
+    // file i holds event times in [1000 i, 1000 i + 900] past 10^6, so no row
+    // is ever behind the watermark: the stream drops nothing the batch keeps.
+    // `hot` and `p*` are updated more often than they flush; `c<i>` once
+    def file(i: Int, rows: Seq[VersionedRow]): Unit = {
+      writeLines(src, f"f$i%02d.json", rows.map(r =>
+        s"""{"key":"${r.key}","opTs":${r.opTs},"payload":"${r.payload}"}"""))
+      // the source takes files in modification-time order, one per trigger
+      Files.setLastModifiedTime(Paths.get(src, f"f$i%02d.json"),
+        java.nio.file.attribute.FileTime.fromMillis(t0 + 1000L * i))
+    }
+    def versions(i: Int): Seq[VersionedRow] = {
+      val t = 1000000L + 1000L * i
+      Seq(VersionedRow(s"c$i", t + 300, s"c$i-new"),
+        VersionedRow("hot", t + 500, s"hot$i"),
+        VersionedRow(s"c$i", t + 100, s"c$i-old"),
+        VersionedRow(s"p${i % 3}", t + 700, s"p$i"))
+    }
+    def start() = keepLatestTws(spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1).json(src)
+        .withColumn("eventTime", timestamp_millis(col("opTs")))
+        .withWatermark("eventTime", "0 seconds").as[VersionedRow],
+        flushMs = 5000)
+      .toDF().writeStream.format("parquet")
+      .option("checkpointLocation", ckpt)
+      .start(out)
+
+    (0 until 14).foreach(i => file(i, versions(i)))
+    val q1 = start()
+    q1.processAllAvailable()
+    q1.stop()
+    assert(q1.recentProgress.count(_.numInputRows > 0) >= 12)
+    val beforeStop = spark.read.parquet(out).as[VersionedRow].collect()
+    assert(beforeStop.exists(_.key == "c0") &&
+      !beforeStop.exists(_.key == "c13"), s"flushed before the stop: $beforeStop")
+
+    // arrives while the query is down: one more file, then a flush event
+    // whose watermark passes every held row's timer
+    file(14, versions(14))
+    file(15, Seq(VersionedRow("flush", 10000000L, "f")))
+    val q2 = start()
+    q2.processAllAvailable()
+    q2.stop()
+
+    val got = spark.read.parquet(out).as[VersionedRow].collect()
+      .sortBy(_.key).toSeq
+    // the flush event's own timer lies past every watermark: it stays held
+    val expected = spark.read.schema(schema).json(src)
+      .filter(col("key") =!= "flush")
+      .withColumn("rn", row_number().over(
+        Window.partitionBy(col("key")).orderBy(col("opTs").desc)))
+      .filter(col("rn") === 1).drop("rn")
+      .as[VersionedRow].collect().sortBy(_.key).toSeq
+    assert(got === expected)
+    assert(got.map(_.key).contains("c13") &&
+      got.find(_.key == "hot").map(_.payload) === Some("hot14"), s"$got")
   }
 }

@@ -18,10 +18,10 @@ class ForeachBatchSpec extends AnyFunSuite {
     val in = MemoryStream[String]
     val q = in.toDF().toDF("line").writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val branches = LogSplitter.splitAll(batch)
-        branches.foreach { case (name, df) =>
+        batch.persist()
+        try LogSplitter.splitAll(batch).foreach { case (name, df) =>
           df.write.mode("append").json(s"$outRoot/$name")
-        }
+        } finally batch.unpersist()
       }
       .start()
     in.addData(
@@ -116,6 +116,32 @@ class ForeachBatchSpec extends AnyFunSuite {
     // and the broken store was NOT overwritten by the failed batch
     assert(java.nio.file.Files.readAllBytes(
       dir.resolve("part-00000.parquet")).length > 0)
+  }
+
+  test("dim store: routeDims releases every block set it pins — a " +
+      "foreachBatch body must not leave one per micro-batch") {
+    import spark.implicits._
+    val sinkRoot = java.nio.file.Files.createTempDirectory("dimsink5").toString
+    val routes = Seq(
+      CdcOps.TableRoute("base_trademark", "dim_tm5", Seq("id", "name"), "id"),
+      CdcOps.TableRoute("base_category1", "dim_c5", Seq("id", "name"), "id"))
+    val mk = (table: String, id: Int, ts: Long) =>
+      s"""{"database":"g","table":"$table","type":"insert","ts":$ts,"data":{"id":"$id","name":"n$id"},"old":{}}"""
+    val sc = spark.sparkContext
+    val before = sc.getRDDStorageInfo.map(_.id).toSet
+    (1 to 3).foreach { b =>
+      CdcOps.routeDims(spark, CdcOps.decode(
+        Seq(mk("base_trademark", b, 100L * b), mk("base_category1", b, 100L * b))
+          .toDF("line")), routes, sinkRoot, nBuckets = 2)
+    }
+    // unpersist is asynchronous: wait for the block manager to drop them
+    def added = sc.getRDDStorageInfo.filterNot(i => before(i.id))
+    val deadline = System.nanoTime() + 10000000000L
+    while (added.nonEmpty && System.nanoTime() < deadline) Thread.sleep(100)
+    assert(added.isEmpty, "block sets left pinned by routeDims: " +
+      added.map(i => s"${i.id}:${i.name}").mkString(", "))
+    assert(spark.read.parquet(s"$sinkRoot/dim_tm5").count() === 3)
+    assert(spark.read.parquet(s"$sinkRoot/dim_c5").count() === 3)
   }
 
   test("dim store: same-timestamp versions of a pk pick a deterministic " +
