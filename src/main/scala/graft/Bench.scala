@@ -557,6 +557,7 @@ object Bench {
     println(s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"n_failed":$nFailed,"store_build_sec":$storeTotal,"disp_max":$dispMax,"disp_gt2":$dispGt2,"iso_med_ratio":$isoMed$truncMark}""")
     System.out.flush()
     finalPrinted = true
+    System.err.println(GraftSession.codegenSummary())
     spark.stop()
   }
 }

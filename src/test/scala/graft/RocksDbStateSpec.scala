@@ -12,8 +12,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * two state-heaviest operators — ingest dedup markers and keep-latest
   * upsert rows — through full round-trips on the provider, and (2) asserts
   * the query progress reports rocksdb* custom metrics, which only the
-  * RocksDB provider emits. This is the 100 TB state story executed: keyed
-  * state bounded by executor disk, not JVM heap. */
+  * RocksDB provider emits, and (3) pins the checksum that stops a restart
+  * from loading a corrupt uploaded snapshot. This is the 100 TB state
+  * story executed: keyed state bounded by executor disk, not JVM heap. */
 class RocksDbStateSpec extends AnyFunSuite {
   lazy val spark = TestSession.spark
   import spark.implicits._
@@ -66,5 +67,73 @@ class RocksDbStateSpec extends AnyFunSuite {
     assert(metrics.keySet().toArray.map(_.toString)
       .exists(_.startsWith("rocksdb")),
       s"expected rocksdb* state metrics, got ${metrics.keySet()}")
+  }
+
+  test("a flipped byte in an uploaded RocksDB snapshot fails the restart " +
+      "instead of loading corrupt state") {
+    import java.nio.file.{Files, Paths}
+    import org.apache.spark.sql.streaming.StreamingQueryException
+    // Spark writes its own checksum sidecar (`<n>.zip.crc`) for every
+    // snapshot, but in Spark 4.1 the RocksDB load path reads the snapshot
+    // zip and its SSTs through the Hadoop `FileSystem`, not through the
+    // checksum-verifying checkpoint file manager: the guard that fires is
+    // Hadoop's `.crc` (`ChecksumFileSystem`, which the fork-free `file:`
+    // FileSystem keeps). `FileContext` reads verify nothing (LocalFsSpec).
+    assert(spark.conf.get("spark.sql.streaming.checkpoint.fileChecksum.enabled")
+      === "true")
+    val src = Files.createTempDirectory("ckssrc").toString
+    val out = Files.createTempDirectory("cksout").toString
+    val ckpt = Files.createTempDirectory("cksckpt").toString
+    val schema = "key STRING, opTs LONG, payload STRING"
+    // file i: keys k0..k19 at event time t + k, or one far-ahead `flush`
+    // row whose watermark passes every held key's timer
+    def file(i: Int, t: Long, keys: Int = 20): Unit =
+      Files.write(Paths.get(src, f"f$i%02d.json"), (0 until keys).map(k =>
+        s"""{"key":"${if (keys == 1) "flush" else s"k$k"}","opTs":${t + k},""" +
+          s""""payload":"p$i-$k"}""").mkString("\n").getBytes("UTF-8"))
+    def start() = keepLatestTws(spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1).json(src)
+        .withColumn("eventTime", timestamp_millis(col("opTs")))
+        .withWatermark("eventTime", "0 seconds").as[VersionedRow])
+      .toDF().writeStream.format("parquet")
+      .option("checkpointLocation", ckpt).start(out)
+    def sinkRows() = spark.read.parquet(out).as[VersionedRow].collect().toSet
+
+    file(0, 1000000L)
+    file(1, 1001000L)
+    file(2, 10000000L, keys = 1)
+    val q1 = start()
+    q1.processAllAvailable()
+    q1.stop()
+    val before = sinkRows()
+    assert(before.size === 20, s"flushed before the stop: $before")
+    // the latest snapshot of partition 0: every partition loads its latest
+    // version on the first batch after the restart
+    val part = Paths.get(ckpt, "state", "0", "0").toFile
+    val victim = part.listFiles().filter(_.getName.matches("\\d+\\.zip"))
+      .maxBy(_.getName.stripSuffix(".zip").toLong)
+    val raf = new java.io.RandomAccessFile(victim, "rw")
+    try {
+      val pos = raf.length / 2
+      raf.seek(pos)
+      val b = raf.read()
+      raf.seek(pos)
+      raf.write(b ^ 0xff)
+    } finally raf.close()
+
+    // on healthy state these would flush 20 more rows
+    file(3, 20000000L)
+    file(4, 30000000L, keys = 1)
+    val q2 = start()
+    val err = try intercept[StreamingQueryException](q2.processAllAvailable())
+      finally q2.stop()
+    val causes = Iterator.iterate[Throwable](err)(_.getCause)
+      .takeWhile(_ != null).toSeq
+    assert(causes.exists(c =>
+      c.isInstanceOf[org.apache.hadoop.fs.ChecksumException] &&
+        c.getMessage.contains(victim.getName)),
+      s"restart did not fail on the corrupt snapshot: " +
+        causes.map(c => s"${c.getClass.getName}: ${c.getMessage}"))
+    assert(sinkRows() === before, "a batch ran on the corrupt state")
   }
 }
