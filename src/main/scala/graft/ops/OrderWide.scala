@@ -153,7 +153,7 @@ object OrderWide extends QueryModule {
       .withColumn("order_status",
         when(col("op_ts") === 2L, lit("U")).otherwise(col("order_status")))
 
-  /** Keep-latest per detail_id (batch form of StatefulOps.keepLatest —
+  /** Keep-latest per detail_id (batch form of StatefulOps.keepLatestTws —
     * same hash-partition-by-key shape a state store uses).
     *
     * The testdata's (l_orderkey, l_linenumber) key is deliberately dirty

@@ -700,7 +700,7 @@ object Relational extends QueryModule {
     * the stage gating for free — a missing stage makes its comparison
     * NULL → the completion flag 0 in both engines. Complements
     * [[funnelUnion]] (stage totals, unordered) and the streaming
-    * bounce CEP (StatefulOps.bounceDetector): this is the batch
+    * bounce CEP (StatefulOps.bounceDetectorTws): this is the batch
     * sequence-pattern form.
     *
     * Scale: ONE scan, one user-keyed partial-aggregable pivot (the only

@@ -707,7 +707,7 @@ object TextOps extends QueryModule {
     * metric with both engines agreeing). Planted rows take their
     * fingerprint straight from the store — byte-identical text, so the
     * stored md5 IS the replayed row's md5. Streaming complement:
-    * `StatefulOps.ingestDedup` (one marker per distinct fingerprint,
+    * `StatefulOps.ingestDedupTws` (one marker per distinct fingerprint,
     * RocksDB-backed). */
   def deltaDedup(s: SparkSession, d: String): DataFrame = {
     val idxFp = TextIndexStore.fp(s, d)

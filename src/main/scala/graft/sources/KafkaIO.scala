@@ -11,9 +11,9 @@ import org.apache.spark.sql.Row
   * artifact at all — coursier is offline) exists in the test container, so
   * the connector boundary itself is compile-checked configuration; the
   * full pipeline AROUND the byte transport — producer encode → topic log →
-  * readStream decode → null tolerance → keepLatest upsert reconstruction —
-  * is exercised end-to-end over a streaming file channel in
-  * KafkaContractSpec.
+  * readStream decode → null tolerance → keepLatestTws upsert
+  * reconstruction — is exercised end-to-end over a streaming file channel
+  * in KafkaContractSpec.
   *
   * Reference mapping:
   *   S1 readStrings   ← MyKafkaUtil.getFlinkKafkaConsumer (null-tolerant:
@@ -23,7 +23,7 @@ import org.apache.spark.sql.Row
   *   S5 readCdcTable  ← MyKafkaUtil.getTopicDbDDL (Maxwell envelope)
   *   S4 writeUpsert   ← MyKafkaUtil.getUpsertKafkaDDL — Spark has no
   *                      changelog topic; the convention (SURVEY §7.3) is a
-  *                      pk-keyed append where readers run keepLatest
+  *                      pk-keyed append where readers run keepLatestTws
   *                      (graft.streaming.StatefulOps) to reconstruct the
   *                      upsert view. Retractions are not emitted; the
   *                      left-join rows appear once, post-watermark.

@@ -1,22 +1,29 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
 
 /** The custom stateful operators SURVEY §4 concludes Spark needs code
   * for (everything else maps to built-ins): per-day dedup counters (A5),
   * new/old visitor repair (O9), keep-latest changelog dedup (O18), the
   * CEP-equivalent bounce detector (W6), plus the training-pipeline
-  * extensions — ingest-time exact dedup and as-of attribution in two
-  * variants (O(1)-state in-order, and watermark-buffered out-of-order).
-  * All are `flatMapGroupsWithState` over typed Datasets — state lives in
-  * the state store, scales with #executors, and is checkpointable (which
-  * the reference's jobs designed but disabled, BaseLogApp.java:33-44).
+  * extensions — ingest-time exact dedup, gap sessionization, as-of
+  * attribution in two variants (O(1)-state in-order, and
+  * watermark-buffered out-of-order), streaming heavy hitters and
+  * first/last-touch attribution. Each is ONE `transformWithState`
+  * operator over a typed Dataset: a `StatefulProcessor` holding named
+  * state variables (ValueState / ListState) in the RocksDB state store,
+  * so state scales with #executors and is checkpointable (which the
+  * reference's jobs designed but disabled, BaseLogApp.java:33-44). The
+  * two dedup operators may declare a TTL on their state; the event-time
+  * operators flush through event-time timers and rely on the inclusive
+  * late-row boundary `eventTime <= watermark` that WatermarkBoundarySpec
+  * pins.
   *
   * Scale: state is per-key and O(bytes) — a date string (A5/O9), one held
-  * row (O18/W6). Keys hash-partition across the cluster; no operator here
-  * holds unbounded state, and every one declares a timeout so the store
-  * self-cleans (the Flink originals used 1-day TTL / timers the same way).
+  * row (O18/W6), O(k) entries for the sketch. Keys hash-partition across
+  * the cluster; the event-time operators clear a key's state when its
+  * timer fires, the way the Flink originals used 1-day TTL / timers.
   */
 object StatefulOps {
 
@@ -38,28 +45,14 @@ object StatefulOps {
   private implicit val stringEnc: Encoder[String] = Encoders.STRING
 
   /** A5 — daily-unique dedup: emit only the first event per (key, day).
-    * State = last-emitted date per key (the Flink ValueState with 1-day TTL,
-    * DwdTrafficUniqueVisitorDetail.java:69-98). */
-  def dailyDedup(ds: Dataset[KeyedEvent]): Dataset[KeyedEvent] =
-    ds.groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (_: String, events: Iterator[KeyedEvent], state: GroupState[String]) => {
-          var lastDate = state.getOption.getOrElse("")
-          val out = Vector.newBuilder[KeyedEvent]
-          events.toSeq.sortBy(_.ts).foreach { e =>
-            // dates are monotone in ts, so "changed" ⇔ "first of its day"
-            if (e.date != lastDate) { lastDate = e.date; out += e }
-          }
-          state.update(lastDate)
-          out.result().iterator
-        })
-
-  /** [[dailyDedup]] on Spark 4's `transformWithState` — the A5 twin the
-    * W8 migration was missing (the reference job this operator maps is
-    * its most-reused stateful shape: `DwdTrafficUniqueVisitorDetail` plus
-    * every cart/order/pay UU window). The last-emitted date lives in a
-    * named ValueState whose TTL is DECLARED (`TTLConfig`): the Flink
-    * original hand-configured a 1-day StateTtlConfig
+    * State = last-emitted date per key (the Flink ValueState with 1-day
+    * TTL, DwdTrafficUniqueVisitorDetail.java:69-98 — the reference's
+    * most-reused stateful shape: that job plus every cart/order/pay UU
+    * window). Within a micro-batch events fold in `ts` order; across
+    * batches the fold needs per-key event-time order, as a replayed log
+    * delivers. The last-emitted date lives in a named ValueState whose
+    * TTL is DECLARED (`TTLConfig`): the Flink original hand-configured a
+    * 1-day StateTtlConfig
     * (DwdTrafficUniqueVisitorDetail.java:76-79) precisely because the
     * marker is worthless once its day has passed — here that contract is
     * one config line and RocksDB compaction physically drops expired
@@ -70,9 +63,9 @@ object StatefulOps {
     * "did this key already emit today?", and a marker from an earlier
     * date always takes the `e.date != lastDate` branch whether the store
     * expired it or still holds it — expiry can never flip an emit
-    * decision, only shrink the store. StreamingSpec pins the twin
-    * bit-equal to [[dailyDedup]] on the same slicing, including the
-    * midnight-rollover property. */
+    * decision, only shrink the store. StreamingSpec pins the emitted
+    * rows on a fixed slicing and the one-row-per-(key, date) property
+    * under random batching, both across midnight rollover. */
   class DailyDedupProcessor(ttl: TTLConfig)
       extends StatefulProcessor[String, KeyedEvent, KeyedEvent] {
     @transient private var lastDate: ValueState[String] = _
@@ -92,27 +85,30 @@ object StatefulOps {
     }
   }
 
-  /** The `transformWithState` face of [[dailyDedup]]. Production sets
-    * `ttl = TTLConfig(java.time.Duration.ofDays(1))` — the declared
-    * dedup horizon; NONE keeps exact parity with the fMGWS twin for the
-    * bit-equality spec. A declared TTL forces
-    * `TimeMode.ProcessingTime()` (the engine rejects TTL under NoTime) —
-    * faithful to the Flink original, whose StateTtlConfig is
-    * processing-time OnCreateAndWrite retention too
+  /** Runs [[DailyDedupProcessor]]. `ttl` defaults to NONE (markers kept
+    * forever), and no caller in this repo sets one; the reference's
+    * horizon would be `TTLConfig(java.time.Duration.ofDays(1))`.
+    * StreamingSpec runs the operator with a declared TTL. A declared TTL
+    * forces `TimeMode.ProcessingTime()` ([[ttlTimeMode]]) — faithful to
+    * the Flink original, whose StateTtlConfig is processing-time
+    * OnCreateAndWrite retention too
     * (DwdTrafficUniqueVisitorDetail.java:76-79). */
   def dailyDedupTws(ds: Dataset[KeyedEvent],
       ttl: TTLConfig = TTLConfig.NONE): Dataset[KeyedEvent] =
     ds.groupByKey(_.key)
-      .transformWithState(new DailyDedupProcessor(ttl),
-        if (ttl == TTLConfig.NONE) TimeMode.None()
-        else TimeMode.ProcessingTime(),
+      .transformWithState(new DailyDedupProcessor(ttl), ttlTimeMode(ttl),
         OutputMode.Append())
+
+  /** The time mode for a processor whose state has TTL `ttl`: the engine
+    * rejects TTL state under `TimeMode.None()` (measured), so a
+    * declared TTL plans with processing time. */
+  private def ttlTimeMode(ttl: TTLConfig): TimeMode =
+    if (ttl == TTLConfig.NONE) TimeMode.None() else TimeMode.ProcessingTime()
 
   /** An ingested document: content fingerprint + identity. */
   case class IngestDoc(fp: String, docId: Long, ts: Long)
 
   private implicit val ingestDocEnc: Encoder[IngestDoc] = Encoders.product[IngestDoc]
-  private implicit val boolEnc: Encoder[Boolean] = Encoders.scalaBoolean
 
   /** Streaming exact-dedup at INGEST — the streaming complement of the
     * batch dedup stack (TextOps.dedupKeepFirst): emit only the first
@@ -127,33 +123,16 @@ object StatefulOps {
     * [[graft.GraftSession]], proven live by RocksDbStateSpec) — hash-
     * partitioned by fingerprint across executors and bounded by executor
     * disk, not heap; a TTL (timeout) bounds it further when the dedup
-    * horizon is a window rather than forever. */
-  def ingestDedup(ds: Dataset[IngestDoc]): Dataset[IngestDoc] =
-    ds.groupByKey(_.fp)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (_: String, docs: Iterator[IngestDoc], state: GroupState[Boolean]) => {
-          if (state.exists) Iterator.empty
-          else {
-            state.update(true)
-            Iterator.single(docs.minBy(d => (d.ts, d.docId)))
-          }
-        })
-
-  /** [[ingestDedup]] re-expressed on Spark 4's `transformWithState`
-    * operator — the successor state API the engine is converging on
-    * (SPARK-46815): named state variables with per-state TTL, timers
-    * decoupled from output, and schema-evolvable state. Semantics are
-    * identical to the `flatMapGroupsWithState` form (one marker bit per
-    * fingerprint, first arrival by (ts, docId) wins); StreamingSpec pins
-    * the two bit-equal on the same input stream.
+    * horizon is a window rather than forever.
     *
-    * Scale differences that matter at 100 TB of ingest: TTL here is
-    * DECLARED on the state (`TTLConfig`) and enforced by the store, not
-    * hand-rolled from timeout callbacks — the dedup horizon ("re-ingests
-    * within 30 days are dups, older re-crawls are fresh") becomes one
-    * line, and RocksDB compaction physically drops expired markers
-    * instead of the job carrying them forever. NONE here keeps parity
-    * with the exact-forever semantics of the original. */
+    * Runs on `transformWithState` (SPARK-46815): the marker is a named
+    * ValueState whose TTL is DECLARED (`TTLConfig`) and enforced by the
+    * store, not hand-rolled from timeout callbacks — the dedup horizon
+    * ("re-ingests within 30 days are dups, older re-crawls are fresh")
+    * becomes one argument, and RocksDB compaction physically drops
+    * expired markers instead of the job carrying them forever. The
+    * default NONE keeps the exact-forever semantics. StreamingSpec pins
+    * the emitted rows across batches, with and without a TTL. */
   class IngestDedupProcessor(ttl: TTLConfig)
       extends StatefulProcessor[String, IngestDoc, IngestDoc] {
     @transient private var seen: ValueState[Boolean] = _
@@ -171,9 +150,7 @@ object StatefulOps {
   def ingestDedupTws(ds: Dataset[IngestDoc],
       ttl: TTLConfig = TTLConfig.NONE): Dataset[IngestDoc] =
     ds.groupByKey(_.fp)
-      .transformWithState(new IngestDedupProcessor(ttl),
-        if (ttl == TTLConfig.NONE) TimeMode.None()
-        else TimeMode.ProcessingTime(), // TTL state rejects NoTime
+      .transformWithState(new IngestDedupProcessor(ttl), ttlTimeMode(ttl),
         OutputMode.Append())
 
   /** A closed gap-session: [startS, endS] in event-time seconds. */
@@ -265,48 +242,21 @@ object StatefulOps {
   /** Streaming complement of the batch as-of join
     * (Relational.asofLastTouch): each purchase matches the latest view
     * at-or-before it by the same user. State = ONE long per user (latest
-    * view time) — O(1), the streaming-asof minimum. Within a micro-batch
-    * events process in (t, side) order (views before buys at the same
-    * second — the inclusive `>=` bound); across batches the same
-    * in-event-time-order assumption as [[dailyDedup]] applies (late
-    * cross-batch views would need watermark-buffered reordering, the
-    * documented trade for O(1) state). Emitting the gap, not the matched
-    * row id, keeps same-second view ties deterministic — identical to the
-    * batch operator, so StreamingSpec asserts batch ≡ streaming. */
-  def asofAttribution(ds: Dataset[TaggedEvent]): Dataset[AsofMatch] =
-    ds.groupByKey(_.userId)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (_: Long, events: Iterator[TaggedEvent], state: GroupState[Long]) => {
-          var lastView = state.getOption.getOrElse(Long.MinValue)
-          val out = Vector.newBuilder[AsofMatch]
-          events.toSeq.sortBy(e => (e.t, e.side)).foreach { e =>
-            if (e.side == 0) lastView = math.max(lastView, e.t)
-            else if (lastView != Long.MinValue)
-              out += AsofMatch(e.eventId, e.userId, e.t, e.t - lastView)
-          }
-          if (lastView != Long.MinValue) state.update(lastView)
-          out.result().iterator
-        })
-
-  /** [[asofAttribution]] on `transformWithState` — the as-of carry (ONE
-    * long per user: the latest view time) as a named ValueState, the
-    * minimal-state end of the streaming-asof spectrum on the successor
-    * API. Fold, total order ((t, side) — views before buys at the same
-    * second, the inclusive `>=` bound) and the cross-batch in-order
-    * assumption are identical to the fMGWS face; the named state gains
-    * an optional DECLARED TTL ("attribute only within N days of the last
-    * view" as one store-enforced config — the hand-rolled alternative is
-    * a timeout callback re-armed on every view). AsofSpec pins the twin
-    * bit-equal to [[asofAttribution]] on the same slicing. The
-    * out-of-order variant's twin is [[AsofBufferedProcessor]] — built
-    * only AFTER the r12 probe spec measured the tws late-row boundary
-    * (WatermarkBoundarySpec), per the CLAUDE.md boundary discipline. */
-  class AsofAttributionProcessor(ttl: TTLConfig)
+    * view time, a named ValueState) — O(1), the minimal-state end of the
+    * streaming-asof spectrum. Within a micro-batch events process in
+    * (t, side) order (views before buys at the same second — the
+    * inclusive `>=` bound); across batches the same in-event-time-order
+    * assumption as [[dailyDedupTws]] applies (late cross-batch views need
+    * the watermark-buffered [[AsofBufferedProcessor]], the documented
+    * trade for O(1) state). Emitting the gap, not the matched row id,
+    * keeps same-second view ties deterministic — identical to the batch
+    * operator, so AsofSpec asserts batch ≡ streaming on sf0.001. */
+  class AsofAttributionProcessor
       extends StatefulProcessor[Long, TaggedEvent, AsofMatch] {
     @transient private var lastView: ValueState[Long] = _
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
       lastView = getHandle.getValueState[Long]("lastView",
-        Encoders.scalaLong, ttl)
+        Encoders.scalaLong, TTLConfig.NONE)
     override def handleInputRows(uid: Long, rows: Iterator[TaggedEvent],
         tv: TimerValues): Iterator[AsofMatch] = {
       var last =
@@ -322,90 +272,35 @@ object StatefulOps {
     }
   }
 
-  /** The `transformWithState` face of [[asofAttribution]]. A declared
-    * TTL forces `TimeMode.ProcessingTime()` like [[dailyDedupTws]] (the
-    * engine rejects TTL state under NoTime — the CLAUDE.md trap); NONE
-    * keeps exact parity with the fMGWS twin for the bit-equality spec. */
-  def asofAttributionTws(ds: Dataset[TaggedEvent],
-      ttl: TTLConfig = TTLConfig.NONE): Dataset[AsofMatch] =
+  /** Runs [[AsofAttributionProcessor]]. */
+  def asofAttributionTws(ds: Dataset[TaggedEvent]): Dataset[AsofMatch] =
     ds.groupByKey(_.userId)
-      .transformWithState(new AsofAttributionProcessor(ttl),
-        if (ttl == TTLConfig.NONE) TimeMode.None()
-        else TimeMode.ProcessingTime(),
+      .transformWithState(new AsofAttributionProcessor, TimeMode.None(),
         OutputMode.Append())
 
-  /** Buffer for the out-of-order as-of variant: the latest FINALIZED view
-    * time plus the not-yet-finalized events above the watermark. */
-  case class AsofBuffer(lastView: Long, pending: Seq[TaggedEvent])
-
-  private implicit val asofBufEnc: Encoder[AsofBuffer] = Encoders.product[AsofBuffer]
-
-  /** Watermark-correct as-of attribution: unlike [[asofAttribution]] (O(1)
-    * state, but requires cross-batch event-time-ordered arrival), this
-    * variant accepts ARBITRARY cross-batch disorder within the watermark
-    * bound — the trade every streaming join makes explicit. Events buffer
-    * in state until the watermark passes their time; only then do they
-    * process, in full (t, side) event order, so a view arriving two
-    * batches after a later buy still wins attribution. State is bounded by
-    * the watermark horizon per key (not history): finalized prefix
-    * collapses to ONE long. The input must carry a watermark on
-    * `timestamp_seconds(t)`; an event-time timeout drains buffers for
-    * keys that stop receiving events. */
-  def asofBuffered(ds: Dataset[TaggedEvent]): Dataset[AsofMatch] =
-    ds.groupByKey(_.userId)
-      .flatMapGroupsWithState(OutputMode.Append,
-          GroupStateTimeout.EventTimeTimeout)(
-        (_: Long, events: Iterator[TaggedEvent],
-         state: GroupState[AsofBuffer]) => {
-          val st = state.getOption.getOrElse(AsofBuffer(Long.MinValue, Nil))
-          val wmSec = state.getCurrentWatermarkMs() / 1000
-          val all = st.pending ++ events
-          // measured boundary (WatermarkBoundarySpec): with
-          // EventTimeTimeout the engine's pre-filter drops rows with
-          // eventTime <= watermark INCLUSIVE, so nothing at t == wmSec can
-          // still arrive — finalizing the boundary second is provably
-          // safe. The partition must be inclusive to match: a strict
-          // t < wmSec would hold boundary-second events for a later
-          // watermark advance, and if the stream quiesces with the
-          // watermark exactly at a held event's second those attributions
-          // would never emit (a liveness hole the measured edge rules out)
-          val (ripe, hold) = all.partition(_.t <= wmSec)
-          var lastView = st.lastView
-          val out = Vector.newBuilder[AsofMatch]
-          ripe.sortBy(e => (e.t, e.side)).foreach { e =>
-            if (e.side == 0) lastView = math.max(lastView, e.t)
-            else if (lastView != Long.MinValue)
-              out += AsofMatch(e.eventId, e.userId, e.t, e.t - lastView)
-          }
-          if (hold.isEmpty && lastView == Long.MinValue) state.remove()
-          else {
-            state.update(AsofBuffer(lastView, hold))
-            if (hold.nonEmpty)
-              // wake when the earliest held event finalizes (must arm
-              // strictly above the current watermark)
-              state.setTimeoutTimestamp(math.max(hold.map(_.t).min * 1000,
-                state.getCurrentWatermarkMs() + 1))
-          }
-          out.result().iterator
-        })
-
-  /** [[asofBuffered]] on `transformWithState` — the sorted-buffer as-of
-    * on the successor API, UNBLOCKED by measurement: the r12 probe
-    * (WatermarkBoundarySpec) pinned tws EventTime mode to the SAME
-    * inclusive `eventTime <= watermark` late-row pre-filter as fMGWS
-    * EventTimeTimeout, so the ripe/hold partition `t <= wmSec` carries
-    * over verbatim (the CLAUDE.md boundary discipline: measure, then
-    * build). State maps naturally: the finalized prefix collapses to a
+  /** Watermark-correct as-of attribution: unlike
+    * [[AsofAttributionProcessor]] (O(1) state, but requires cross-batch
+    * event-time-ordered arrival), this variant accepts ARBITRARY
+    * cross-batch disorder within the watermark bound — the trade every
+    * streaming join makes explicit. Events buffer in state until the
+    * watermark passes their time; only then do they process, in full
+    * (t, side) event order, so a view arriving two batches after a later
+    * buy still wins attribution. State is bounded by the watermark
+    * horizon per key (not history): the finalized prefix collapses to a
     * named ValueState long; the not-yet-final events live in a
-    * [[org.apache.spark.sql.streaming.ListState]] — the API's buffer
-    * primitive, appended/cleared without serializing a Seq into one
-    * value row like the fMGWS form must. The wake-up for quiescent keys
-    * is ONE re-armed event-time timer at the earliest held event's
-    * finalization point (strictly above the current watermark);
-    * `handleExpiredTimer` re-drains idempotently from the then-current
-    * watermark, so a timer racing newer arrivals in the same batch
-    * needs no guard. AsofSpec pins the twin's final output equal to
-    * [[asofBuffered]]'s on the same disordered slicing. */
+    * [[org.apache.spark.sql.streaming.ListState]]. The input must carry a
+    * watermark on `timestamp_seconds(t)`.
+    *
+    * The ripe/hold partition `t <= wmSec` rests on the measured
+    * inclusive `eventTime <= watermark` late-row pre-filter of EventTime
+    * mode (WatermarkBoundarySpec; the boundary discipline:
+    * measure, then build). The wake-up for quiescent keys is ONE
+    * re-armed event-time timer at the earliest held event's finalization
+    * point (strictly above the current watermark); `handleExpiredTimer`
+    * re-drains idempotently from the then-current watermark, so a timer
+    * racing newer arrivals in the same batch needs no guard. AsofSpec
+    * pins the output against the batch as-of join under disordered
+    * slicing. */
   class AsofBufferedProcessor
       extends StatefulProcessor[Long, TaggedEvent, AsofMatch] {
     @transient private var lastView: ValueState[Long] = _
@@ -423,7 +318,10 @@ object StatefulOps {
       val all = pending.get().toSeq ++ incoming
       // measured boundary: rows at t == wmSec can no longer arrive
       // (inclusive pre-filter), so finalizing the boundary second is
-      // safe AND required for liveness — the fMGWS twin's partition
+      // safe AND required for liveness: a strict t < wmSec would hold
+      // boundary-second events, and if the stream quiesces with the
+      // watermark exactly at a held event's second those attributions
+      // would never emit
       val (ripe, hold) = all.partition(_.t <= wmSec)
       var last = if (lastView.exists()) lastView.get() else Long.MinValue
       val out = Vector.newBuilder[AsofMatch]
@@ -455,48 +353,23 @@ object StatefulOps {
       drain(uid, Nil, tv.getCurrentWatermarkInMs())
   }
 
-  /** The `transformWithState` face of [[asofBuffered]]. */
+  /** Runs [[AsofBufferedProcessor]] in event-time mode. */
   def asofBufferedTws(ds: Dataset[TaggedEvent]): Dataset[AsofMatch] =
     ds.groupByKey(_.userId)
       .transformWithState(new AsofBufferedProcessor,
         TimeMode.EventTime(), OutputMode.Append())
 
   /** O9 — new/old visitor repair: `is_new=1` is rewritten to `0` when the
-    * mid was first seen on an earlier date (BaseLogApp.java:71-108). State =
-    * first-visit date. */
-  def visitorRepair(ds: Dataset[PageView]): Dataset[PageView] =
-    ds.groupByKey(_.mid)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (_: String, events: Iterator[PageView], state: GroupState[String]) => {
-          val sorted = events.toSeq.sortBy(_.ts)
-          var firstDate = state.getOption.getOrElse("")
-          val out = sorted.map { e =>
-            if (firstDate.isEmpty) {
-              firstDate = e.date
-              e // genuinely new: keep is_new as sent
-            } else if (e.isNew == "1" && e.date != firstDate) {
-              e.copy(isNew = "0") // repeat visitor mis-flagged as new
-            } else e
-          }
-          state.update(firstDate)
-          out.iterator
-        })
-
-  /** [[visitorRepair]] on Spark 4's `transformWithState` — completing the
-    * W8 migration row for the reference's first-visit ValueState job
-    * (BaseLogApp.java:71-108). Identical fold to the
-    * `flatMapGroupsWithState` form (first-seen date per mid, later "new"
-    * flags rewritten); the named state gains a DECLARED TTL so the
-    * reference's hand-tuned 1-day state retention becomes one config the
-    * store enforces (RocksDB compaction physically drops expired
-    * first-visit markers — at 100 TB of traffic the visitor-key space is
-    * the largest state surface this module holds). StreamingSpec pins the
-    * twin bit-equal to [[visitorRepair]] on the same slicing. */
-  class VisitorRepairProcessor(ttl: TTLConfig)
+    * mid was first seen on an earlier date (the reference's first-visit
+    * ValueState job, BaseLogApp.java:71-108). State = first-visit date per
+    * mid, a named ValueState; events fold in `ts` order. StreamingSpec pins
+    * the repaired rows across batches and days. */
+  class VisitorRepairProcessor
       extends StatefulProcessor[String, PageView, PageView] {
     @transient private var first: ValueState[String] = _
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      first = getHandle.getValueState[String]("firstDate", Encoders.STRING, ttl)
+      first = getHandle.getValueState[String]("firstDate", Encoders.STRING,
+        TTLConfig.NONE)
     override def handleInputRows(mid: String, rows: Iterator[PageView],
         tv: TimerValues): Iterator[PageView] = {
       var firstDate = Option(first.get()).getOrElse("")
@@ -513,56 +386,25 @@ object StatefulOps {
     }
   }
 
-  /** The `transformWithState` face of [[visitorRepair]]. */
-  def visitorRepairTws(ds: Dataset[PageView],
-      ttl: TTLConfig = TTLConfig.NONE): Dataset[PageView] =
+  /** Runs [[VisitorRepairProcessor]]. */
+  def visitorRepairTws(ds: Dataset[PageView]): Dataset[PageView] =
     ds.groupByKey(_.mid)
-      .transformWithState(new VisitorRepairProcessor(ttl),
-        if (ttl == TTLConfig.NONE) TimeMode.None()
-        else TimeMode.ProcessingTime(), // TTL state rejects NoTime
+      .transformWithState(new VisitorRepairProcessor, TimeMode.None(),
         OutputMode.Append())
 
-  /** O18 — keep-latest dedup on a changelog: hold the max-`opTs` row per
-    * key, emit it once no newer version can arrive. The reference flushes
-    * on a 5 s *processing-time* timer (DwsTradeSkuOrderWindow.java:81-111);
-    * here the flush is *event-time* (watermark passes `opTs + flushMs`) —
-    * deterministic under replay, which the proc-time original is not. The
-    * input must carry a watermark on `timestamp_millis(opTs)`. */
-  def keepLatest(ds: Dataset[VersionedRow],
-                 flushMs: Long = 5000): Dataset[VersionedRow] =
-    ds.groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Append,
-          GroupStateTimeout.EventTimeTimeout)(
-        (_: String, events: Iterator[VersionedRow],
-         state: GroupState[VersionedRow]) => {
-          if (state.hasTimedOut) {
-            val held = state.getOption
-            state.remove()
-            held.iterator
-          } else {
-            val candidates = state.getOption.iterator ++ events
-            val latest = candidates.maxBy(_.opTs)
-            state.update(latest)
-            // timeout must sit above the current watermark
-            state.setTimeoutTimestamp(
-              math.max(latest.opTs + flushMs,
-                state.getCurrentWatermarkMs() + 1))
-            Iterator.empty
-          }
-        })
-
-  /** [[keepLatest]] on `transformWithState` with an EVENT-TIME TIMER —
-    * the upsert-kafka reader's core (the reference flushes the held
-    * version on a 5 s proc-time timer, DwsTradeSkuOrderWindow.java:81-111)
-    * on the successor API. The held max-`opTs` row lives in a named
-    * ValueState; each arrival re-arms ONE timer at
-    * `max(opTs + flushMs, watermark + 1)` (stale timers deleted — the
-    * [[GapSessionProcessor]] discipline), and `handleExpiredTimer` emits
-    * the version only if no newer one superseded it inside the same batch
-    * (expiry-vs-held guard). Event-time flush keeps the operator
-    * replay-deterministic, which the proc-time original is not.
-    * StreamingSpec pins the twin bit-equal to [[keepLatest]] on the same
-    * slicing. */
+  /** O18 — keep-latest dedup on a changelog, the upsert-kafka reader's
+    * core: hold the max-`opTs` row per key, emit it once no newer version
+    * can arrive. The reference flushes the held version on a 5 s
+    * *processing-time* timer (W5, DwsTradeSkuOrderWindow.java:81-111);
+    * here the flush is an *event-time* timer (watermark passes
+    * `opTs + flushMs`) — deterministic under replay, which the proc-time
+    * original is not. The input must carry a watermark on
+    * `timestamp_millis(opTs)`. The held row lives in a named ValueState;
+    * each arrival re-arms ONE timer at `max(opTs + flushMs, watermark + 1)`
+    * (stale timers deleted — the [[GapSessionProcessor]] discipline), and
+    * `handleExpiredTimer` emits the version only if no newer one
+    * superseded it inside the same batch (expiry-vs-held guard).
+    * StreamingSpec pins the flushed rows batch by batch. */
   class KeepLatestProcessor(flushMs: Long)
       extends StatefulProcessor[String, VersionedRow, VersionedRow] {
     @transient private var held: ValueState[VersionedRow] = _
@@ -594,7 +436,7 @@ object StatefulOps {
       } else Iterator.empty
   }
 
-  /** The `transformWithState` face of [[keepLatest]]. */
+  /** Runs [[KeepLatestProcessor]] in event-time mode. */
   def keepLatestTws(ds: Dataset[VersionedRow],
       flushMs: Long = 5000): Dataset[VersionedRow] =
     ds.groupByKey(_.key)
@@ -603,58 +445,15 @@ object StatefulOps {
 
   /** W6 — CEP bounce detector: an entry page (lastPageId == null) held per
     * mid; emitted as a bounce if the NEXT event is also an entry page, or
-    * if no event follows within `timeoutMs` event time (both arms of the
-    * Flink CEP pattern + timeout side-output collapse to this one path,
-    * DwdTrafficUserJumpDetail.java:79-119). Requires a watermark on the
-    * input for the event-time timeout. */
-  def bounceDetector(ds: Dataset[PageView],
-                     timeoutMs: Long = 10000): Dataset[PageView] =
-    ds.groupByKey(_.mid)
-      .flatMapGroupsWithState(OutputMode.Append,
-          GroupStateTimeout.EventTimeTimeout)(
-        (_: String, events: Iterator[PageView],
-         state: GroupState[PageView]) => {
-          val out = Vector.newBuilder[PageView]
-          if (state.hasTimedOut) {
-            state.getOption.foreach(out += _)
-            state.remove()
-          } else {
-            var held = state.getOption
-            events.toSeq.sortBy(_.ts).foreach { e =>
-              val isEntry = e.lastPageId == null || e.lastPageId.isEmpty
-              held match {
-                case Some(h) if e.ts > h.ts + timeoutMs =>
-                  out += h // nothing followed within the horizon: bounce
-                  held = if (isEntry) Some(e) else None
-                case Some(h) =>
-                  if (isEntry) out += h // entry→entry inside horizon: bounce
-                  held = if (isEntry) Some(e) else None
-                case None =>
-                  held = if (isEntry) Some(e) else None
-              }
-            }
-            held match {
-              case Some(h) =>
-                state.update(h)
-                state.setTimeoutTimestamp(h.ts + timeoutMs)
-              case None => state.remove()
-            }
-          }
-          out.result().iterator
-        })
-
-  /** [[bounceDetector]] on `transformWithState` — the event-time
-    * `handleExpiredTimer` showcase of the W8 migration (the reference's
-    * CEP pattern-timeout side output, DwdTrafficUserJumpDetail.java:89):
-    * BOTH arms of the Flink CEP pattern live on one code path, with the
-    * timeout arm now an explicit timer callback instead of a
-    * `hasTimedOut` branch inside the input handler. An entry page is
-    * held in named state with ONE armed timer at `ts + timeoutMs`; a
-    * following entry page bounces it in-stream, a continuation clears
-    * it, and watermark passage fires the timer for the no-follow-up
-    * bounce — the expiry-vs-held guard drops a timer that raced a newer
-    * held entry in the same batch. StreamingSpec pins the twin bit-equal
-    * to [[bounceDetector]] on the same slicing. */
+    * if no event follows within `timeoutMs` event time — both arms of the
+    * Flink CEP pattern and its timeout side output
+    * (DwdTrafficUserJumpDetail.java:79-119). The entry page is held in
+    * named state with ONE armed event-time timer at `ts + timeoutMs`; a
+    * following entry page bounces it in-stream, a continuation clears it,
+    * and watermark passage fires `handleExpiredTimer` for the
+    * no-follow-up bounce — the expiry-vs-held guard drops a timer that
+    * raced a newer held entry in the same batch. Requires a watermark on
+    * the input. StreamingSpec pins the bounces batch by batch. */
   class BounceProcessor(timeoutMs: Long)
       extends StatefulProcessor[String, PageView, PageView] {
     @transient private var held: ValueState[PageView] = _
@@ -698,7 +497,7 @@ object StatefulOps {
       } else Iterator.empty
   }
 
-  /** The `transformWithState` face of [[bounceDetector]]. */
+  /** Runs [[BounceProcessor]] in event-time mode. */
   def bounceDetectorTws(ds: Dataset[PageView],
       timeoutMs: Long = 10000): Dataset[PageView] =
     ds.groupByKey(_.mid)
@@ -722,37 +521,9 @@ object StatefulOps {
     * accumulated prefix after every batch). State is O(k) per key —
     * bounded forever, the whole point of sketching an unbounded stream;
     * at 100 TB/day this is the only per-key token summary whose state
-    * does not grow with vocabulary. */
-  def heavyHittersStream(ds: Dataset[KeyedToken], k: Int)
-      : Dataset[(String, String, Long)] = {
-    val mg = graft.functions.Aggregators.misraGries(k)
-    implicit val ktEnc: Encoder[KeyedToken] = Encoders.product[KeyedToken]
-    implicit val outEnc: Encoder[(String, String, Long)] =
-      Encoders.product[(String, String, Long)]
-    implicit val bufEnc: Encoder[Map[String, Long]] = mg.bufferEncoder
-    ds.groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(
-        (key: String, rows: Iterator[KeyedToken],
-            state: GroupState[Map[String, Long]]) => {
-          val buf = rows.foldLeft(state.getOption.getOrElse(mg.zero))(
-            (b, r) => mg.reduce(b, r.token))
-          state.update(buf)
-          buf.iterator.map { case (t, c) => (key, t, c) }
-        })
-  }
-
-  /** [[heavyHittersStream]] on `transformWithState` — the Misra–Gries
-    * buffer as a NAMED state variable. The fold is the SAME mergeable
-    * Aggregator algebra the batch query and the fMGWS face use
-    * (`Aggregators.misraGries`, property-tested under every partitioning
-    * by HeavyHitterSpec), so the MG guarantees — ≤ k entries, no false
-    * negative above n/k, undercount ≤ n/k — hold at every micro-batch
-    * boundary here too; the processor only changes WHERE the buffer
-    * lives (a named ValueState on the successor API, RocksDB-resident,
-    * O(k) per key forever). Emits the update-mode changelog
-    * (key, token, estimate) each batch, like the original.
-    * HeavyHitterSpec pins the twin's accumulated-prefix output bit-equal
-    * to [[heavyHittersStream]] under the same slicing. */
+    * does not grow with vocabulary. The buffer is a named ValueState
+    * (RocksDB-resident). HeavyHitterSpec pins each batch's changelog
+    * against the same Aggregator folded in the spec. */
   class HeavyHittersProcessor(k: Int)
       extends StatefulProcessor[String, KeyedToken, (String, String, Long)] {
     private val mg = graft.functions.Aggregators.misraGries(k)
@@ -769,7 +540,7 @@ object StatefulOps {
     }
   }
 
-  /** The `transformWithState` face of [[heavyHittersStream]]. */
+  /** Runs [[HeavyHittersProcessor]]. */
   def heavyHittersStreamTws(ds: Dataset[KeyedToken], k: Int)
       : Dataset[(String, String, Long)] = {
     implicit val outEnc: Encoder[(String, String, Long)] =
@@ -790,7 +561,6 @@ object StatefulOps {
     * (null = no touch yet ⇒ 'direct'). */
   case class TouchState(first: String, last: String)
 
-  private implicit val teEnc: Encoder[TouchEvent] = Encoders.product[TouchEvent]
   private implicit val apEnc: Encoder[AttributedPurchase] =
     Encoders.product[AttributedPurchase]
   private implicit val tsEnc: Encoder[TouchState] = Encoders.product[TouchState]
@@ -805,22 +575,17 @@ object StatefulOps {
     * micro-batch events fold in (t, eventId) order — the batch query's
     * exact total order — so output is replay-deterministic; ACROSS
     * batches correctness needs per-user event-time order (the
-    * [[dailyDedup]] monotonicity caveat: production fronts this with a
-    * watermark-buffered sort). AttributionStreamSpec proves the streamed
-    * emission equals an in-JVM replay of the batch semantics under
-    * uneven slicing, with cross-batch state carries exercised. */
-  /** [[attributionStream]] on Spark 4's `transformWithState` — the twin
-    * discipline [[ingestDedupTws]] established: identical semantics on
-    * the successor state API, with the touch pair held in a NAMED
-    * ValueState and an optional TTL ("attribute only within N days of
-    * the last touch" becomes one declared config, enforced by the store,
-    * instead of hand-rolled timeout plumbing). AttributionStreamSpec
-    * pins the two faces bit-equal on the same slicing. */
-  class AttributionProcessor(ttl: TTLConfig)
+    * [[dailyDedupTws]] monotonicity caveat: production fronts this with a
+    * watermark-buffered sort). The touch pair is a named ValueState.
+    * AttributionStreamSpec proves the streamed emission equals an in-JVM
+    * replay of the batch semantics under uneven slicing, with cross-batch
+    * state carries exercised. */
+  class AttributionProcessor
       extends StatefulProcessor[Long, TouchEvent, AttributedPurchase] {
     @transient private var touch: ValueState[TouchState] = _
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      touch = getHandle.getValueState[TouchState]("touch", tsEnc, ttl)
+      touch = getHandle.getValueState[TouchState]("touch", tsEnc,
+        TTLConfig.NONE)
     override def handleInputRows(uid: Long, rows: Iterator[TouchEvent],
         timerValues: TimerValues): Iterator[AttributedPurchase] = {
       var st = Option(touch.get()).getOrElse(TouchState(null, null))
@@ -839,34 +604,10 @@ object StatefulOps {
     }
   }
 
-  /** The `transformWithState` face of [[attributionStream]]. */
-  def attributionStreamTws(ds: Dataset[TouchEvent],
-      ttl: TTLConfig = TTLConfig.NONE): Dataset[AttributedPurchase] =
-    ds.groupByKey(_.userId)
-      .transformWithState(new AttributionProcessor(ttl),
-        if (ttl == TTLConfig.NONE) TimeMode.None()
-        else TimeMode.ProcessingTime(), // TTL state rejects NoTime
-        OutputMode.Append())
-
-  def attributionStream(ds: Dataset[TouchEvent])
+  /** Runs [[AttributionProcessor]]. */
+  def attributionStreamTws(ds: Dataset[TouchEvent])
       : Dataset[AttributedPurchase] =
     ds.groupByKey(_.userId)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (uid: Long, events: Iterator[TouchEvent],
-            state: GroupState[TouchState]) => {
-          var st = state.getOption.getOrElse(TouchState(null, null))
-          val out = Vector.newBuilder[AttributedPurchase]
-          events.toSeq.sortBy(e => (e.t, e.eventId)).foreach { e =>
-            if (e.eventType == "purchase")
-              out += AttributedPurchase(uid, e.t, e.eventId,
-                Option(st.first).getOrElse("direct"),
-                Option(st.last).getOrElse("direct"), e.cents)
-            else
-              st = TouchState(
-                if (st.first == null) e.eventType else st.first,
-                e.eventType)
-          }
-          state.update(st)
-          out.result().iterator
-        })
+      .transformWithState(new AttributionProcessor, TimeMode.None(),
+        OutputMode.Append())
 }

@@ -1,7 +1,7 @@
 package graft
 
 import graft.ops.Relational
-import graft.streaming.StatefulOps.{AsofMatch, TaggedEvent, asofAttribution, asofBuffered}
+import graft.streaming.StatefulOps.{AsofMatch, TaggedEvent, asofAttributionTws, asofBufferedTws}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
@@ -43,7 +43,7 @@ class AsofSpec extends AnyFunSuite {
 
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[TaggedEvent]
-    val q = asofAttribution(in.toDS()).writeStream
+    val q = asofAttributionTws(in.toDS()).writeStream
       .format("memory").queryName("asof_stream")
       .outputMode(OutputMode.Append).start()
     ev.grouped(math.max(1, ev.length / 3)).foreach { chunk =>
@@ -55,41 +55,27 @@ class AsofSpec extends AnyFunSuite {
     assert(got === expected)
   }
 
-  test("asofAttributionTws (transformWithState) ≡ asofAttribution on the " +
-      "same slicing") {
+  test("asofAttributionTws carries the latest view across batches: " +
+      "same-second tie, cross-batch carry, buy before any view") {
     import spark.implicits._
-    import graft.streaming.StatefulOps.asofAttributionTws
     implicit val sqlCtx = spark.sqlContext
-    // carries state across batches: views and buys interleave per user,
-    // with a same-second view+buy tie (side order decides) and a buy
-    // before any view (no emission)
-    val batches = Seq(
-      Seq(TaggedEvent(1, 100, 0, 10), TaggedEvent(2, 90, 1, 20),
+    val in = MemoryStream[TaggedEvent]
+    val q = asofAttributionTws(in.toDS()).writeStream
+      .format("memory").queryName("asof_tws").outputMode(OutputMode.Append)
+      .start()
+    Seq(
+      Seq(TaggedEvent(1, 100, 0, 10), TaggedEvent(2, 90, 1, 20), // no view yet
         TaggedEvent(1, 100, 1, 11)), // same-second tie: view wins (gap 0)
       Seq(TaggedEvent(1, 200, 1, 12), // cross-batch carry: gap 100
         TaggedEvent(2, 150, 0, 21)),
       Seq(TaggedEvent(2, 180, 1, 22), TaggedEvent(1, 300, 0, 13),
         TaggedEvent(1, 310, 1, 14)))
-    def run(name: String,
-        f: org.apache.spark.sql.Dataset[TaggedEvent] =>
-          org.apache.spark.sql.Dataset[AsofMatch]): Seq[AsofMatch] = {
-      val in = MemoryStream[TaggedEvent]
-      val q = f(in.toDS()).writeStream
-        .format("memory").queryName(name).outputMode(OutputMode.Append)
-        .start()
-      batches.foreach { b => in.addData(b); q.processAllAvailable() }
-      val rows = spark.table(name).as[AsofMatch].collect()
-        .sortBy(m => (m.userId, m.buyS, m.eventId)).toSeq
-      q.stop()
-      rows
-    }
-    val legacy = run("asof_legacy", asofAttribution)
-    val tws = run("asof_tws", ds => asofAttributionTws(ds))
-    assert(tws === legacy)
-    // liveness: tie, carry, and no-view-yet cases all exercised
-    assert(tws.contains(AsofMatch(11, 1, 100, 0)), s"$tws")   // tie
-    assert(tws.contains(AsofMatch(12, 1, 200, 100)), s"$tws") // carry
-    assert(!tws.exists(_.eventId == 20), s"$tws")             // buy w/o view
+      .foreach { b => in.addData(b); q.processAllAvailable() }
+    val got = spark.table("asof_tws").as[AsofMatch].collect()
+      .sortBy(m => (m.userId, m.buyS, m.eventId)).toSeq
+    q.stop()
+    assert(got === Seq(AsofMatch(11, 1, 100, 0), AsofMatch(12, 1, 200, 100),
+      AsofMatch(14, 1, 310, 10), AsofMatch(22, 2, 180, 30)))
   }
 
   private def bufferedStream(name: String, delay: String)(implicit
@@ -100,7 +86,7 @@ class AsofSpec extends AnyFunSuite {
       .withColumn("eventTime", timestamp_seconds(col("t")))
       .withWatermark("eventTime", delay)
       .as[TaggedEvent]
-    val q = asofBuffered(withWm).writeStream
+    val q = asofBufferedTws(withWm).writeStream
       .format("memory").queryName(name)
       .outputMode(OutputMode.Append).start()
     (in, q)
@@ -154,40 +140,23 @@ class AsofSpec extends AnyFunSuite {
     assert(got === expected)
   }
 
-  test("asofBufferedTws (ListState + timer) ≡ asofBuffered on the same " +
-      "disordered slicing, incl. the view-after-buy case") {
+  test("asofBufferedTws drains held events by timer and watermark under " +
+      "cross-batch disorder, incl. the view-after-buy case") {
     import spark.implicits._
-    import graft.streaming.StatefulOps.asofBufferedTws
     implicit val sqlCtx = spark.sqlContext
     // disorder within a 60 s watermark budget: buy before its view,
     // cross-batch carries, a quiescent key drained only by timer/WM push
-    val batches = Seq(
+    val (in, q) = bufferedStream("asof_buf_tws", "60 seconds")
+    Seq(
       Seq(TaggedEvent(1L, 100L, 1, 901L), TaggedEvent(2L, 80L, 0, -1L)),
       Seq(TaggedEvent(1L, 50L, 0, -1L),   // late view beats the held buy
         TaggedEvent(2L, 90L, 1, 902L)),
       Seq(TaggedEvent(1L, 160L, 1, 903L), TaggedEvent(1L, 150L, 0, -1L)),
       Seq(TaggedEvent(9L, 10000L, 0, -1L))) // push watermark far past all
-    def run(name: String,
-        f: org.apache.spark.sql.Dataset[TaggedEvent] =>
-          org.apache.spark.sql.Dataset[AsofMatch]): Set[AsofMatch] = {
-      val in = MemoryStream[TaggedEvent]
-      val withWm = in.toDS().toDF()
-        .withColumn("eventTime", timestamp_seconds(col("t")))
-        .withWatermark("eventTime", "60 seconds")
-        .as[TaggedEvent]
-      val q = f(withWm).writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append).start()
-      batches.foreach { b => in.addData(b); q.processAllAvailable() }
-      val rows = spark.table(name).as[AsofMatch].collect().toSet
-      q.stop()
-      rows
-    }
-    val legacy = run("asof_buf_legacy", asofBuffered)
-    val tws = run("asof_buf_tws", ds => asofBufferedTws(ds))
-    assert(tws === legacy)
-    // liveness: the out-of-order attribution actually happened on the
-    // tws face (view t=50 arriving after buy t=100 still wins)
-    assert(tws.contains(AsofMatch(901L, 1L, 100L, 50L)), s"$tws")
-    assert(tws.contains(AsofMatch(903L, 1L, 160L, 10L)), s"$tws")
+      .foreach { b => in.addData(b); q.processAllAvailable() }
+    val got = spark.table("asof_buf_tws").as[AsofMatch].collect().toSet
+    q.stop()
+    assert(got === Set(AsofMatch(901L, 1L, 100L, 50L),
+      AsofMatch(902L, 2L, 90L, 10L), AsofMatch(903L, 1L, 160L, 10L)))
   }
 }

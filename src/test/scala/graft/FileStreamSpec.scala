@@ -75,7 +75,7 @@ class FileStreamSpec extends AnyFunSuite {
       val in = spark.readStream
         .schema("fp STRING, docId LONG, ts LONG").json(src)
         .as[StatefulOps.IngestDoc]
-      StatefulOps.ingestDedup(in).toDF()
+      StatefulOps.ingestDedupTws(in).toDF()
         .writeStream
         .option("checkpointLocation", ckpt)
         .foreachBatch { (batch: DataFrame, _: Long) =>
@@ -102,7 +102,9 @@ class FileStreamSpec extends AnyFunSuite {
   test("transformWithState restart ≡ batch: keepLatestTws resumes its held " +
       "rows and event-time timers from the checkpoint") {
     import graft.streaming.StatefulOps.{VersionedRow, keepLatestTws}
+    import org.apache.commons.io.FileUtils
     import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.streaming.StreamingQueryException
     import spark.implicits._
     val src = Files.createTempDirectory("klsrc").toString
     val out = Files.createTempDirectory("klout").toString
@@ -126,8 +128,8 @@ class FileStreamSpec extends AnyFunSuite {
         VersionedRow(s"c$i", t + 100, s"c$i-old"),
         VersionedRow(s"p${i % 3}", t + 700, s"p$i"))
     }
-    def start() = keepLatestTws(spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).json(src)
+    def start(ckpt: String, out: String) = keepLatestTws(spark.readStream
+        .schema(schema).option("maxFilesPerTrigger", 1).json(src)
         .withColumn("eventTime", timestamp_millis(col("opTs")))
         .withWatermark("eventTime", "0 seconds").as[VersionedRow],
         flushMs = 5000)
@@ -136,7 +138,7 @@ class FileStreamSpec extends AnyFunSuite {
       .start(out)
 
     (0 until 14).foreach(i => file(i, versions(i)))
-    val q1 = start()
+    val q1 = start(ckpt, out)
     q1.processAllAvailable()
     q1.stop()
     assert(q1.recentProgress.count(_.numInputRows > 0) >= 12)
@@ -148,7 +150,27 @@ class FileStreamSpec extends AnyFunSuite {
     // whose watermark passes every held row's timer
     file(14, versions(14))
     file(15, Seq(VersionedRow("flush", 10000000L, "f")))
-    val q2 = start()
+
+    // fail closed: a copy of the checkpoint whose latest offset-log entry
+    // is truncated must not restart. Spark's error is the JSON parser's,
+    // which does not name the file, so the spec pins the failure and a
+    // sink that received no batch. (A changed digit in the entry's
+    // batchWatermarkMs still parses, and that restart runs silently wrong:
+    // nothing verifies the entry, so that case is not pinned here.)
+    val badCkpt = Files.createTempDirectory("klckpt_bad").toString
+    val badOut = Files.createTempDirectory("klout_bad").toString
+    FileUtils.copyDirectory(new java.io.File(ckpt), new java.io.File(badCkpt))
+    val victim = new java.io.File(badCkpt, "offsets").listFiles()
+      .filter(_.getName.matches("\\d+")).maxBy(_.getName.toLong)
+    val raf = new java.io.RandomAccessFile(victim, "rw")
+    try raf.setLength(raf.length / 2) finally raf.close()
+    val qBad = start(badCkpt, badOut)
+    try intercept[StreamingQueryException](qBad.processAllAvailable())
+    finally qBad.stop()
+    assert(FileUtils.listFiles(new java.io.File(badOut), Array("parquet"),
+      true).isEmpty, "a batch ran on the truncated offset log")
+
+    val q2 = start(ckpt, out)
     q2.processAllAvailable()
     q2.stop()
 

@@ -70,7 +70,7 @@ class HeavyHitterSpec extends AnyFunSuite {
       .MemoryStream[KeyedToken]
     var latest = Map.empty[String, Map[String, Long]]
     var fed = Vector.empty[KeyedToken]
-    val q = StatefulOps.heavyHittersStream(in.toDS(), k).toDF()
+    val q = StatefulOps.heavyHittersStreamTws(in.toDS(), k).toDF()
       .writeStream.outputMode("update")
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
         val rows = batch.collect()
@@ -108,8 +108,8 @@ class HeavyHitterSpec extends AnyFunSuite {
     assert(latest("a").contains("hotA") && latest("b").contains("hotB"))
   }
 
-  test("heavyHittersStreamTws (transformWithState) ≡ heavyHittersStream " +
-      "per micro-batch on the same slicing") {
+  test("heavyHittersStreamTws emits, per micro-batch, each touched key's " +
+      "Misra–Gries buffer folded over its whole prefix") {
     import graft.streaming.StatefulOps
     import graft.streaming.StatefulOps.KeyedToken
     val spark = TestSession.spark
@@ -123,35 +123,36 @@ class HeavyHitterSpec extends AnyFunSuite {
       (1 to 200).map(_ => KeyedToken("b", s"u${rnd.nextInt(25)}")))
     val slices = Seq(stream.slice(0, 7), stream.slice(7, 300),
       stream.slice(300, 301), stream.slice(301, stream.length))
-    // both faces emit the update-mode changelog; capture it per batch so
-    // the comparison is batch-by-batch bit-equality, not just the final
-    // accumulated state
-    def run(f: org.apache.spark.sql.Dataset[KeyedToken] =>
-        org.apache.spark.sql.Dataset[(String, String, Long)])
-        : Seq[Set[(String, String, Long)]] = {
-      val in = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[KeyedToken]
-      val perBatch = scala.collection.mutable.ArrayBuffer
-        .empty[Set[(String, String, Long)]]
-      val q = f(in.toDS()).toDF().writeStream.outputMode("update")
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          perBatch += batch.collect()
-            .map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSet
-          ()
-        }.start()
-      slices.foreach { c => in.addData(c); q.processAllAvailable() }
-      q.stop()
-      // drop no-data batches (the engine may schedule them differently
-      // across operators); data batches stay aligned 1:1 with `slices`
-      perBatch.toSeq.filter(_.nonEmpty)
+    val in = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[KeyedToken]
+    val perBatch = scala.collection.mutable.ArrayBuffer
+      .empty[Set[(String, String, Long)]]
+    val q = StatefulOps.heavyHittersStreamTws(in.toDS(), k).toDF()
+      .writeStream.outputMode("update")
+      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+        perBatch += batch.collect()
+          .map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSet
+        ()
+      }.start()
+    slices.foreach { c => in.addData(c); q.processAllAvailable() }
+    q.stop()
+    // oracle: the same Aggregator folded in arrival order; a batch emits
+    // the full buffer of every key it touched (update-mode changelog)
+    val mg = Aggregators.misraGries(k)
+    var bufs = Map.empty[String, Map[String, Long]]
+    val expected = slices.map { c =>
+      c.foreach(t => bufs += t.key ->
+        mg.reduce(bufs.getOrElse(t.key, mg.zero), t.token))
+      c.map(_.key).distinct.flatMap(key =>
+        bufs(key).map { case (t, n) => (key, t, n) }).toSet
     }
-    val legacy = run(ds => StatefulOps.heavyHittersStream(ds, k))
-    val tws = run(ds => StatefulOps.heavyHittersStreamTws(ds, k))
-    assert(tws.size === legacy.size)
-    tws.zip(legacy).zipWithIndex.foreach { case ((t, l), i) =>
-      assert(t === l, s"batch $i diverged")
+    // no-data batches emit nothing; data batches align 1:1 with `slices`
+    val got = perBatch.toSeq.filter(_.nonEmpty)
+    assert(got.size === expected.size)
+    got.zip(expected).zipWithIndex.foreach { case ((g, e), i) =>
+      assert(g === e, s"batch $i diverged")
     }
-    // liveness: the sketch really tracked the hot token on the tws face
-    assert(tws.last.exists(r => r._1 == "a" && r._2 == "hotA"))
+    // liveness: the sketch really tracked the hot token
+    assert(got.last.exists(r => r._1 == "a" && r._2 == "hotA"))
   }
 }

@@ -22,7 +22,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *     → null tolerance (MyKafkaUtil.java:23-50 deserializer returns null
   *       rather than throwing on a null payload; consumers skip, not crash)
   *     → keep-latest upsert reconstruction (SURVEY §7.3: S4 readers run
-  *       StatefulOps.keepLatest to rebuild the upsert view).
+  *       StatefulOps.keepLatestTws to rebuild the upsert view).
   *
   * Only the broker's byte shuttle is unexercised — configuration, not
   * logic.
@@ -64,7 +64,7 @@ class KafkaContractSpec extends AnyFunSuite {
       .withColumn("eventTime", timestamp_millis(col("opTs")))
       .withWatermark("eventTime", "0 seconds")
       .as[VersionedRow]
-    val q = StatefulOps.keepLatest(decoded, flushMs = 1000).writeStream
+    val q = StatefulOps.keepLatestTws(decoded, flushMs = 1000).writeStream
       .format("memory").queryName("kafka_rt").outputMode(OutputMode.Append)
       .start()
     q.processAllAvailable()

@@ -27,7 +27,7 @@ class RocksDbStateSpec extends AnyFunSuite {
   test("ingestDedup runs its dedup markers in RocksDB state") {
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[IngestDoc]
-    val q = ingestDedup(in.toDS()).writeStream
+    val q = ingestDedupTws(in.toDS()).writeStream
       .format("memory").queryName("rocks_dd").outputMode(OutputMode.Append)
       .start()
     in.addData(IngestDoc("fpA", 1L, 1000), IngestDoc("fpB", 2L, 1100))
@@ -51,7 +51,7 @@ class RocksDbStateSpec extends AnyFunSuite {
       .withColumn("eventTime", timestamp_millis(col("opTs")))
       .withWatermark("eventTime", "0 seconds")
       .as[VersionedRow]
-    val q = keepLatest(withWm, flushMs = 5000).writeStream
+    val q = keepLatestTws(withWm, flushMs = 5000).writeStream
       .format("memory").queryName("rocks_kl").outputMode(OutputMode.Append)
       .start()
     in.addData(

@@ -17,29 +17,10 @@ class StreamingSpec extends AnyFunSuite {
   test("dailyDedup emits only the first event per key per day") {
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[KeyedEvent]
-    val q = dailyDedup(in.toDS()).writeStream
-      .format("memory").queryName("dd").outputMode(OutputMode.Append).start()
-    in.addData(
-      KeyedEvent("u1", 1000, "2024-01-01"),
-      KeyedEvent("u1", 2000, "2024-01-01"),
-      KeyedEvent("u2", 1500, "2024-01-01"))
-    q.processAllAvailable()
-    in.addData(
-      KeyedEvent("u1", 90000000, "2024-01-02"),
-      KeyedEvent("u1", 90000001, "2024-01-02"))
-    q.processAllAvailable()
-    val rows = spark.table("dd").as[KeyedEvent].collect().sortBy(e => (e.key, e.ts))
-    q.stop()
-    assert(rows.toSeq === Seq(
-      KeyedEvent("u1", 1000, "2024-01-01"),
-      KeyedEvent("u1", 90000000, "2024-01-02"),
-      KeyedEvent("u2", 1500, "2024-01-01")))
-  }
-
-  test("dailyDedupTws (transformWithState) ≡ dailyDedup on the same " +
-      "slicing, incl. midnight rollover and cross-batch same-day dups") {
-    implicit val sqlCtx = spark.sqlContext
-    val batches = Seq(
+    val q = dailyDedupTws(in.toDS()).writeStream
+      .format("memory").queryName("dd_tws").outputMode(OutputMode.Append)
+      .start()
+    Seq(
       Seq(KeyedEvent("u1", 1000, "2024-01-01"),
         KeyedEvent("u1", 2000, "2024-01-01"), // same batch, same day: drop
         KeyedEvent("u2", 1500, "2024-01-01")),
@@ -49,51 +30,51 @@ class StreamingSpec extends AnyFunSuite {
       Seq(KeyedEvent("u1", 90000000, "2024-01-02"),
         KeyedEvent("u1", 90000001, "2024-01-02"),
         KeyedEvent("u2", 90000500, "2024-01-02")))
-    def run(name: String,
-        f: org.apache.spark.sql.Dataset[KeyedEvent] =>
-          org.apache.spark.sql.Dataset[KeyedEvent]): Seq[KeyedEvent] = {
-      val in = MemoryStream[KeyedEvent]
-      val q = f(in.toDS()).writeStream
-        .format("memory").queryName(name).outputMode(OutputMode.Append)
-        .start()
-      batches.foreach { b => in.addData(b); q.processAllAvailable() }
-      val rows = spark.table(name).as[KeyedEvent].collect()
-        .sortBy(e => (e.key, e.ts)).toSeq
-      q.stop()
-      rows
-    }
-    val legacy = run("dd_legacy", dailyDedup)
-    val tws = run("dd_tws", ds => dailyDedupTws(ds))
-    assert(tws === legacy)
-    // liveness: the rollover re-emitted, the dups were really dropped
-    assert(tws.count(_.key == "u1") === 2, s"$tws")
-    assert(tws.map(e => (e.key, e.date)).distinct.size === tws.size)
+      .foreach { b => in.addData(b); q.processAllAvailable() }
+    val rows = spark.table("dd_tws").as[KeyedEvent].collect()
+      .sortBy(e => (e.key, e.ts)).toSeq
+    q.stop()
+    assert(rows === Seq(
+      KeyedEvent("u1", 1000, "2024-01-01"),
+      KeyedEvent("u1", 90000000, "2024-01-02"),
+      KeyedEvent("u2", 1500, "2024-01-01"),
+      KeyedEvent("u2", 90000500, "2024-01-02"),
+      KeyedEvent("u3", 4000, "2024-01-01")))
   }
 
   test("dailyDedupTws emits one row per (key, date) under random batching " +
       "(midnight-rollover property)") {
-    implicit val sqlCtx = spark.sqlContext
-    val rnd = new scala.util.Random(17)
+    val rnd = new scala.util.Random(42)
+    val keys = (1 to 20).map(i => s"u$i")
     val days = Seq("2024-01-01", "2024-01-02", "2024-01-03")
-    val events = rnd.shuffle(for {
-      k <- 1 to 5; (d, di) <- days.zipWithIndex; i <- 1 to 4
-    } yield KeyedEvent(s"u$k", di * 86400000L + i * 1000L, d))
-      .sortBy(_.ts) // per-key event-time order is the operator contract
+    // chronological event log (per-key event-time order is the operator
+    // contract): day-major, 0..3 events per key per day at random times
+    val events = days.zipWithIndex.flatMap { case (day, di) =>
+      keys.flatMap { k =>
+        (0 until rnd.nextInt(4)).map(_ =>
+          KeyedEvent(k, di * 86400000L + rnd.nextInt(86400000), day))
+      }.sortBy(_.ts)
+    }
+    implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[KeyedEvent]
     val q = dailyDedupTws(in.toDS()).writeStream
       .format("memory").queryName("dd_tws_prop")
       .outputMode(OutputMode.Append).start()
-    var i = 0
-    while (i < events.length) {
-      val n = 1 + rnd.nextInt(7)
-      in.addData(events.slice(i, i + n))
-      q.processAllAvailable()
-      i += n
+    // random-sized micro-batches; skipping a processAllAvailable lets
+    // several slices land in one batch
+    var rest = events
+    while (rest.nonEmpty) {
+      val take = 1 + rnd.nextInt(17)
+      in.addData(rest.take(take))
+      if (rnd.nextBoolean()) q.processAllAvailable()
+      rest = rest.drop(take)
     }
+    q.processAllAvailable()
     val rows = spark.table("dd_tws_prop").as[KeyedEvent].collect()
     q.stop()
-    assert(rows.length === 15, s"expected 5 keys x 3 days, got ${rows.length}")
-    assert(rows.map(e => (e.key, e.date)).toSet.size === 15)
+    val expected = events.map(e => (e.key, e.date)).toSet
+    assert(rows.map(e => (e.key, e.date)).toSet === expected)
+    assert(rows.length === expected.size, "no duplicate (key, date)")
     // each emitted row is the FIRST of its (key, day)
     val firsts = events.groupBy(e => (e.key, e.date))
       .map { case (_, g) => g.minBy(_.ts) }.toSet
@@ -178,7 +159,7 @@ class StreamingSpec extends AnyFunSuite {
       SessionOut("u1", 200, 200, 1)), s"final sessions: $fin")
   }
 
-  test("ingestDedupTws (transformWithState) ≡ ingestDedup on the same stream") {
+  test("ingestDedup emits exactly the first doc per fingerprint across batches") {
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[IngestDoc]
     val q = ingestDedupTws(in.toDS()).writeStream
@@ -195,8 +176,6 @@ class StreamingSpec extends AnyFunSuite {
     q.processAllAvailable()
     val rows = spark.table("ingest_tws").as[IngestDoc].collect().sortBy(_.fp)
     q.stop()
-    // identical expectation as the flatMapGroupsWithState test below —
-    // the new-API operator must be a drop-in replacement
     assert(rows.toSeq === Seq(
       IngestDoc("fpA", 10L, 1000),
       IngestDoc("fpB", 20L, 1500),
@@ -242,70 +221,31 @@ class StreamingSpec extends AnyFunSuite {
       "ingest_tws_ttl sink never reached the expected rows within 60s")
   }
 
-  test("ingestDedup emits exactly the first doc per fingerprint across batches") {
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[IngestDoc]
-    val q = ingestDedup(in.toDS()).writeStream
-      .format("memory").queryName("ingest_dd").outputMode(OutputMode.Append)
-      .start()
-    in.addData(
-      IngestDoc("fpA", 11L, 1000),
-      IngestDoc("fpA", 10L, 1000), // same batch, same ts: docId breaks tie
-      IngestDoc("fpB", 20L, 1500))
-    q.processAllAvailable()
-    in.addData(
-      IngestDoc("fpA", 30L, 2000), // later batch duplicate: dropped
-      IngestDoc("fpC", 40L, 2500))
-    q.processAllAvailable()
-    val rows = spark.table("ingest_dd").as[IngestDoc].collect().sortBy(_.fp)
-    q.stop()
-    assert(rows.toSeq === Seq(
-      IngestDoc("fpA", 10L, 1000),
-      IngestDoc("fpB", 20L, 1500),
-      IngestDoc("fpC", 40L, 2500)))
-  }
-
   test("visitorRepair rewrites stale is_new flags") {
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[PageView]
-    val q = visitorRepair(in.toDS()).writeStream
-      .format("memory").queryName("vr").outputMode(OutputMode.Append).start()
-    in.addData(PageView("m1", "home", null, "1", 1000, "2024-01-01"))
-    q.processAllAvailable()
-    in.addData(PageView("m1", "home", null, "1", 90000000, "2024-01-02"))
-    q.processAllAvailable()
-    val rows = spark.table("vr").as[PageView].collect().sortBy(_.ts)
+    val q = visitorRepairTws(in.toDS()).writeStream
+      .format("memory").queryName("vr_tws").outputMode(OutputMode.Append)
+      .start()
+    Seq(
+      Seq(PageView("m1", "home", null, "1", 1000, "2024-01-01"),
+        PageView("m2", "home", null, "1", 1500, "2024-01-01")),
+      Seq(PageView("m1", "home", null, "1", 90000000, "2024-01-02"),
+        PageView("m1", "detail", "home", "0", 90000100, "2024-01-02"),
+        PageView("m3", "home", null, "1", 90000200, "2024-01-02")),
+      Seq(PageView("m2", "home", null, "1", 180000000, "2024-01-03")))
+      .foreach { b => in.addData(b); q.processAllAvailable() }
+    val rows = spark.table("vr_tws").as[PageView].collect()
+      .sortBy(e => (e.mid, e.ts)).toSeq
     q.stop()
-    assert(rows.map(_.isNew).toSeq === Seq("1", "0"))
-  }
-
-  test("bounceDetector: entry→entry bounces, entry→page does not, timeout bounces") {
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[PageView]
-    val withWm = in.toDS().toDF()
-      .withColumn("eventTime", timestamp_millis(col("ts")))
-      .withWatermark("eventTime", "0 seconds")
-      .as[PageView]
-    val q = bounceDetector(withWm, timeoutMs = 10000).writeStream
-      .format("memory").queryName("bd").outputMode(OutputMode.Append).start()
-    in.addData(
-      PageView("A", "home", null, "0", 1000, "d"),   // entry, held
-      PageView("A", "home", null, "0", 3000, "d"),   // entry again → bounce(1000)
-      PageView("B", "home", null, "0", 1000, "d"),   // entry, held
-      PageView("B", "detail", "home", "0", 3000, "d"), // continuation → no bounce
-      PageView("C", "home", null, "0", 1000, "d"))   // entry, held → timeout
-    q.processAllAvailable()
-    // advance the watermark far past C's 10 s horizon
-    in.addData(PageView("Z", "home", null, "0", 60000, "d"))
-    q.processAllAvailable()
-    in.addData(PageView("Z2", "home", null, "0", 120000, "d"))
-    q.processAllAvailable()
-    val rows = spark.table("bd").as[PageView].collect()
-    q.stop()
-    val bounced = rows.map(r => (r.mid, r.ts)).toSet
-    assert(bounced.contains(("A", 1000L)), s"A should bounce: $bounced")
-    assert(bounced.contains(("C", 1000L)), s"C should time out: $bounced")
-    assert(!bounced.exists(_._1 == "B"), s"B continued: $bounced")
+    // first visits keep is_new = 1; both later-day "1" flags become "0"
+    assert(rows === Seq(
+      PageView("m1", "home", null, "1", 1000, "2024-01-01"),
+      PageView("m1", "home", null, "0", 90000000, "2024-01-02"),
+      PageView("m1", "detail", "home", "0", 90000100, "2024-01-02"),
+      PageView("m2", "home", null, "1", 1500, "2024-01-01"),
+      PageView("m2", "home", null, "0", 180000000, "2024-01-03"),
+      PageView("m3", "home", null, "1", 90000200, "2024-01-02")))
   }
 
   test("keepLatest holds max-opTs row and flushes when the watermark passes") {
@@ -315,128 +255,57 @@ class StreamingSpec extends AnyFunSuite {
       .withColumn("eventTime", timestamp_millis(col("opTs")))
       .withWatermark("eventTime", "0 seconds")
       .as[VersionedRow]
-    val q = keepLatest(withWm, flushMs = 5000).writeStream
-      .format("memory").queryName("kl").outputMode(OutputMode.Append).start()
+    val q = keepLatestTws(withWm, flushMs = 5000).writeStream
+      .format("memory").queryName("kl_tws").outputMode(OutputMode.Append)
+      .start()
     in.addData(
       VersionedRow("k1", 1000, "v1"),
       VersionedRow("k1", 5000, "v5"),
       VersionedRow("k1", 3000, "v3"))
     q.processAllAvailable()
-    assert(spark.table("kl").isEmpty) // still held: watermark at 5000
-    in.addData(VersionedRow("k2", 60000, "x")) // watermark → 60000 > 5000+5000
-    q.processAllAvailable()
-    in.addData(VersionedRow("k3", 120000, "y"))
-    q.processAllAvailable()
-    val rows = spark.table("kl").as[VersionedRow].collect()
+    assert(spark.table("kl_tws").isEmpty) // still held: watermark at 5000
+    Seq(VersionedRow("k2", 60000, "x"), // watermark → 60000 > 5000+5000
+        VersionedRow("k3", 120000, "y"),
+        VersionedRow("k4", 240000, "z")) // extra batch: k3's timer fires
+      .foreach { r => in.addData(r); q.processAllAvailable() }
+    val rows = spark.table("kl_tws").as[VersionedRow].collect()
+      .sortBy(e => (e.key, e.opTs)).toSeq
     q.stop()
-    assert(rows.exists(r => r.key == "k1" && r.payload == "v5"),
-      s"expected latest v5 flushed, got ${rows.toSeq}")
-    assert(!rows.exists(r => r.key == "k1" && r.payload != "v5"))
+    // only the latest k1 version flushed; k4 is still held
+    assert(rows === Seq(VersionedRow("k1", 5000, "v5"),
+      VersionedRow("k2", 60000, "x"), VersionedRow("k3", 120000, "y")))
   }
 
-  test("visitorRepairTws (transformWithState) ≡ visitorRepair on the same slicing") {
+  test("bounceDetector: entry→entry bounces, entry→page does not, timeout bounces") {
     implicit val sqlCtx = spark.sqlContext
-    val batches = Seq(
-      Seq(PageView("m1", "home", null, "1", 1000, "2024-01-01"),
-        PageView("m2", "home", null, "1", 1500, "2024-01-01")),
-      Seq(PageView("m1", "home", null, "1", 90000000, "2024-01-02"),
-        PageView("m1", "detail", "home", "0", 90000100, "2024-01-02"),
-        PageView("m3", "home", null, "1", 90000200, "2024-01-02")),
-      Seq(PageView("m2", "home", null, "1", 180000000, "2024-01-03")))
-    def run(name: String,
-        f: org.apache.spark.sql.Dataset[PageView] =>
-          org.apache.spark.sql.Dataset[PageView]): Seq[PageView] = {
-      val in = MemoryStream[PageView]
-      val q = f(in.toDS()).writeStream
-        .format("memory").queryName(name).outputMode(OutputMode.Append)
-        .start()
-      batches.foreach { b => in.addData(b); q.processAllAvailable() }
-      val rows = spark.table(name).as[PageView].collect()
-        .sortBy(e => (e.mid, e.ts)).toSeq
-      q.stop()
-      rows
-    }
-    val legacy = run("vr_legacy", visitorRepair)
-    val tws = run("vr_tws", ds => visitorRepairTws(ds))
-    assert(tws === legacy)
-    // and the repair itself happened (not two empty outputs agreeing):
-    // both later-day "1" flags were rewritten
-    assert(tws.exists(e => e.mid == "m1" && e.ts == 90000000L &&
-      e.isNew == "0"), s"$tws")
-    assert(tws.exists(e => e.mid == "m2" && e.ts == 180000000L &&
-      e.isNew == "0"), s"$tws")
-  }
-
-  test("keepLatestTws (transformWithState timer) ≡ keepLatest on the same slicing") {
-    implicit val sqlCtx = spark.sqlContext
-    val batches = Seq(
-      Seq(VersionedRow("k1", 1000, "v1"), VersionedRow("k1", 5000, "v5"),
-        VersionedRow("k1", 3000, "v3")),
-      Seq(VersionedRow("k2", 60000, "x")), // watermark → 60000 > 5000+5000
-      Seq(VersionedRow("k3", 120000, "y")))
-    def run(name: String,
-        f: org.apache.spark.sql.Dataset[VersionedRow] =>
-          org.apache.spark.sql.Dataset[VersionedRow]): Seq[VersionedRow] = {
-      val in = MemoryStream[VersionedRow]
-      val withWm = in.toDS().toDF()
-        .withColumn("eventTime", timestamp_millis(col("opTs")))
-        .withWatermark("eventTime", "0 seconds")
-        .as[VersionedRow]
-      val q = f(withWm).writeStream
-        .format("memory").queryName(name).outputMode(OutputMode.Append)
-        .start()
-      batches.foreach { b => in.addData(b); q.processAllAvailable() }
-      in.addData(VersionedRow("k4", 240000, "z")) // extra batch: timers fire
-      q.processAllAvailable()
-      val rows = spark.table(name).as[VersionedRow].collect()
-        .sortBy(e => (e.key, e.opTs)).toSeq
-      q.stop()
-      rows
-    }
-    val legacy = run("kl_legacy", ds => keepLatest(ds))
-    val tws = run("kl_tws", ds => keepLatestTws(ds))
-    assert(tws === legacy)
-    // the latest k1 version flushed, superseded ones never emitted
-    assert(tws.exists(r => r.key == "k1" && r.payload == "v5"), s"$tws")
-    assert(!tws.exists(r => r.key == "k1" && r.payload != "v5"), s"$tws")
-  }
-
-  test("bounceDetectorTws (handleExpiredTimer) ≡ bounceDetector on the same slicing") {
-    implicit val sqlCtx = spark.sqlContext
-    val batches = Seq(
+    val in = MemoryStream[PageView]
+    val withWm = in.toDS().toDF()
+      .withColumn("eventTime", timestamp_millis(col("ts")))
+      .withWatermark("eventTime", "0 seconds")
+      .as[PageView]
+    val q = bounceDetectorTws(withWm, timeoutMs = 10000).writeStream
+      .format("memory").queryName("bd_tws").outputMode(OutputMode.Append)
+      .start()
+    Seq(
       Seq(
         PageView("A", "home", null, "0", 1000, "d"),   // entry, held
-        PageView("A", "home", null, "0", 3000, "d"),   // entry again → bounce
+        PageView("A", "home", null, "0", 3000, "d"),   // entry again → bounce(1000)
         PageView("B", "home", null, "0", 1000, "d"),   // entry, held
-        PageView("B", "detail", "home", "0", 3000, "d"), // continuation
-        PageView("C", "home", null, "0", 1000, "d")),  // entry → timeout
+        PageView("B", "detail", "home", "0", 3000, "d"), // continuation → no bounce
+        PageView("C", "home", null, "0", 1000, "d")),  // entry, held → timeout
+      // each later entry advances the watermark past the held ones' 10 s
+      // horizon, so their timers fire in the following batch
       Seq(PageView("Z", "home", null, "0", 60000, "d")),
-      Seq(PageView("Z2", "home", null, "0", 120000, "d")))
-    def run(name: String,
-        f: org.apache.spark.sql.Dataset[PageView] =>
-          org.apache.spark.sql.Dataset[PageView]): Set[(String, Long)] = {
-      val in = MemoryStream[PageView]
-      val withWm = in.toDS().toDF()
-        .withColumn("eventTime", timestamp_millis(col("ts")))
-        .withWatermark("eventTime", "0 seconds")
-        .as[PageView]
-      val q = f(withWm).writeStream
-        .format("memory").queryName(name).outputMode(OutputMode.Append)
-        .start()
-      batches.foreach { b => in.addData(b); q.processAllAvailable() }
-      in.addData(PageView("Z3", "home", null, "0", 240000, "d"))
-      q.processAllAvailable()
-      val rows = spark.table(name).as[PageView].collect()
-        .map(r => (r.mid, r.ts)).toSet
-      q.stop()
-      rows
-    }
-    val legacy = run("bd_legacy", ds => bounceDetector(ds))
-    val tws = run("bd_tws", ds => bounceDetectorTws(ds))
-    assert(tws === legacy)
-    // both CEP arms fired: entry→entry (A) and timer timeout (C), B not
-    assert(tws.contains(("A", 1000L)) && tws.contains(("C", 1000L)), s"$tws")
-    assert(!tws.exists(_._1 == "B"), s"$tws")
+      Seq(PageView("Z2", "home", null, "0", 120000, "d")),
+      Seq(PageView("Z3", "home", null, "0", 240000, "d")))
+      .foreach { b => in.addData(b); q.processAllAvailable() }
+    val bounced = spark.table("bd_tws").as[PageView].collect()
+      .map(r => (r.mid, r.ts)).toSet
+    q.stop()
+    // A by entry→entry, then A's second entry, C, Z and Z2 by timer; B
+    // continued; Z3 is still held
+    assert(bounced === Set(("A", 1000L), ("A", 3000L), ("C", 1000L),
+      ("Z", 60000L), ("Z2", 120000L)))
   }
 
   test("log splitter routes five branches and catches dirty lines") {

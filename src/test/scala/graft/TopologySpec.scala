@@ -74,7 +74,7 @@ class TopologySpec extends AnyFunSuite {
 
   test("ingest topology: quality gate → fingerprint dedup as one stream") {
     // The training-data ingest shape: documents stream in, a shuffle-free
-    // quality gate drops junk, and ingestDedup keeps the first arrival per
+    // quality gate drops junk, and ingestDedupTws keeps the first arrival per
     // content fingerprint — duplicates across later batches never land.
     import graft.streaming.StatefulOps
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -86,7 +86,7 @@ class TopologySpec extends AnyFunSuite {
       .select(md5(col("text")).as("fp"), col("doc_id").as("docId"),
         col("doc_id").as("ts"))
       .as[StatefulOps.IngestDoc]
-    val q = StatefulOps.ingestDedup(gated).writeStream
+    val q = StatefulOps.ingestDedupTws(gated).writeStream
       .format("memory").queryName("ingest_topo")
       .outputMode(OutputMode.Append).start()
     in.addData(

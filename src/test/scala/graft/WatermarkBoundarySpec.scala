@@ -2,58 +2,27 @@ package graft
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins the ENGINE's late-row boundary that the stateful operators'
-  * finalization logic depends on, measured rather than assumed:
+/** Pins the ENGINE's late-row boundary that the event-time stateful
+  * operators' finalization logic depends on, measured rather than
+  * assumed: in `transformWithState` EventTime mode the pre-filter drops
+  * rows with eventTime <= watermark (INCLUSIVE — a row exactly AT the
+  * watermark never reaches the processor).
   *
-  *   - flatMapGroupsWithState with NoTimeout applies NO late filter — the
-  *     function sees every row, even below the watermark (the operator
-  *     owns its own lateness policy).
-  *   - with EventTimeTimeout the pre-filter drops rows with eventTime
-  *     <= watermark (INCLUSIVE — a row exactly AT the watermark never
-  *     reaches the function).
-  *
-  * Consequence for `StatefulOps.asofBuffered`: no event with t equal to
+  * Consequence for `StatefulOps.asofBufferedTws`: no event with t equal to
   * the current watermark-second can arrive after that second is current,
-  * so finalizing state strictly below the watermark-second can never lose
-  * an attribution; the strict `<` partition is conservative slack, not a
-  * correctness requirement. If a Spark upgrade ever moves either boundary,
-  * this spec fails first and points at the dependent logic. */
+  * so its ripe/hold partition finalizes the boundary second too
+  * (inclusive `t <= wmSec`). That is required for liveness, not slack: a
+  * strict `<` would hold boundary-second events, and a stream that
+  * quiesces with the watermark exactly at a held event's second would
+  * never emit them. `keepLatestTws`, `bounceDetectorTws` and
+  * `sessionizeTws` run in the same mode and drop the same rows. If a Spark
+  * upgrade ever moves the boundary, this spec fails first and points at
+  * the dependent logic. */
 class WatermarkBoundarySpec extends AnyFunSuite {
   lazy val spark = TestSession.spark
-
-  private def seenWith(timeout: GroupStateTimeout, name: String): Set[(Long, Long)] = {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[(Long, Long)] // (user, t)
-    val ds = in.toDS().toDF("u", "t")
-      .withColumn("eventTime", timestamp_seconds(col("t")))
-      .withWatermark("eventTime", "0 seconds")
-      .as[(Long, Long, java.sql.Timestamp)]
-    val echoed = ds.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, timeout)(
-        (k: Long, it: Iterator[(Long, Long, java.sql.Timestamp)],
-         st: GroupState[Long]) => it.map(e => (k, e._2)))
-    val q = echoed.writeStream.format("memory").queryName(name)
-      .outputMode(OutputMode.Append).start()
-    in.addData((1L, 10L)); q.processAllAvailable() // watermark -> 10 s
-    in.addData((2L, 10L)); q.processAllAvailable() // row == watermark
-    in.addData((3L, 9L));  q.processAllAvailable() // row <  watermark
-    q.stop()
-    spark.table(name).as[(Long, Long)].collect().toSet
-  }
-
-  test("EventTimeTimeout drops rows with eventTime <= watermark (inclusive)") {
-    assert(seenWith(GroupStateTimeout.EventTimeTimeout, "wmb_ett") ===
-      Set((1L, 10L)))
-  }
-
-  test("NoTimeout applies no late filter at all") {
-    assert(seenWith(GroupStateTimeout.NoTimeout, "wmb_none") ===
-      Set((1L, 10L), (2L, 10L), (3L, 9L)))
-  }
 
   test("transformWithState EventTime mode: measure the late-row " +
       "pre-filter boundary (the fMGWS-EventTimeTimeout analog)") {
@@ -93,7 +62,7 @@ class WatermarkBoundarySpec extends AnyFunSuite {
     val got = spark.table("wmb_tws").as[(Long, Long)].collect().toSet
     // MEASURED boundary — pinned so any operator built on tws EventTime
     // mode can rely on it (and a Spark upgrade that moves it fails here
-    // first, the fMGWS probe discipline above)
+    // first)
     assert(got === Set((1L, 10L)),
       s"tws EventTime late-row boundary moved: $got")
   }
@@ -121,7 +90,7 @@ class WatermarkBoundarySpec extends AnyFunSuite {
     // suppressed; the post-eviction redelivery is a NEW row — the
     // documented contract: dedup is exact only WITHIN the watermark
     // window, so upstream must bound duplicate lag by the delay (the
-    // repo's content-keyed StatefulOps.ingestDedup holds state forever
+    // repo's content-keyed StatefulOps.ingestDedupTws holds state forever
     // on RocksDB instead — that is the cross-window-exact tool)
     assert(got === Set((1L, 10L), (2L, 30L), (1L, 31L)))
   }
