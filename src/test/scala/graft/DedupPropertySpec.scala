@@ -1,12 +1,58 @@
 package graft
 
+import graft.streaming.StatefulOps._
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Properties of the batch near-duplicate operators: each blocked or
-  * filtered candidate generator equals brute force on random inputs. */
+/** Properties of the dedup operators: the streaming daily dedup keeps one
+  * row per (key, date) under any batching, and each blocked or filtered
+  * batch candidate generator equals brute force on random inputs. */
 class DedupPropertySpec extends AnyFunSuite {
   lazy val spark = TestSession.spark
   import spark.implicits._
+
+  /** Property: for ANY arrival pattern split across micro-batches (events
+    * in chronological order per key, as a replayed log would be),
+    * dailyDedupTws emits exactly one event per (key, date), the first of
+    * that day: the invariant the reference's ValueState dedup maintains
+    * (DwdTrafficUniqueVisitorDetail.java:69-98). */
+  test("dailyDedup emits exactly one row per (key, date) under random batching") {
+    val rnd = new scala.util.Random(42)
+    val keys = (1 to 20).map(i => s"u$i")
+    val days = Seq("2024-01-01", "2024-01-02", "2024-01-03")
+    // chronological event log: day-major, random per-day activity
+    val events = days.zipWithIndex.flatMap { case (day, di) =>
+      keys.flatMap { k =>
+        val n = rnd.nextInt(4) // 0..3 events for this key this day
+        (0 until n).map(j =>
+          KeyedEvent(k, di * 86400000L + rnd.nextInt(86400000), day))
+      }.sortBy(_.ts)
+    }
+    implicit val sqlCtx = spark.sqlContext
+    val in = MemoryStream[KeyedEvent]
+    val q = dailyDedupTws(in.toDS()).writeStream
+      .format("memory").queryName("ddp").outputMode(OutputMode.Append).start()
+    // split the chronological log into random-sized micro-batches;
+    // skipping a processAllAvailable lets several slices land in one batch
+    var rest = events
+    while (rest.nonEmpty) {
+      val take = 1 + rnd.nextInt(17)
+      in.addData(rest.take(take))
+      if (rnd.nextBoolean()) q.processAllAvailable()
+      rest = rest.drop(take)
+    }
+    q.processAllAvailable()
+    val got = spark.table("ddp").as[KeyedEvent].collect()
+    q.stop()
+    val expected = events.map(e => (e.key, e.date)).distinct.toSet
+    assert(got.map(e => (e.key, e.date)).toSet === expected)
+    assert(got.length === expected.size, "no duplicate emissions")
+    // each emitted row is the FIRST of its (key, day)
+    val firsts = events.groupBy(e => (e.key, e.date))
+      .map { case (_, g) => g.minBy(_.ts) }.toSet
+    assert(got.toSet === firsts)
+  }
 
   /** Property: deletion-neighborhood blocking finds EXACTLY the edit-
     * distance ≤ 1 pairs of any dictionary — completeness (no pair at

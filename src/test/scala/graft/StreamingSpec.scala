@@ -18,6 +18,31 @@ class StreamingSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[KeyedEvent]
     val q = dailyDedupTws(in.toDS()).writeStream
+      .format("memory").queryName("dd").outputMode(OutputMode.Append).start()
+    in.addData(
+      KeyedEvent("u1", 1000, "2024-01-01"),
+      KeyedEvent("u1", 2000, "2024-01-01"),
+      KeyedEvent("u2", 1500, "2024-01-01"))
+    q.processAllAvailable()
+    in.addData(
+      KeyedEvent("u1", 90000000, "2024-01-02"),
+      KeyedEvent("u1", 90000001, "2024-01-02"))
+    q.processAllAvailable()
+    val rows = spark.table("dd").as[KeyedEvent].collect().sortBy(e => (e.key, e.ts))
+    q.stop()
+    assert(rows.toSeq === Seq(
+      KeyedEvent("u1", 1000, "2024-01-01"),
+      KeyedEvent("u1", 90000000, "2024-01-02"),
+      KeyedEvent("u2", 1500, "2024-01-01")))
+  }
+
+  test("dailyDedupTws (transformWithState) ≡ dailyDedup on the same " +
+      "slicing, incl. midnight rollover and cross-batch same-day dups") {
+    // the expected rows are what the flatMapGroupsWithState dailyDedup
+    // emitted on this slicing before it was deleted
+    implicit val sqlCtx = spark.sqlContext
+    val in = MemoryStream[KeyedEvent]
+    val q = dailyDedupTws(in.toDS()).writeStream
       .format("memory").queryName("dd_tws").outputMode(OutputMode.Append)
       .start()
     Seq(
@@ -44,35 +69,30 @@ class StreamingSpec extends AnyFunSuite {
 
   test("dailyDedupTws emits one row per (key, date) under random batching " +
       "(midnight-rollover property)") {
-    val rnd = new scala.util.Random(42)
-    val keys = (1 to 20).map(i => s"u$i")
-    val days = Seq("2024-01-01", "2024-01-02", "2024-01-03")
-    // chronological event log (per-key event-time order is the operator
-    // contract): day-major, 0..3 events per key per day at random times
-    val events = days.zipWithIndex.flatMap { case (day, di) =>
-      keys.flatMap { k =>
-        (0 until rnd.nextInt(4)).map(_ =>
-          KeyedEvent(k, di * 86400000L + rnd.nextInt(86400000), day))
-      }.sortBy(_.ts)
-    }
     implicit val sqlCtx = spark.sqlContext
+    val rnd = new scala.util.Random(17)
+    val days = Seq("2024-01-01", "2024-01-02", "2024-01-03")
+    val events = rnd.shuffle(for {
+      k <- 1 to 5; (d, di) <- days.zipWithIndex; i <- 1 to 4
+    } yield KeyedEvent(s"u$k", di * 86400000L + i * 1000L, d))
+      .sortBy(_.ts) // per-key event-time order is the operator contract
     val in = MemoryStream[KeyedEvent]
     val q = dailyDedupTws(in.toDS()).writeStream
       .format("memory").queryName("dd_tws_prop")
       .outputMode(OutputMode.Append).start()
-    // random-sized micro-batches; skipping a processAllAvailable lets
-    // several slices land in one batch
-    var rest = events
-    while (rest.nonEmpty) {
-      val take = 1 + rnd.nextInt(17)
-      in.addData(rest.take(take))
-      if (rnd.nextBoolean()) q.processAllAvailable()
-      rest = rest.drop(take)
+    // every slice is its own micro-batch, so a key-day's four events
+    // usually straddle batches
+    var i = 0
+    while (i < events.length) {
+      val n = 1 + rnd.nextInt(7)
+      in.addData(events.slice(i, i + n))
+      q.processAllAvailable()
+      i += n
     }
-    q.processAllAvailable()
     val rows = spark.table("dd_tws_prop").as[KeyedEvent].collect()
     q.stop()
     val expected = events.map(e => (e.key, e.date)).toSet
+    assert(expected.size === 15) // 5 keys x 3 days
     assert(rows.map(e => (e.key, e.date)).toSet === expected)
     assert(rows.length === expected.size, "no duplicate (key, date)")
     // each emitted row is the FIRST of its (key, day)
@@ -159,7 +179,7 @@ class StreamingSpec extends AnyFunSuite {
       SessionOut("u1", 200, 200, 1)), s"final sessions: $fin")
   }
 
-  test("ingestDedup emits exactly the first doc per fingerprint across batches") {
+  test("ingestDedupTws (transformWithState) ≡ ingestDedup on the same stream") {
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[IngestDoc]
     val q = ingestDedupTws(in.toDS()).writeStream
@@ -221,7 +241,47 @@ class StreamingSpec extends AnyFunSuite {
       "ingest_tws_ttl sink never reached the expected rows within 60s")
   }
 
+  test("ingestDedup emits exactly the first doc per fingerprint across batches") {
+    implicit val sqlCtx = spark.sqlContext
+    val in = MemoryStream[IngestDoc]
+    val q = ingestDedupTws(in.toDS()).writeStream
+      .format("memory").queryName("ingest_dd").outputMode(OutputMode.Append)
+      .start()
+    Seq(
+      Seq(IngestDoc("fpA", 11L, 1000),
+        IngestDoc("fpA", 10L, 1000), // same batch, same ts: docId breaks tie
+        IngestDoc("fpB", 20L, 1500)),
+      Seq(IngestDoc("fpA", 5L, 500), // earlier ts, later batch: dropped
+        IngestDoc("fpC", 40L, 2500)),
+      Seq(IngestDoc("fpB", 21L, 3000), // later batch duplicates: dropped
+        IngestDoc("fpC", 39L, 2500)))
+      .foreach { b => in.addData(b); q.processAllAvailable() }
+    val rows = spark.table("ingest_dd").as[IngestDoc].collect().sortBy(_.fp)
+    q.stop()
+    // the first ARRIVAL per fingerprint wins, whatever a later doc's ts
+    assert(rows.toSeq === Seq(
+      IngestDoc("fpA", 10L, 1000),
+      IngestDoc("fpB", 20L, 1500),
+      IngestDoc("fpC", 40L, 2500)))
+  }
+
   test("visitorRepair rewrites stale is_new flags") {
+    implicit val sqlCtx = spark.sqlContext
+    val in = MemoryStream[PageView]
+    val q = visitorRepairTws(in.toDS()).writeStream
+      .format("memory").queryName("vr").outputMode(OutputMode.Append).start()
+    in.addData(PageView("m1", "home", null, "1", 1000, "2024-01-01"))
+    q.processAllAvailable()
+    in.addData(PageView("m1", "home", null, "1", 90000000, "2024-01-02"))
+    q.processAllAvailable()
+    val rows = spark.table("vr").as[PageView].collect().sortBy(_.ts)
+    q.stop()
+    assert(rows.map(_.isNew).toSeq === Seq("1", "0"))
+  }
+
+  test("visitorRepairTws (transformWithState) ≡ visitorRepair on the same slicing") {
+    // the expected rows are what the flatMapGroupsWithState visitorRepair
+    // emitted on this slicing before it was deleted
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[PageView]
     val q = visitorRepairTws(in.toDS()).writeStream
@@ -256,18 +316,43 @@ class StreamingSpec extends AnyFunSuite {
       .withWatermark("eventTime", "0 seconds")
       .as[VersionedRow]
     val q = keepLatestTws(withWm, flushMs = 5000).writeStream
-      .format("memory").queryName("kl_tws").outputMode(OutputMode.Append)
-      .start()
+      .format("memory").queryName("kl").outputMode(OutputMode.Append).start()
     in.addData(
       VersionedRow("k1", 1000, "v1"),
       VersionedRow("k1", 5000, "v5"),
       VersionedRow("k1", 3000, "v3"))
     q.processAllAvailable()
-    assert(spark.table("kl_tws").isEmpty) // still held: watermark at 5000
-    Seq(VersionedRow("k2", 60000, "x"), // watermark → 60000 > 5000+5000
-        VersionedRow("k3", 120000, "y"),
-        VersionedRow("k4", 240000, "z")) // extra batch: k3's timer fires
-      .foreach { r => in.addData(r); q.processAllAvailable() }
+    assert(spark.table("kl").isEmpty) // still held: watermark at 5000
+    in.addData(VersionedRow("k2", 60000, "x")) // watermark → 60000 > 5000+5000
+    q.processAllAvailable()
+    in.addData(VersionedRow("k3", 120000, "y"))
+    q.processAllAvailable()
+    val rows = spark.table("kl").as[VersionedRow].collect()
+    q.stop()
+    assert(rows.exists(r => r.key == "k1" && r.payload == "v5"),
+      s"expected latest v5 flushed, got ${rows.toSeq}")
+    assert(!rows.exists(r => r.key == "k1" && r.payload != "v5"))
+  }
+
+  test("keepLatestTws (transformWithState timer) ≡ keepLatest on the same slicing") {
+    // the expected rows are what the flatMapGroupsWithState keepLatest
+    // emitted on this slicing before it was deleted
+    implicit val sqlCtx = spark.sqlContext
+    val in = MemoryStream[VersionedRow]
+    val withWm = in.toDS().toDF()
+      .withColumn("eventTime", timestamp_millis(col("opTs")))
+      .withWatermark("eventTime", "0 seconds")
+      .as[VersionedRow]
+    val q = keepLatestTws(withWm).writeStream
+      .format("memory").queryName("kl_tws").outputMode(OutputMode.Append)
+      .start()
+    Seq(
+      Seq(VersionedRow("k1", 1000, "v1"), VersionedRow("k1", 5000, "v5"),
+        VersionedRow("k1", 3000, "v3")),
+      Seq(VersionedRow("k2", 60000, "x")), // watermark → 60000 > 5000+5000
+      Seq(VersionedRow("k3", 120000, "y")),
+      Seq(VersionedRow("k4", 240000, "z"))) // extra batch: k3's timer fires
+      .foreach { b => in.addData(b); q.processAllAvailable() }
     val rows = spark.table("kl_tws").as[VersionedRow].collect()
       .sortBy(e => (e.key, e.opTs)).toSeq
     q.stop()
@@ -284,6 +369,37 @@ class StreamingSpec extends AnyFunSuite {
       .withWatermark("eventTime", "0 seconds")
       .as[PageView]
     val q = bounceDetectorTws(withWm, timeoutMs = 10000).writeStream
+      .format("memory").queryName("bd").outputMode(OutputMode.Append).start()
+    in.addData(
+      PageView("A", "home", null, "0", 1000, "d"),   // entry, held
+      PageView("A", "home", null, "0", 3000, "d"),   // entry again → bounce(1000)
+      PageView("B", "home", null, "0", 1000, "d"),   // entry, held
+      PageView("B", "detail", "home", "0", 3000, "d"), // continuation → no bounce
+      PageView("C", "home", null, "0", 1000, "d"))   // entry, held → timeout
+    q.processAllAvailable()
+    // advance the watermark far past C's 10 s horizon
+    in.addData(PageView("Z", "home", null, "0", 60000, "d"))
+    q.processAllAvailable()
+    in.addData(PageView("Z2", "home", null, "0", 120000, "d"))
+    q.processAllAvailable()
+    val rows = spark.table("bd").as[PageView].collect()
+    q.stop()
+    val bounced = rows.map(r => (r.mid, r.ts)).toSet
+    assert(bounced.contains(("A", 1000L)), s"A should bounce: $bounced")
+    assert(bounced.contains(("C", 1000L)), s"C should time out: $bounced")
+    assert(!bounced.exists(_._1 == "B"), s"B continued: $bounced")
+  }
+
+  test("bounceDetectorTws (handleExpiredTimer) ≡ bounceDetector on the same slicing") {
+    // the expected set is what the flatMapGroupsWithState bounceDetector
+    // emitted on this slicing before it was deleted
+    implicit val sqlCtx = spark.sqlContext
+    val in = MemoryStream[PageView]
+    val withWm = in.toDS().toDF()
+      .withColumn("eventTime", timestamp_millis(col("ts")))
+      .withWatermark("eventTime", "0 seconds")
+      .as[PageView]
+    val q = bounceDetectorTws(withWm).writeStream
       .format("memory").queryName("bd_tws").outputMode(OutputMode.Append)
       .start()
     Seq(
