@@ -207,7 +207,7 @@ object Bench {
 
     val storeProbes = Seq(
       "dwd_wide" -> "q_dwd_order_wide", "dwd_latest" -> "q_dws_sku_order",
-      "scd2h" -> "q_scd2_history", "bucket" -> "q_rev_by_priority_bucketed",
+      "scd2h" -> "q_scd2_history", "bucket" -> "q_rev_by_priority",
       "textidx" -> "q_delta_dedup", "textsig" -> "q_delta_neardup",
       "corpussurv" -> "q_corpus_filter", "postings" -> "q_inverted_search",
       // embed probe runs AFTER postings in this list: q_hybrid_rrf_dense

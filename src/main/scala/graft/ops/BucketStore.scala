@@ -26,9 +26,13 @@ import org.apache.spark.sql.functions.col
   *
   * The store is registered in the session catalog as EXTERNAL tables
   * (explicit `path` under [[StoreDirs]]) because bucketing metadata
-  * lives in the catalog, not in parquet footers. Memoized via
-  * `catalog.tableExists`, rebuilt per JVM (same freshness contract as
-  * [[DwdStore]]).
+  * lives in the catalog, not in parquet footers.
+  *
+  * Freshness, the same contract as [[DwdStore]]: both the table name and
+  * its directory derive from [[StoreDirs.freshKey]] of the source sfDir,
+  * so a regenerated input gets a new bucketed copy instead of the stale
+  * one. The catalog is the memo: a table already registered under the
+  * current name was built from the current files.
   */
 object BucketStore {
 
@@ -39,21 +43,18 @@ object BucketStore {
 
   private val lock = new Object
 
-  private def sanitize(d: String): String = {
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(d.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-    "g_" + digest
-  }
-
   private def ensure(s: SparkSession, d: String, table: String,
                      src: => DataFrame, key: String): String =
     lock.synchronized {
-      val name = s"${table}_${sanitize(d)}"
+      val fresh = StoreDirs.freshKey(s, d)
+      val digest = java.security.MessageDigest.getInstance("MD5")
+        .digest(fresh.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
+      val name = s"${table}_g_$digest"
       if (!s.catalog.tableExists(name)) {
         src.repartition(NBuckets, col(key))
           .write.mode("overwrite")
           .bucketBy(NBuckets, key).sortBy(key)
-          .option("path", StoreDirs.dirFor(s"bucket_$table", d))
+          .option("path", StoreDirs.dirFor(s"bucket_$table", fresh))
           .saveAsTable(name)
       }
       name
@@ -76,7 +77,7 @@ object BucketStore {
     * scan itself reports `HashPartitioning(u, NBuckets)`, and every
     * round's join reads the edges exchange-free straight off disk. The
     * caller supplies the edge build (graph derivations differ);
-    * memoized per (JVM, sfDir) like the fact tables. */
+    * memoized per input fingerprint like the fact tables. */
   def lpaEdges(s: SparkSession, d: String, src: => DataFrame): DataFrame =
     s.table(ensure(s, d, "lpa_edges", src, "u"))
 }

@@ -15,8 +15,10 @@ import org.apache.spark.sql.functions._
   *     async Phoenix/Redis lookup pipeline, SURVEY J3/J5, collapses into
   *     map-side hash joins);
   *   - fact⋈fact joins (orders⋈lineitem) shuffle on the join key once and
-  *     Catalyst/AQE pick sort-merge vs shuffled-hash; aggregations after the
-  *     join reuse the partial-aggregation path (map-side combine);
+  *     Catalyst/AQE pick sort-merge vs shuffled-hash — or, over the
+  *     orderkey-bucketed [[BucketStore]] tables, do not shuffle at all;
+  *     aggregations after the join reuse the partial-aggregation path
+  *     (map-side combine);
   *   - aggregates emit DECIMAL for money (exactness + determinism across
   *     partition orders) and LONG for counts.
   */
@@ -47,29 +49,20 @@ object Relational extends QueryModule {
           .as("sum_disc_price"),
         count(lit(1)).as("n_rows"))
 
-  /** Fact⋈fact equi-join + agg — SURVEY J1 (order_detail⋈order_info).
-    * Ref: DwdTradeOrderPreProcess.java:141-143. */
+  /** Fact⋈fact equi-join + agg — SURVEY J1 (order_detail⋈order_info) as
+    * the bucketed co-located join, SURVEY J15.
+    * Ref: DwdTradeOrderPreProcess.java:141-143.
+    *
+    * Both sides come from [[BucketStore]] (bucketed+sorted by orderkey,
+    * equal bucket counts) and the `merge` hint pins SortMergeJoin, so the
+    * executed join has NO shuffle exchange and no explicit sort on either
+    * side — the scan's own `HashPartitioning(orderkey, 16)` + file-sorted
+    * buckets satisfy the join's requirements (BucketJoinSpec asserts the
+    * plan); the only exchange left is the priority-grain rollup. At
+    * 100 TB this turns the warehouse's largest recurring exchange into a
+    * one-time table-write cost ([[BucketStore]] scaladoc), the batch form
+    * of the reference keying its DWD topics by order_id. */
   def revenueByPriority(s: SparkSession, d: String): DataFrame =
-    Tables.lineitem(s, d)
-      .join(Tables.orders(s, d), col("l_orderkey") === col("o_orderkey"))
-      .groupBy(col("o_orderpriority"))
-      .agg(
-        count(lit(1)).as("n_items"),
-        sum(col("l_extendedprice").cast("decimal(18,2)"))
-          .cast("double").as("revenue"))
-
-  /** [[revenueByPriority]] over the bucketed store — the co-located-join
-    * scale path. Same join, same rollup, but both sides come from
-    * [[BucketStore]] (bucketed+sorted by orderkey, equal bucket counts)
-    * and the `merge` hint pins SortMergeJoin, so the executed join has NO
-    * shuffle exchange and no explicit sort on either side — the scan's own
-    * `HashPartitioning(orderkey, 16)` + file-sorted buckets satisfy the
-    * join's requirements (BucketJoinSpec asserts the plan). Registers with
-    * the ORIGINAL query's oracle verbatim: the hash gate proves
-    * bucketing-invariance of the result. At 100 TB this turns the
-    * warehouse's largest recurring exchange into a one-time table-write
-    * cost ([[BucketStore]] scaladoc). */
-  def revenueByPriorityBucketed(s: SparkSession, d: String): DataFrame =
     BucketStore.lineitem(s, d).hint("merge")
       .join(BucketStore.orders(s, d).hint("merge"),
         col("l_orderkey") === col("o_orderkey"))
@@ -79,37 +72,25 @@ object Relational extends QueryModule {
         sum(col("l_extendedprice").cast("decimal(18,2)"))
           .cast("double").as("revenue"))
 
-  /** Per-order line aggregation, parameterized over the lineitem source
-    * so the SAME plan runs over plain parquet and the bucketed store. */
-  private def orderLineStatsOf(li: DataFrame): DataFrame =
-    li.groupBy(col("l_orderkey"))
+  /** Per-order line aggregation — the exchange-free per-key rollup,
+    * SURVEY J16. The groupBy key is the natural changelog key and the
+    * bucket key of [[BucketStore.lineitem]]: the scan reports
+    * HashPartitioning(l_orderkey, 16), which already satisfies the
+    * aggregation's required distribution, so EnsureRequirements inserts
+    * NO Exchange anywhere in the plan — partial and final aggregate fuse
+    * over the bucketed scan (BucketJoinSpec asserts the plan shape). The
+    * warehouse's recurring per-key rollups (order totals, per-entity
+    * state rebuilds) ride the same one-time table layout the co-located
+    * join amortizes — at 100 TB, zero shuffle per run instead of the
+    * single largest exchange in the query. */
+  def orderLineStats(s: SparkSession, d: String): DataFrame =
+    BucketStore.lineitem(s, d).groupBy(col("l_orderkey"))
       .agg(
         count(lit(1)).as("n_lines"),
         sum(col("l_quantity").cast("decimal(12,2)")).cast("double")
           .as("qty_sum"),
         sum(col("l_extendedprice").cast("decimal(18,2)")).cast("double")
           .as("revenue"))
-
-  /** Per-order aggregation over plain parquet: the groupBy key is the
-    * natural changelog key, so this costs one full hash exchange of
-    * lineitem — the baseline the bucketed variant removes. */
-  def orderLineStats(s: SparkSession, d: String): DataFrame =
-    orderLineStatsOf(Tables.lineitem(s, d))
-
-  /** The EXCHANGE-FREE aggregation: same rollup over
-    * [[BucketStore.lineitem]]. The scan reports
-    * HashPartitioning(l_orderkey, 16), which already satisfies the
-    * aggregation's required distribution, so EnsureRequirements inserts
-    * NO Exchange anywhere in the plan — partial and final aggregate fuse
-    * over the bucketed scan (BucketJoinSpec asserts the plan shape).
-    * This is the aggregation face of the bucketing story: the warehouse's
-    * recurring per-key rollups (order totals, per-entity state rebuilds)
-    * ride the same one-time table layout the co-located join amortizes —
-    * at 100 TB, zero shuffle per run instead of the single largest
-    * exchange in the query. Shares `q_order_line_stats`'s oracle
-    * VERBATIM: the hash gate proves layout-invariance of the result. */
-  def orderLineStatsBucketed(s: SparkSession, d: String): DataFrame =
-    orderLineStatsOf(BucketStore.lineitem(s, d))
 
   /** Left outer join keeping unmatched left rows — SURVEY J2.
     * Ref: DwdTradeOrderPreProcess.java:144-147 (null-padded optional attrs). */
@@ -1309,8 +1290,10 @@ object Relational extends QueryModule {
         sum(col("o_totalprice").cast("decimal(18,2)"))
           .cast("double").as("month_total"))
 
-  /** Per-customer lifetime order rollup — the FULL recompute that
-    * [[custTotalsIncremental]] maintains incrementally. */
+  /** Per-customer lifetime order rollup, recomputed over all history. The
+    * incremental refresh of the same rollup is [[orderPartials]] /
+    * [[mergeOrderPartials]] / [[finalizeOrderPartials]]; IncrAggSpec
+    * proves it equals the recompute under arbitrary micro-batch slicing. */
   def custTotals(s: SparkSession, d: String): DataFrame =
     Tables.orders(s, d)
       .groupBy(col("o_custkey"))
@@ -1320,38 +1303,21 @@ object Relational extends QueryModule {
         max(date_format(col("o_orderdate"), "yyyy-MM-dd"))
           .as("last_order_day"))
 
-  /** Incremental aggregate maintenance — the lakehouse pattern for a
-    * 100 TB fact table: the rollup is NOT recomputed over all history on
-    * each refresh; the materialized base partials (everything before the
-    * fresh partition) are merged with the delta partition's partials.
-    * Works because every aggregate here is algebraic: counts add, decimal
-    * sums add exactly (no float-order hazard), MAX merges — the same
-    * property Spark's own partial aggregation exploits within one query,
-    * lifted across refresh runs. Merge cost ∝ distinct keys touched, not
-    * fact rows; the delta scan reads ONE partition (at scale the
-    * o_orderdate partition-pruned slice — the filter reaches the scan).
-    *
-    * Base partials are materialized (`localCheckpoint`) before the merge,
-    * so the executed plan genuinely merges stored state with fresh rows
-    * rather than fusing into one recompute; in production the base lives
-    * as the aggregate table itself (Delta/Iceberg MERGE on o_custkey).
-    * Registers with [[custTotals]]' oracle VERBATIM — the hash gate
-    * proves merge-invariance of the refresh. */
-  def custTotalsIncremental(s: SparkSession, d: String): DataFrame = {
-    val cutoff = lit("2001-01-01").cast("timestamp")
-    val base = orderPartials(
-      Tables.orders(s, d).filter(col("o_orderdate") < cutoff))
-      .localCheckpoint()
-    val delta = orderPartials(
-      Tables.orders(s, d).filter(col("o_orderdate") >= cutoff))
-    finalizeOrderPartials(mergeOrderPartials(base, delta))
-  }
-
   /** Partial-aggregate state for the per-customer rollup: count, exact
     * decimal spend (pinned to DECIMAL(30,2) so the stored schema is
-    * stable across arbitrarily many merges), max day. Shared by the
-    * batch refresh above and the streaming foreachBatch refresh
-    * (IncrAggSpec) — one merge algebra, two drivers. */
+    * stable across arbitrarily many merges), max day.
+    *
+    * Incremental aggregate maintenance — the lakehouse pattern for a
+    * 100 TB fact table: the rollup is NOT recomputed over all history on
+    * each refresh; the stored partials are merged with the fresh
+    * partition's partials ([[mergeOrderPartials]]). Works because every
+    * aggregate here is algebraic: counts add, decimal sums add exactly
+    * (no float-order hazard), MAX merges — the same property Spark's own
+    * partial aggregation exploits within one query, lifted across
+    * refresh runs. Merge cost ∝ distinct keys touched, not fact rows; in
+    * production the partials live as the aggregate table itself
+    * (Delta/Iceberg MERGE on o_custkey). IncrAggSpec drives it the
+    * foreachBatch way against a full recompute of [[custTotals]]' rollup. */
   private[graft] def orderPartials(df: DataFrame): DataFrame =
     df.groupBy(col("o_custkey"))
       .agg(count(lit(1)).as("cnt"),
@@ -1797,46 +1763,31 @@ object Relational extends QueryModule {
 
   /** Market-basket pair mining — co-purchased part pairs by support
     * (the apriori/FP-growth k=2 stage, the "customers also bought"
-    * statistic). The self-join is keyed on the ORDER — both sides
-    * shuffle on `l_orderkey`, so the expansion is per-basket items², a
-    * small constant per order, never corpus × corpus — and the pair
-    * counts aggregate map-side. Top-20 by (support DESC, p1, p2) is
-    * `orderBy.limit` = TakeOrderedAndProject: each partition keeps 20
-    * rows, no global sort. */
-  def basketPairs(s: SparkSession, d: String): DataFrame = {
-    val li = Tables.lineitem(s, d)
-      .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-      .distinct()
-    li.as("a")
-      .join(li.as("b"),
-        col("a.ok") === col("b.ok") && col("a.pk") < col("b.pk"))
-      .groupBy(col("a.pk").as("p1"), col("b.pk").as("p2"))
-      .agg(count(lit(1)).as("support"))
+    * statistic) as the bucketed self-join, SURVEY J18. The self-join is
+    * keyed on the ORDER, so the expansion is per-basket items², a small
+    * constant per order, never corpus × corpus, and it runs off the
+    * bucketed lineitem ([[pairSupport]] has the plan). Top-20 by
+    * (support DESC, p1, p2) is `orderBy.limit` = TakeOrderedAndProject:
+    * each partition keeps 20 rows, no global sort. */
+  def basketPairs(s: SparkSession, d: String): DataFrame =
+    pairSupport(s, d)
       .orderBy(col("support").desc, col("p1").asc, col("p2").asc)
       .limit(20)
-  }
 
-  /** Scale-path rewrite of [[basketPairs]] over the BUCKETED lineitem
-    * table ([[BucketStore]]) — the bucketing family's SELF-JOIN member
-    * (J15 amortized the orders⋈lineitem exchange, J16 the orderkey
-    * aggregation; this is the basket items² expansion). The scan reports
-    * `HashPartitioning(l_orderkey)`, which satisfies BOTH the (ok, pk)
+  /** Co-purchase support of every part pair (p1 < p2), shared by
+    * [[basketPairs]] and the [[basketCommunities]] graph build. It reads
+    * [[BucketStore.lineitem]], whose scan reports
+    * `HashPartitioning(l_orderkey)`. That satisfies BOTH the (ok, pk)
     * distinct's clustered distribution (a partitioning on a SUBSET of
     * the grouping keys co-locates every group) AND the self-join's
-    * required distribution, so the only Exchange left in the whole plan
-    * is the inherent pair-grain count (pairs from different orders must
-    * meet somewhere) — the input-sized order-keyed shuffle is gone,
-    * amortized into the one-time bucketed write. Registered under
-    * `q_basket_pairs`'s oracle VERBATIM: the hash gate proves
-    * layout-invariance every round (the J15/J16 discipline).
-    * BucketJoinSpec pins the plan: exchanges hash only the pair keys,
-    * never the orderkey. Honest local measurement: a WASH at sf0.1
-    * (1.52 vs 1.55 s) — the pair-grain expansion dominates at this
-    * volume; the exchange this removes scales with INPUT size while the
-    * one it keeps scales with collision count, so the gap opens with
-    * scale (and [[basketCommunities]], which rides the same spine,
-    * measured 2.58 → 2.27 s). */
-  def basketPairsBucketed(s: SparkSession, d: String): DataFrame = {
+    * required distribution, so the only Exchange in the plan is the
+    * inherent pair-grain count (pairs from different orders must meet
+    * somewhere): the input-sized order-keyed shuffle is amortized into
+    * the one-time bucketed write. The exchange this removes scales with
+    * INPUT size while the one it keeps scales with collision count, so
+    * the gap opens with scale. BucketJoinSpec pins the plan: exchanges
+    * hash only the pair keys, never the orderkey. */
+  private def pairSupport(s: SparkSession, d: String): DataFrame = {
     val li = BucketStore.lineitem(s, d)
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
       .distinct()
@@ -1845,8 +1796,6 @@ object Relational extends QueryModule {
         col("a.ok") === col("b.ok") && col("a.pk") < col("b.pk"))
       .groupBy(col("a.pk").as("p1"), col("b.pk").as("p2"))
       .agg(count(lit(1)).as("support"))
-      .orderBy(col("support").desc, col("p1").asc, col("p2").asc)
-      .limit(20)
   }
 
   /** Rounds of synchronous label propagation for [[basketCommunities]];
@@ -1859,7 +1808,7 @@ object Relational extends QueryModule {
     * Rev. E 2007) next to PageRank (centrality), connected components
     * (reachability) and triangles (cohesion): "which products cluster
     * in baskets" is the catalog/recommender grouping a merchandiser
-    * reads. Edges are [[basketPairs]]' pair table gated at support ≥ 2
+    * reads. Edges are [[pairSupport]]'s pair table gated at support ≥ 2
     * (the apriori pruning rule; support-1 pairs are coincidence at this
     * corpus's uniform basket fill), mirrored to both directions.
     *
@@ -1947,28 +1896,11 @@ object Relational extends QueryModule {
       // double-compute [[OrderWide.versions]] documents), doubling the
       // store build that VERDICT r15 #5 flagged at ~half the driver's
       // bench wall-clock. Row-identical output, half the build compute.
-      basketGraph(s, d).select(explode(array(
+      pairSupport(s, d).filter(col("support") >= 2).select(explode(array(
           struct(col("p1").as("v"), col("p2").as("u")),
           struct(col("p2").as("v"), col("p1").as("u")))).as("e"))
         .select(col("e.v").as("v"), col("e.u").as("u"))
     })
-
-  /** The support-gated co-purchase graph shared by both LPA faces.
-    * Rides the bucketed lineitem table like [[basketPairsBucketed]] —
-    * the distinct and the self-join both satisfy their distributions
-    * off the scan's HashPartitioning, so the graph build's only
-    * Exchange is the pair-grain support count. */
-  private def basketGraph(s: SparkSession, d: String): DataFrame = {
-    val li = BucketStore.lineitem(s, d)
-      .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-      .distinct()
-    li.as("a")
-      .join(li.as("b"),
-        col("a.ok") === col("b.ok") && col("a.pk") < col("b.pk"))
-      .groupBy(col("a.pk").as("p1"), col("b.pk").as("p2"))
-      .agg(count(lit(1)).as("support"))
-      .filter(col("support") >= 2)
-  }
 
   private def communitiesOf(labels: DataFrame): DataFrame =
     labels
@@ -2037,7 +1969,7 @@ object Relational extends QueryModule {
     *   2. repartitions the join output by `v` once, so BOTH argmax
     *      aggregations run exchange-free on top of it (a partitioning
     *      on a subset of the grouping keys co-locates every group —
-    *      the [[basketPairsBucketed]] subset-clustering device).
+    *      the [[pairSupport]] subset-clustering device).
     * Per-round exchange volume: |labels| + |edge-grain votes|, never
     * edges×rounds re-partitionings and never a vertex-sized broadcast.
     * LpaPlanSpec pins the plan (no BroadcastExchange anywhere, the
@@ -2111,7 +2043,7 @@ object Relational extends QueryModule {
       // satisfies the NEXT round's join on u with zero label exchange
       // too); both argmax aggregations ride it — a partitioning on a
       // subset of the grouping keys co-locates every group (the
-      // basketPairsBucketed subset-clustering device)
+      // pairSupport subset-clustering device)
       lbl = e.join(
           lbl.withColumnRenamed("v", "u").hint("shuffle_hash"), Seq("u"))
         .repartition(n, col("v"))
@@ -2779,9 +2711,7 @@ object Relational extends QueryModule {
   override val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q_pricing_summary"   -> pricingSummary _,
     "q_rev_by_priority"   -> revenueByPriority _,
-    "q_rev_by_priority_bucketed" -> revenueByPriorityBucketed _,
     "q_order_line_stats"  -> orderLineStats _,
-    "q_order_line_stats_bucketed" -> orderLineStatsBucketed _,
     "q_cust_order_left"   -> custOrderLeft _,
     "q_commodity_full_outer" -> commodityFullOuter _,
     "q_star_dim_chain"    -> starDimChain _,
@@ -2815,7 +2745,6 @@ object Relational extends QueryModule {
     "q_filter_project"    -> filterProject _,
     "q_orders_per_month"  -> ordersPerMonth _,
     "q_cust_totals"       -> custTotals _,
-    "q_cust_totals_incr"  -> custTotalsIncremental _,
     "q_value_quantiles"   -> valueQuantiles _,
     "q_value_mad"         -> valueMad _,
     "q_trend_slope"       -> trendSlope _,
@@ -2825,7 +2754,6 @@ object Relational extends QueryModule {
     "q_mode_per_group"    -> modePerGroup _,
     "q_gini_segment"      -> giniSegment _,
     "q_basket_pairs"      -> basketPairs _,
-    "q_basket_pairs_bucketed" -> basketPairsBucketed _,
     "q_basket_communities" -> basketCommunities _,
     "q_basket_communities_copart" -> basketCommunitiesCopart _,
     "q_basket_communities_bucketed" -> basketCommunitiesBucketed _,
@@ -2853,35 +2781,6 @@ object Relational extends QueryModule {
     "q_trailing_7d"       -> trailing7d _,
     "q_ntile_custbal"     -> ntileCustbal _,
   )
-
-  /** Shared by `q_fuzzy_brand` and `q_fuzzy_brand_blocked`: the blocked
-    * path must match the broadcast nested-loop exactly. */
-  /** Shared by `q_cust_totals` and its incremental-maintenance rewrite —
-    * the hash gate proves the merge-refresh reproduces the full
-    * recompute exactly. */
-  private val custTotalsSql: String =
-    """SELECT o_custkey, COUNT(*) AS n_orders,
-      |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_spend,
-      |  MAX(strftime(o_orderdate, '%Y-%m-%d')) AS last_order_day
-      |FROM orders GROUP BY o_custkey""".stripMargin
-
-  /** Shared by `q_rev_by_priority` and its bucketed rewrite — both must
-    * produce the identical rollup (bucketing-invariance via hash gate). */
-  private val revByPrioritySql: String =
-    """SELECT o_orderpriority, COUNT(*) AS n_items,
-      |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
-      |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-      |GROUP BY o_orderpriority""".stripMargin
-
-  /** Shared by `q_basket_pairs` and its bucketed self-join rewrite —
-    * identical mining, layout-invariance via hash gate. */
-  private val basketPairsSql: String =
-    """WITH li AS (
-      |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem)
-      |SELECT a.pk AS p1, b.pk AS p2, COUNT(*) AS support
-      |FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk
-      |GROUP BY 1, 2
-      |ORDER BY support DESC, p1 ASC, p2 ASC LIMIT 20""".stripMargin
 
   /** Shared by `q_basket_communities` (broadcast label frame) and
     * `q_basket_communities_copart` (co-partitioned labels, never
@@ -2922,15 +2821,6 @@ object Relational extends QueryModule {
       |  MIN(v) AS min_member
       |FROM l3 GROUP BY lbl""".stripMargin
 
-  /** Shared by `q_order_line_stats` and its exchange-free bucketed
-    * rewrite — identical rollup, layout-invariance via hash gate. */
-  private val orderLineStatsSql: String =
-    """SELECT l_orderkey, COUNT(*) AS n_lines,
-      |  CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS qty_sum,
-      |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE)
-      |    AS revenue
-      |FROM lineitem GROUP BY 1""".stripMargin
-
   /** Shared by `q_rfm_segments` and its histogram-rank scale rewrite
     * `q_rfm_segments_hist` — the hash gate proves quintile-invariance of
     * the partitioned prefix-sum rank vs the global NTILE sorts. */
@@ -2958,6 +2848,8 @@ object Relational extends QueryModule {
       |    AS avg_cents
       |FROM scored GROUP BY 1, 2, 3""".stripMargin
 
+  /** Shared by `q_fuzzy_brand` and `q_fuzzy_brand_blocked`: the blocked
+    * path must match the broadcast nested-loop exactly. */
   private val fuzzyBrandSql: String =
     """WITH b AS (SELECT DISTINCT p_brand FROM part)
       |SELECT x.p_brand AS b1, y.p_brand AS b2,
@@ -2973,13 +2865,17 @@ object Relational extends QueryModule {
         |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(4,2)))) AS DOUBLE) AS sum_disc_price,
         |  COUNT(*) AS n_rows
         |FROM lineitem GROUP BY l_returnflag, l_linestatus""".stripMargin,
-    "q_rev_by_priority" -> revByPrioritySql,
-    // the bucketed rewrite shares the oracle VERBATIM: hash gate =
-    // bucketing-invariance proof (CLAUDE.md scale-path discipline)
-    "q_rev_by_priority_bucketed" -> revByPrioritySql,
-    "q_order_line_stats" -> orderLineStatsSql,
-    // exchange-free bucketed aggregation, same oracle VERBATIM
-    "q_order_line_stats_bucketed" -> orderLineStatsSql,
+    "q_rev_by_priority" ->
+      """SELECT o_orderpriority, COUNT(*) AS n_items,
+        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
+        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+        |GROUP BY o_orderpriority""".stripMargin,
+    "q_order_line_stats" ->
+      """SELECT l_orderkey, COUNT(*) AS n_lines,
+        |  CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS qty_sum,
+        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE)
+        |    AS revenue
+        |FROM lineitem GROUP BY 1""".stripMargin,
     "q_cust_order_left" ->
       """SELECT c_mktsegment,
         |  COUNT(DISTINCT c_custkey) AS n_customers,
@@ -3426,10 +3322,13 @@ object Relational extends QueryModule {
         |  CAST(six2 - (n + 1) * CAST(sx AS DECIMAL(38,0)) AS DOUBLE)
         |    / CAST(CAST(n AS DECIMAL(38,0)) * sx AS DOUBLE) AS gini
         |FROM m""".stripMargin,
-    "q_basket_pairs" -> basketPairsSql,
-    // VERBATIM shared with q_basket_pairs: the hash gate proves the
-    // bucketed-layout rewrite is output-invariant (J15/J16 discipline)
-    "q_basket_pairs_bucketed" -> basketPairsSql,
+    "q_basket_pairs" ->
+      """WITH li AS (
+        |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem)
+        |SELECT a.pk AS p1, b.pk AS p2, COUNT(*) AS support
+        |FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk
+        |GROUP BY 1, 2
+        |ORDER BY support DESC, p1 ASC, p2 ASC LIMIT 20""".stripMargin,
     // unrolls the EXACT LpaRounds synchronous rounds over the same
     // support>=2 co-purchase spine; argmax encoded/decoded identically
     // (see [[basketCommunities]] — keep the two in lockstep)
@@ -3949,9 +3848,10 @@ object Relational extends QueryModule {
         |  COUNT(*) AS n_orders,
         |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS month_total
         |FROM orders GROUP BY 1""".stripMargin,
-    "q_cust_totals"      -> custTotalsSql,
-    // the incremental-merge rewrite shares the oracle VERBATIM: hash gate
-    // = merge-invariance proof (CLAUDE.md scale-path discipline)
-    "q_cust_totals_incr" -> custTotalsSql,
+    "q_cust_totals" ->
+      """SELECT o_custkey, COUNT(*) AS n_orders,
+        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_spend,
+        |  MAX(strftime(o_orderdate, '%Y-%m-%d')) AS last_order_day
+        |FROM orders GROUP BY o_custkey""".stripMargin,
   )
 }

@@ -11,9 +11,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * persistent store (read → merge → overwrite, the foreachBatch analog of
   * a Delta MERGE), and the finalized store must equal the full batch
   * recompute over everything ingested — for ANY batch boundary placement.
-  * `q_cust_totals_incr` proves one cutoff against the DuckDB oracle; this
-  * spec proves the merge algebra under arbitrary slicing and repeated
-  * application (the store passes through the merge once per batch). */
+  * This is the proof of the merge algebra (`orderPartials` /
+  * `mergeOrderPartials` / `finalizeOrderPartials`) under arbitrary
+  * slicing and repeated application (the store passes through the merge
+  * once per batch). The recompute is the `q_cust_totals` rollup, spelled
+  * out below over the same rows. */
 case class IncrOrd(o_custkey: Long, o_totalprice: Double,
     o_orderdate: java.sql.Timestamp)
 
