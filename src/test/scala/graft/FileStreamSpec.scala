@@ -1,9 +1,12 @@
 package graft
 
 import graft.streaming.LogSplitter
+import graft.streaming.StatefulOps.{VersionedRow, keepLatestTws}
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The BaseLogApp-shaped pipeline over a REAL file source with REAL
@@ -21,6 +24,49 @@ class FileStreamSpec extends AnyFunSuite {
 
   private def line(mid: String, ts: Long): String =
     s"""{"common":{"mid":"$mid"},"page":{"page_id":"home"},"ts":$ts}"""
+
+  private val versionedSchema = "key STRING, opTs LONG, payload STRING"
+
+  /** File `i` of `rows` in `src`, modified at `t0 + i` seconds: the source
+    * takes files in modification-time order, one per trigger. */
+  private def writeVersions(src: String, t0: Long, i: Int,
+      rows: Seq[VersionedRow]): Unit = {
+    writeLines(src, f"f$i%02d.json", rows.map(r =>
+      s"""{"key":"${r.key}","opTs":${r.opTs},"payload":"${r.payload}"}"""))
+    Files.setLastModifiedTime(Paths.get(src, f"f$i%02d.json"),
+      java.nio.file.attribute.FileTime.fromMillis(t0 + 1000L * i))
+  }
+
+  /** `keepLatestTws` over `src`, one file per trigger, into parquet. */
+  private def startKeepLatest(s: SparkSession, src: String, ckpt: String,
+      out: String): StreamingQuery = {
+    import s.implicits._
+    keepLatestTws(s.readStream.schema(versionedSchema)
+        .option("maxFilesPerTrigger", 1).json(src)
+        .withColumn("eventTime", timestamp_millis(col("opTs")))
+        .withWatermark("eventTime", "0 seconds").as[VersionedRow],
+        flushMs = 5000)
+      .toDF().writeStream.format("parquet")
+      .option("checkpointLocation", ckpt)
+      .start(out)
+  }
+
+  private def sinkRows(out: String): Seq[VersionedRow] = {
+    import spark.implicits._
+    spark.read.parquet(out).as[VersionedRow].collect().sortBy(_.key).toSeq
+  }
+
+  /** The batch keep-latest over every line of `src`. The `flush` event's
+    * own timer lies past every watermark, so the stream still holds it. */
+  private def batchKeepLatest(src: String): Seq[VersionedRow] = {
+    import spark.implicits._
+    spark.read.schema(versionedSchema).json(src)
+      .filter(col("key") =!= "flush")
+      .withColumn("rn", row_number().over(
+        Window.partitionBy(col("key")).orderBy(col("opTs").desc)))
+      .filter(col("rn") === 1).drop("rn")
+      .as[VersionedRow].collect().sortBy(_.key).toSeq
+  }
 
   test("file source + checkpointLocation: restart resumes, exactly one " +
       "output row per input line") {
@@ -101,26 +147,17 @@ class FileStreamSpec extends AnyFunSuite {
 
   test("transformWithState restart ≡ batch: keepLatestTws resumes its held " +
       "rows and event-time timers from the checkpoint") {
-    import graft.streaming.StatefulOps.{VersionedRow, keepLatestTws}
     import org.apache.commons.io.FileUtils
-    import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.streaming.StreamingQueryException
-    import spark.implicits._
     val src = Files.createTempDirectory("klsrc").toString
     val out = Files.createTempDirectory("klout").toString
     val ckpt = Files.createTempDirectory("klckpt").toString
-    val schema = "key STRING, opTs LONG, payload STRING"
     val t0 = System.currentTimeMillis() - 100000L
     // file i holds event times in [1000 i, 1000 i + 900] past 10^6, so no row
     // is ever behind the watermark: the stream drops nothing the batch keeps.
     // `hot` and `p*` are updated more often than they flush; `c<i>` once
-    def file(i: Int, rows: Seq[VersionedRow]): Unit = {
-      writeLines(src, f"f$i%02d.json", rows.map(r =>
-        s"""{"key":"${r.key}","opTs":${r.opTs},"payload":"${r.payload}"}"""))
-      // the source takes files in modification-time order, one per trigger
-      Files.setLastModifiedTime(Paths.get(src, f"f$i%02d.json"),
-        java.nio.file.attribute.FileTime.fromMillis(t0 + 1000L * i))
-    }
+    def file(i: Int, rows: Seq[VersionedRow]): Unit =
+      writeVersions(src, t0, i, rows)
     def versions(i: Int): Seq[VersionedRow] = {
       val t = 1000000L + 1000L * i
       Seq(VersionedRow(s"c$i", t + 300, s"c$i-new"),
@@ -128,21 +165,15 @@ class FileStreamSpec extends AnyFunSuite {
         VersionedRow(s"c$i", t + 100, s"c$i-old"),
         VersionedRow(s"p${i % 3}", t + 700, s"p$i"))
     }
-    def start(ckpt: String, out: String) = keepLatestTws(spark.readStream
-        .schema(schema).option("maxFilesPerTrigger", 1).json(src)
-        .withColumn("eventTime", timestamp_millis(col("opTs")))
-        .withWatermark("eventTime", "0 seconds").as[VersionedRow],
-        flushMs = 5000)
-      .toDF().writeStream.format("parquet")
-      .option("checkpointLocation", ckpt)
-      .start(out)
+    def start(ckpt: String, out: String) =
+      startKeepLatest(spark, src, ckpt, out)
 
     (0 until 14).foreach(i => file(i, versions(i)))
     val q1 = start(ckpt, out)
     q1.processAllAvailable()
     q1.stop()
     assert(q1.recentProgress.count(_.numInputRows > 0) >= 12)
-    val beforeStop = spark.read.parquet(out).as[VersionedRow].collect()
+    val beforeStop = sinkRows(out)
     assert(beforeStop.exists(_.key == "c0") &&
       !beforeStop.exists(_.key == "c13"), s"flushed before the stop: $beforeStop")
 
@@ -174,17 +205,55 @@ class FileStreamSpec extends AnyFunSuite {
     q2.processAllAvailable()
     q2.stop()
 
-    val got = spark.read.parquet(out).as[VersionedRow].collect()
-      .sortBy(_.key).toSeq
-    // the flush event's own timer lies past every watermark: it stays held
-    val expected = spark.read.schema(schema).json(src)
-      .filter(col("key") =!= "flush")
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("key")).orderBy(col("opTs").desc)))
-      .filter(col("rn") === 1).drop("rn")
-      .as[VersionedRow].collect().sortBy(_.key).toSeq
-    assert(got === expected)
+    val got = sinkRows(out)
+    assert(got === batchKeepLatest(src))
     assert(got.map(_.key).contains("c13") &&
       got.find(_.key == "hot").map(_.payload) === Some("hot14"), s"$got")
+  }
+
+  test("a checkpoint keeps its state width: started at 4 state partitions, " +
+      "it restarts at 4 on a width-1 session and stays ≡ batch") {
+    val src = Files.createTempDirectory("kwsrc").toString
+    val out = Files.createTempDirectory("kwout").toString
+    val ckpt = Files.createTempDirectory("kwckpt").toString
+    val t0 = System.currentTimeMillis() - 100000L
+    def file(i: Int, rows: Seq[VersionedRow]): Unit =
+      writeVersions(src, t0, i, rows)
+    def versions(i: Int): Seq[VersionedRow] = {
+      val t = 1000000L + 1000L * i
+      (0 until 8).map(k => VersionedRow(s"k$k", t + k, s"k$k-$i")) :+
+        VersionedRow(s"c$i", t + 500, s"c$i")
+    }
+    def start(s: SparkSession) = startKeepLatest(s, src, ckpt, out)
+    // the highest state version each partition directory holds
+    def stateVersions(): Map[String, Long] =
+      Paths.get(ckpt, "state", "0").toFile.listFiles()
+        .filter(f => f.isDirectory && f.getName.matches("\\d+"))
+        .map(d => d.getName -> d.list().flatMap(n =>
+          "^\\d+".r.findFirstIn(n).map(_.toLong)).max)
+        .toMap
+
+    // a checkpoint made before the state width became 1
+    val wide = spark.newSession()
+    wide.conf.set("spark.sql.shuffle.partitions", "4")
+    (0 until 4).foreach(i => file(i, versions(i)))
+    val q1 = start(wide)
+    try q1.processAllAvailable() finally q1.stop()
+    val before = stateVersions()
+    assert(before.keySet === Set("0", "1", "2", "3"))
+
+    file(4, versions(4))
+    file(5, versions(5))
+    file(6, Seq(VersionedRow("flush", 10000000L, "f")))
+    assert(spark.conf.get("spark.sql.shuffle.partitions") === "1")
+    val q2 = start(spark)
+    try q2.processAllAvailable() finally q2.stop()
+    assert(q2.recentProgress.count(_.numInputRows > 0) === 3)
+    val after = stateVersions()
+    assert(after.keySet === before.keySet)
+    assert(after.forall { case (p, v) => v > before(p) },
+      s"a partition was not written after the restart: $before -> $after")
+
+    assert(sinkRows(out) === batchKeepLatest(src))
   }
 }

@@ -24,6 +24,31 @@ class RocksDbStateSpec extends AnyFunSuite {
       .contains("RocksDBStateStoreProvider"))
   }
 
+  test("batch shuffles at the core count; a new stateful query runs one " +
+      "state partition") {
+    import java.nio.file.{Files, Paths}
+    // batch: AQE's initial width, which numShufflePartitions returns
+    assert(spark.sessionState.conf.numShufflePartitions ===
+      GraftSession.defaultCpus)
+    // stream: `shuffle.partitions`, frozen into the checkpoint at first start
+    val src = Files.createTempDirectory("widthsrc").toString
+    val out = Files.createTempDirectory("widthout").toString
+    val ckpt = Files.createTempDirectory("widthckpt").toString
+    Files.write(Paths.get(src, "f0.json"), (0 until 20).map(k =>
+      s"""{"key":"k$k","opTs":${1000000L + k},"payload":"p$k"}""")
+      .mkString("\n").getBytes("UTF-8"))
+    val q = keepLatestTws(spark.readStream
+        .schema("key STRING, opTs LONG, payload STRING").json(src)
+        .withColumn("eventTime", timestamp_millis(col("opTs")))
+        .withWatermark("eventTime", "0 seconds").as[VersionedRow])
+      .toDF().writeStream.format("parquet")
+      .option("checkpointLocation", ckpt).start(out)
+    try q.processAllAvailable() finally q.stop()
+    val parts = Paths.get(ckpt, "state", "0").toFile.listFiles()
+      .filter(f => f.isDirectory && f.getName.matches("\\d+")).map(_.getName)
+    assert(parts.toSeq === Seq("0"))
+  }
+
   test("ingestDedup runs its dedup markers in RocksDB state") {
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[IngestDoc]
