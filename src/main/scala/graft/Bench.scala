@@ -72,6 +72,22 @@ import org.apache.spark.sql.SparkSession
   * escalates to the full run count and the dispersion-flagged isolation.
   */
 object Bench {
+
+  /** Store pre-build probes: (store tag, the cheapest registered query
+    * that builds the store). Order matters — q_hybrid_rrf_dense touches
+    * both the postings and the embed store, so running it AFTER postings
+    * charges each build to its own line (the dense probe then pays only
+    * the embed build). */
+  val storeProbes: Seq[(String, String)] = Seq(
+    "dwd_wide" -> "q_dwd_order_wide", "dwd_latest" -> "q_dws_sku_order",
+    "scd2h" -> "q_scd2_history", "bucket" -> "q_rev_by_priority",
+    "textidx" -> "q_delta_dedup", "textsig" -> "q_delta_neardup",
+    "corpussurv" -> "q_corpus_filter", "postings" -> "q_inverted_search",
+    "embed" -> "q_hybrid_rrf_dense",
+    "pqindex" -> "q_ann_pq", "anntruth" -> "q_ann_recall",
+    "compact" -> "q_compaction_exec", "zexec" -> "q_zorder_exec",
+    "lpaedges" -> "q_basket_communities_bucketed")
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
@@ -205,46 +221,33 @@ object Bench {
       }
     }))
 
-    val storeProbes = Seq(
-      "dwd_wide" -> "q_dwd_order_wide", "dwd_latest" -> "q_dws_sku_order",
-      "scd2h" -> "q_scd2_history", "bucket" -> "q_rev_by_priority",
-      "textidx" -> "q_delta_dedup", "textsig" -> "q_delta_neardup",
-      "corpussurv" -> "q_corpus_filter", "postings" -> "q_inverted_search",
-      // embed probe runs AFTER postings in this list: q_hybrid_rrf_dense
-      // touches both stores, and the ordering charges each build to its
-      // own line (the dense probe then pays only the embed build)
-      "embed" -> "q_hybrid_rrf_dense",
-      "pqindex" -> "q_ann_pq", "anntruth" -> "q_ann_recall",
-      "compact" -> "q_compaction_exec", "zexec" -> "q_zorder_exec",
-      "lpaedges" -> "q_basket_communities_bucketed")
+    val prebuild = !(isChild || args.nonEmpty ||
+      sys.env.get("SPARK_GRAFT_BENCH_PREBUILD").contains("0"))
     val storeTimes: Seq[(String, Double)] =
-      if (isChild || args.nonEmpty ||
-          sys.env.get("SPARK_GRAFT_BENCH_PREBUILD").contains("0")) Nil
-      else storeProbes.iterator.takeWhile(_ => !timeUp).flatMap {
+      if (!prebuild) Nil
+      else storeProbes.iterator.takeWhile(_ => !timeUp).map {
         case (tag, qn) =>
-          SparkEntry.queries.get(qn).map { fn =>
-            val t = try time(fn) catch { case e: Throwable =>
-              System.err.println(s"[bench-stores] $tag ($qn) failed: " +
-                e.getMessage); -1.0 }
-            GraftSession.releaseCaches(spark)
-            if (t >= 0) storeSecSoFar += t
-            (tag, t)
-          }
+          // resolved outside the try: a probe naming an unregistered
+          // query throws instead of dropping its store from the record
+          val fn = SparkEntry.queries.getOrElse(qn,
+            throw new IllegalStateException(
+              s"store probe $tag names unregistered query $qn"))
+          val t = try time(fn) catch { case e: Throwable =>
+            System.err.println(s"[bench-stores] $tag ($qn) failed: " +
+              e.getMessage); -1.0 }
+          GraftSession.releaseCaches(spark)
+          if (t >= 0) storeSecSoFar += t
+          (tag, t)
       }.toSeq
     // a deadline that lands mid-prebuild must say so, like the sweep does
     // (ADVICE r15): log the dropped probe tags and carry the count into
     // every record below via `deadline_truncated`
-    val storesSkipped =
-      if (isChild || args.nonEmpty ||
-          sys.env.get("SPARK_GRAFT_BENCH_PREBUILD").contains("0")) 0
-      else storeProbes.count(p => SparkEntry.queries.contains(p._2)) -
-        storeTimes.size
+    val storesSkipped = if (prebuild) storeProbes.size - storeTimes.size else 0
     if (storesSkipped > 0) {
       deadlineSkipped += storesSkipped
       System.err.println(s"[bench-stores] deadline: skipped $storesSkipped " +
-        "unprobed stores: " + storeProbes.filter(p =>
-          SparkEntry.queries.contains(p._2))
-          .drop(storeTimes.size).map(_._1).mkString(","))
+        "unprobed stores: " +
+        storeProbes.drop(storeTimes.size).map(_._1).mkString(","))
     }
 
     val sweepOrder = selected.toSeq.sortBy(_._1)

@@ -7,8 +7,8 @@ import org.apache.spark.sql.functions._
   * unchanged — find where it goes). Every stage calls the SHIPPED
   * pipeline code ([[ops.TextOps.minhashSignaturesOf]] /
   * [[ops.TextOps.lshCandidates]] / [[ops.TextOps.verifySimPairs]]) with
-  * barriers between stages — the ProfileNgb discipline. Not part of the
-  * driver contract; run via
+  * barriers between stages. A dev tool, not a Verify or Bench surface;
+  * run via
   * `sbt "runMain graft.ProfileNdp /root/testdata/sf0.1"`. */
 object ProfileNdp {
   def main(args: Array[String]): Unit = {

@@ -161,10 +161,11 @@ object CatalogOps extends QueryModule {
   /** Small-file compaction plan over the events table's (event_type, day)
     * partitions: per type in day order, partitions are packed whole into
     * output files of ≈[[CompactTargetBytes]] via the exclusive-prefix-sum
-    * bin device (`bin = cum_before div target` — the same associative
-    * scan `q_seq_packing_sharded` parallelizes, so the planner itself
-    * shards at scale). Emits one row per planned output file with its
-    * merge range and fill ratio. */
+    * bin device (`bin = cum_before div target`, the running-sum packing
+    * of `q_seq_packing`). Limit: each event type's running sum is one
+    * window task — fine for a metastore-sized partition list, serial per
+    * type past it. Emits one row per planned output file with its merge
+    * range and fill ratio. */
   def compactionPlan(s: SparkSession, d: String): DataFrame =
     partBins(s, d)
       .groupBy(col("event_type"), col("bin_id"))

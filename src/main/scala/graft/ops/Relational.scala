@@ -1032,8 +1032,9 @@ object Relational extends QueryModule {
     * brand pairs by edit distance ≤ 1. The quadratic self-join runs over
     * DISTINCT values (vocabulary-sized, broadcast), never over rows — the
     * dim-hygiene shape (typo'd brand/category labels) where the
-    * dictionary stays small as data grows. A dictionary too big to
-    * broadcast takes the [[fuzzyBrandBlocked]] path. */
+    * dictionary stays small as data grows. Limit: the dictionary must
+    * fit a broadcast, and the compare is O(|dict|²) — a dictionary past
+    * that needs the exact blocked engine [[blockedNearPairs]]. */
   def fuzzyBrand(s: SparkSession, d: String): DataFrame = {
     val b = Tables.part(s, d).select(col("p_brand")).distinct()
     b.as("x").join(broadcast(b.as("y")), col("x.p_brand") < col("y.p_brand"))
@@ -1041,28 +1042,6 @@ object Relational extends QueryModule {
         levenshtein(col("x.p_brand"), col("y.p_brand")).as("dist"))
       .filter(col("dist") <= 1)
   }
-
-  /** [[fuzzyBrand]] for dictionaries too large to broadcast — blocked
-    * candidates-then-verify instead of the O(|dict|²) nested-loop compare.
-    *
-    * Block key = the DELETION NEIGHBORHOOD (SymSpell's device): every
-    * string keys on itself plus each single-character deletion. Two
-    * strings at edit distance ≤ 1 ALWAYS share a key (substitution at i →
-    * both delete i; insertion/deletion → the shorter string IS a deletion
-    * variant of the longer), so unlike q-gram LSH this blocking is exact —
-    * recall 1.0 by construction, which is why the entry shares
-    * `q_fuzzy_brand`'s oracle verbatim: the hash gate proves
-    * blocking-invariance against the broadcast form.
-    *
-    * Scale shape: |dict|×(len+1) keys shuffle-join on the variant string —
-    * bucket size ∝ strings per neighborhood (near-dup families), never
-    * all-pairs; no broadcast anywhere, so the dictionary can be billions
-    * of entries. The HOF that builds variants is interpreted
-    * (CodegenFallback) but runs over the DISTINCT dictionary only, not the
-    * corpus — vocabulary-sized cost at any data scale. */
-  def fuzzyBrandBlocked(s: SparkSession, d: String): DataFrame =
-    blockedNearPairs(Tables.part(s, d).select(col("p_brand")).distinct(),
-      "p_brand")
 
   /** TRIANGLE census + global clustering coefficient over the fuzzy-
     * match similarity graph — the graph-shape audit that tells a dedup
@@ -1105,10 +1084,21 @@ object Relational extends QueryModule {
           .as("clustering_coeff"))
   }
 
-  /** The blocking engine behind [[fuzzyBrandBlocked]], over any distinct
-    * single-column dictionary — separated so the property spec can prove
-    * deletion-neighborhood completeness on RANDOM dictionaries, not just
-    * the brand vocabulary.
+  /** Exact near-pair blocking (edit distance ≤ 1) over any distinct
+    * single-column dictionary: candidates-then-verify instead of the
+    * O(|dict|²) nested-loop compare of [[fuzzyBrand]]. The edge source of
+    * [[graphTriangles]]; DedupPropertySpec proves completeness on RANDOM
+    * dictionaries, not just the brand vocabulary.
+    *
+    * Block key = the DELETION NEIGHBORHOOD (SymSpell's device): every
+    * string keys on itself plus each single-character deletion. Two
+    * strings at edit distance ≤ 1 ALWAYS share a key (substitution at i →
+    * both delete i; insertion/deletion → the shorter string IS a deletion
+    * variant of the longer), so unlike q-gram LSH this blocking is exact.
+    * |dict|×(len+1) keys shuffle-join on the variant string — bucket size
+    * ∝ strings per neighborhood, never all-pairs, no broadcast. The HOF
+    * that builds variants is interpreted (CodegenFallback) but runs over
+    * the DISTINCT dictionary only.
     *
     * Totality over the documented domain: the deletion transform is
     * guarded — for an empty string `sequence(1, 0)` would yield the
@@ -2194,11 +2184,10 @@ object Relational extends QueryModule {
     * 1-row broadcast anchor — no per-row `current_date`, which would be
     * nondeterministic); quintiles are NTILE(5) with the tie order pinned
     * on the customer key (same device the gated [[ntileCustbal]]
-    * proves); the cell average is one division of exact aggregates. The
-    * global NTILE windows are customer-cardinality sorts — the 100 TB
-    * path is [[rfmSegmentsHist]], which replaces them with partitioned
-    * histogram-rank walks and shares THIS query's oracle verbatim so the
-    * gate proves the rewrite emits the identical grid. */
+    * proves); the cell average is one division of exact aggregates.
+    * Limit: each NTILE window is unpartitioned — one task sorts every
+    * customer, three times — so the scoring is bounded by what a single
+    * task can sort. */
   def rfmSegments(s: SparkSession, d: String): DataFrame = {
     val scored = rfmBase(s, d)
       .withColumn("r_score", ntile(5).over(
@@ -2214,184 +2203,17 @@ object Relational extends QueryModule {
         col("cell_cents").cast("double") / col("n_cust").cast("double"))
   }
 
-  /** Per-customer RFM metrics + the corpus recency anchor — shared by the
-    * declarative [[rfmSegments]] and the scale-path [[rfmSegmentsHist]],
-    * so both score IDENTICAL inputs. The 1-row anchor also carries the
-    * freq/monetary maxima so the hist twin can shift its descending
-    * metrics into non-negative space with NO extra aggregation pass
-    * (fmax − freq and mmax − monetary are order-preserving images of
-    * −freq / −monetary with minimum exactly 0). */
+  /** Per-customer RFM metrics + recency against the corpus's last day
+    * (a 1-row broadcast anchor). */
   private def rfmBase(s: SparkSession, d: String): DataFrame = {
     val day = floor(unix_timestamp(col("o_orderdate")) / lit(86400L))
     val per = Tables.orders(s, d)
       .groupBy(col("o_custkey"))
       .agg(max(day).as("last_day"), count(lit(1)).as("freq"),
         sum(round(col("o_totalprice") * 100).cast("long")).as("monetary"))
-    val anchor = per.agg(max(col("last_day")).as("dmax"),
-      max(col("freq")).as("fmax"), max(col("monetary")).as("mmax"))
+    val anchor = per.agg(max(col("last_day")).as("dmax"))
     per.crossJoin(broadcast(anchor))
       .withColumn("recency", col("dmax") - col("last_day"))
-  }
-
-  /** Exact integer floor division (both operands non-negative): the
-    * subtract-remainder form keeps the double division exact, so floor
-    * boundaries can never flip on rounding. */
-  private def idiv(x: Column, y: Column): Column =
-    ((x - pmod(x, y)) / y).cast("long")
-
-  /** Exact NTILE(5) over the total order (metric ASC, o_custkey ASC)
-    * WITHOUT a global sort — the [[valueQuantiles]] histogram-rank device
-    * extended to a full per-row rank via a 4-level prefix-sum tree, run
-    * over a STACKED (m, v) frame so ONE pass ranks every metric at once
-    * (the [[graft.ops.CatalogOps]] columnStats explode-stacking device —
-    * VERDICT r10 #3: the per-metric form paid the whole shuffle-family
-    * constant three times). Input rows are (o_custkey, m, v, w): metric
-    * id, value (descending metrics pre-negated — order-preserving,
-    * tie-break unchanged), per-metric coarse cell width. Per metric m:
-    *
-    *   rank = Σc(coarse cells < cv)        — triangular join over the
-    *                                         COARSE histogram (bounded,
-    *                                         broadcast-sized)
-    *        + Σc(values < v within cv)     — window PARTITIONED by
-    *                                         (m, cv) (≤ w values/cell)
-    *        + Σc(custkey sub-buckets < sb  — window PARTITIONED by (m, v)
-    *             within the v tie group)     (tie-group sub-bucket list)
-    *        + row_number within (m, v, sb) — window PARTITIONED, ≤ 1024
-    *                                         keys per cell
-    *
-    * NTILE(5) is then a closed-form function of (rank, n_m): the first
-    * n%5 buckets take ⌈n/5⌉ rows, the rest ⌊n/5⌋. Every window is
-    * partitioned with bounded partitions — no task ever sorts the world
-    * and no no-partition WindowExec appears; deeper trees follow the
-    * same recursion if a level's partition outgrows a task. Input
-    * contract: v is already NON-NEGATIVE (the caller shifts each metric
-    * by its extremum, free off an aggregate it computes anyway) and every
-    * metric has the SAME row count (one row per key per metric). An
-    * `orig` payload column rides along to the output unexamined, so the
-    * caller's pivot needs no join back to the base frame. Emits
-    * (m, o_custkey, score, orig). */
-  private def ntileByRankStacked(stacked: DataFrame): DataFrame = {
-    // the stacked frame is checkpointed ONCE: the broadcast jobs below
-    // (chist, cprev) and the final job's two consumers (shist subtree +
-    // the ranked join) would otherwise each re-derive it from the source
-    // scan — measured as the dominant warm-run cost, not the exchanges
-    val rows = stacked.localCheckpoint()
-    // Deliberately NOT re-shaped (r16 adjudication, VERDICT r15 #3): two
-    // rewrites of this block were measured against the shipped shape at
-    // sf0.1 with a same-window control and BOTH lost — (a) pinning hist
-    // with an eager localCheckpoint against the 3 consumers below
-    // re-deriving the rows→hist aggregation (1.42 → 2.40 s, low
-    // dispersion both sides: each re-derivation is a cheap parallel scan
-    // of the already-checkpointed `rows`, the pin adds a serial
-    // materialization job); (b) replacing cprev's triangular self-join
-    // with a per-metric prefix-sum window to halve the chist consumers
-    // (control-normalized 2.2–2.5 vs 1.5–2.0 for this shape). The
-    // driver's 8-core 5.5 s figure that flagged this query is the same
-    // work at a quarter of the cores (it scales 4.2× to 32c) — not a
-    // re-planning fan-out: every branch hangs off the one pinned
-    // checkpoint.
-    val hist = rows.groupBy(col("m"), col("v"), col("w"))
-      .agg(count(lit(1)).as("c"))
-      .withColumn("cv", idiv(col("v"), col("w")))
-    // level 1: coarse-cell prefix counts, window-free (triangular join
-    // over the bounded coarse histogram, all metrics at once)
-    val chist = hist.groupBy(col("m"), col("cv")).agg(sum(col("c")).as("cc"))
-    val cprev = chist.select(col("m"), col("cv"))
-      .join(broadcast(chist.select(col("m").as("m2"), col("cv").as("cv2"),
-          col("cc").as("cc2"))),
-        col("m2") === col("m") && col("cv2") < col("cv"), "left")
-      .groupBy(col("m"), col("cv"))
-      .agg(coalesce(sum(col("cc2")), lit(0L)).as("cv_prev"))
-    // level 2: value prefix within its coarse cell
-    val wV = Window.partitionBy(col("m"), col("cv")).orderBy(col("v"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val vinfo = hist
-      .join(broadcast(cprev), Seq("m", "cv"))
-      .withColumn("v_prev", coalesce(sum(col("c")).over(wV), lit(0L)))
-      .select(col("m"), col("v"),
-        (col("cv_prev") + col("v_prev")).as("prev_all"))
-    // levels 3+4: custkey sub-bucket prefix within the tie group, then
-    // local row_number within the (m, v, sub-bucket) cell
-    val sbc = idiv(col("o_custkey"), lit(1024L))
-    val shist = rows.groupBy(col("m"), col("v"), sbc.as("sb"))
-      .agg(count(lit(1)).as("sc"))
-    val wSb = Window.partitionBy(col("m"), col("v")).orderBy(col("sb"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val scum = shist.select(col("m"), col("v"), col("sb"),
-      coalesce(sum(col("sc")).over(wSb), lit(0L)).as("sb_prev"))
-    val wCell = Window.partitionBy(col("m"), col("v"), col("sb"))
-      .orderBy(col("o_custkey"))
-    // n is identical for every metric (each base row contributes exactly
-    // one stacked row per m): a driver scalar off the checkpointed rows,
-    // not a per-metric broadcast with its own job cascade
-    val cnt = rows.agg(count(lit(1)).as("t"),
-      countDistinct(col("m")).as("k")).head()
-    // empty stacked frame (e.g. empty orders input): 0/0 below would
-    // throw where the old per-metric crossJoin form degraded to an empty
-    // result (ADVICE r11) — return the empty frame with the output schema
-    if (cnt.getLong(0) == 0L)
-      return rows.select(col("m"), col("o_custkey"),
-        lit(0).cast("int").as("score"), col("orig"))
-    val nScalar = cnt.getLong(0) / cnt.getLong(1)
-    // pre-join the two histogram-grain frames so the ROWS frame pays one
-    // (m, v, sb) shuffle, not two — the window then reuses that exchange
-    val cellInfo = scum.join(vinfo, Seq("m", "v"))
-    val ranked = rows.withColumn("sb", sbc)
-      .join(cellInfo, Seq("m", "v", "sb"))
-      .withColumn("lr", row_number().over(wCell).cast("long"))
-      .withColumn("n", lit(nScalar))
-      .withColumn("r", col("prev_all") + col("sb_prev") + col("lr"))
-    val q = idiv(col("n"), lit(5L))
-    val rem = col("n") % lit(5L)
-    val cutoff = rem * (q + lit(1L))
-    val bucket = when(col("r") <= cutoff,
-        idiv(col("r") - 1, q + lit(1L)) + lit(1L))
-      .otherwise(rem + idiv(col("r") - cutoff - 1, q) + lit(1L))
-    ranked.select(col("m"), col("o_custkey"), bucket.cast("int").as("score"),
-      col("orig"))
-  }
-
-  /** Scale-path rewrite of [[rfmSegments]]: the three global NTILE(5)
-    * sorts (each a single task sorting every customer, three times) are
-    * replaced by ONE [[ntileByRankStacked]] pass — the three metrics ride
-    * a 3-row explode per customer (metric id, value, coarse width), so
-    * each shuffle family in the prefix-sum rank is paid ONCE for all
-    * three quintiles, and the scores pivot back to columns in a single
-    * customer-keyed aggregate (no three-way join chain). Descending
-    * metrics (freq, monetary) enter negated. Registers with
-    * [[rfmSegments]]' oracle VERBATIM, so the hash gate proves
-    * quintile-invariance of the rewrite at every gated run (the repo's
-    * scale-rewrite discipline). Coarse widths: recency is day-granular
-    * (W=64 days/cell), freq is a count (W=8), monetary is cents
-    * (W=2^20 ≈ $10k/cell) — each keeps the coarse histogram
-    * broadcast-sized at any SF. */
-  def rfmSegmentsHist(s: SparkSession, d: String): DataFrame = {
-    // stacked (m, v, w, orig) rows, one per metric per customer: v is
-    // pre-shifted into non-negative space off rfmBase's 1-row anchor
-    // (recency already has min 0 by construction; fmax − freq and
-    // mmax − monetary are order-preserving images of the DESC metrics) —
-    // no separate per-metric min pass, no checkpoint of the base frame;
-    // `orig` carries monetary to the pivot so the grid needs no join back
-    val stacked = rfmBase(s, d).select(col("o_custkey"), explode(array(
-        struct(lit(1L).as("m"), col("recency").as("v"), lit(64L).as("w"),
-          col("monetary").as("orig")),
-        struct(lit(2L).as("m"), (col("fmax") - col("freq")).as("v"),
-          lit(8L).as("w"), col("monetary").as("orig")),
-        struct(lit(3L).as("m"), (col("mmax") - col("monetary")).as("v"),
-          lit(1L << 20).as("w"), col("monetary").as("orig")))).as("x"))
-      .select(col("x.m").as("m"), col("o_custkey"), col("x.v").as("v"),
-        col("x.w").as("w"), col("x.orig").as("orig"))
-    ntileByRankStacked(stacked)
-      .groupBy(col("o_custkey"))
-      .agg(max(when(col("m") === 1L, col("score"))).as("r_score"),
-        max(when(col("m") === 2L, col("score"))).as("f_score"),
-        max(when(col("m") === 3L, col("score"))).as("m_score"),
-        max(col("orig")).as("monetary"))
-      .groupBy(col("r_score"), col("f_score"), col("m_score"))
-      .agg(count(lit(1)).as("n_cust"),
-        sum(col("monetary")).as("cell_cents"))
-      .withColumn("avg_cents",
-        col("cell_cents").cast("double") / col("n_cust").cast("double"))
   }
 
   /** Month-of-year seasonality index — each calendar month's revenue
@@ -2762,7 +2584,6 @@ object Relational extends QueryModule {
     "q_pareto_8020"       -> pareto8020 _,
     "q_new_vs_returning"  -> newVsReturning _,
     "q_rfm_segments"      -> rfmSegments _,
-    "q_rfm_segments_hist" -> rfmSegmentsHist _,
     "q_seasonality_index" -> seasonalityIndex _,
     "q_supplier_hhi"      -> supplierHhi _,
     "q_stickiness"        -> stickiness _,
@@ -2775,7 +2596,6 @@ object Relational extends QueryModule {
     "q_dq_checks"         -> dqChecks _,
     "q_cube_geo"          -> cubeGeo _,
     "q_fuzzy_brand"       -> fuzzyBrand _,
-    "q_fuzzy_brand_blocked" -> fuzzyBrandBlocked _,
     "q_fuzzy_brand2"      -> fuzzyBrand2 _,
     "q_fuzzy_type2"       -> fuzzyType2 _,
     "q_trailing_7d"       -> trailing7d _,
@@ -2820,42 +2640,6 @@ object Relational extends QueryModule {
       |SELECT lbl AS community, COUNT(*) AS n_members,
       |  MIN(v) AS min_member
       |FROM l3 GROUP BY lbl""".stripMargin
-
-  /** Shared by `q_rfm_segments` and its histogram-rank scale rewrite
-    * `q_rfm_segments_hist` — the hash gate proves quintile-invariance of
-    * the partitioned prefix-sum rank vs the global NTILE sorts. */
-  private val rfmSql: String =
-    """WITH per AS (
-      |  SELECT o_custkey,
-      |    MAX(CAST(FLOOR(epoch(o_orderdate)/86400) AS BIGINT))
-      |      AS last_day,
-      |    COUNT(*) AS freq,
-      |    CAST(SUM(CAST(round(o_totalprice*100) AS BIGINT)) AS BIGINT)
-      |      AS monetary
-      |  FROM orders GROUP BY 1),
-      |anchor AS (SELECT MAX(last_day) AS dmax FROM per),
-      |scored AS (
-      |  SELECT o_custkey, freq, monetary, dmax - last_day AS recency,
-      |    NTILE(5) OVER (ORDER BY dmax - last_day ASC, o_custkey ASC)
-      |      AS r_score,
-      |    NTILE(5) OVER (ORDER BY freq DESC, o_custkey ASC) AS f_score,
-      |    NTILE(5) OVER (ORDER BY monetary DESC, o_custkey ASC)
-      |      AS m_score
-      |  FROM per CROSS JOIN anchor)
-      |SELECT r_score, f_score, m_score, COUNT(*) AS n_cust,
-      |  CAST(SUM(monetary) AS BIGINT) AS cell_cents,
-      |  CAST(SUM(monetary) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE)
-      |    AS avg_cents
-      |FROM scored GROUP BY 1, 2, 3""".stripMargin
-
-  /** Shared by `q_fuzzy_brand` and `q_fuzzy_brand_blocked`: the blocked
-    * path must match the broadcast nested-loop exactly. */
-  private val fuzzyBrandSql: String =
-    """WITH b AS (SELECT DISTINCT p_brand FROM part)
-      |SELECT x.p_brand AS b1, y.p_brand AS b2,
-      |  levenshtein(x.p_brand, y.p_brand) AS dist
-      |FROM b x JOIN b y ON x.p_brand < y.p_brand
-      |WHERE levenshtein(x.p_brand, y.p_brand) <= 1""".stripMargin
 
   override val oracles: Map[String, String] = Map(
     "q_pricing_summary" ->
@@ -3063,11 +2847,12 @@ object Relational extends QueryModule {
         |  3.0 * CAST(n_triangles AS DOUBLE)
         |    / CAST(NULLIF(n_wedges, 0) AS DOUBLE) AS clustering_coeff
         |FROM m, w, t""".stripMargin,
-    "q_fuzzy_brand" -> fuzzyBrandSql,
-    // deliberately the SAME oracle: deletion-neighborhood blocking is
-    // exact for distance <= 1, so the blocked path must reproduce the
-    // broadcast nested-loop's output bit-for-bit
-    "q_fuzzy_brand_blocked" -> fuzzyBrandSql,
+    "q_fuzzy_brand" ->
+      """WITH b AS (SELECT DISTINCT p_brand FROM part)
+        |SELECT x.p_brand AS b1, y.p_brand AS b2,
+        |  levenshtein(x.p_brand, y.p_brand) AS dist
+        |FROM b x JOIN b y ON x.p_brand < y.p_brand
+        |WHERE levenshtein(x.p_brand, y.p_brand) <= 1""".stripMargin,
     // brute nested-loop at threshold 2 — the blocked 2-deletion path
     // must reproduce it exactly (complete graph on this vocabulary)
     "q_fuzzy_brand2" ->
@@ -3436,10 +3221,29 @@ object Relational extends QueryModule {
         |  CAST(n_active - n_new AS DOUBLE) / CAST(n_active AS DOUBLE)
         |    AS returning_share
         |FROM g""".stripMargin,
-    "q_rfm_segments"      -> rfmSql,
-    // VERBATIM rfm oracle: the hash gate proves the histogram-rank
-    // rewrite emits the identical quintile grid
-    "q_rfm_segments_hist" -> rfmSql,
+    "q_rfm_segments" ->
+      """WITH per AS (
+        |  SELECT o_custkey,
+        |    MAX(CAST(FLOOR(epoch(o_orderdate)/86400) AS BIGINT))
+        |      AS last_day,
+        |    COUNT(*) AS freq,
+        |    CAST(SUM(CAST(round(o_totalprice*100) AS BIGINT)) AS BIGINT)
+        |      AS monetary
+        |  FROM orders GROUP BY 1),
+        |anchor AS (SELECT MAX(last_day) AS dmax FROM per),
+        |scored AS (
+        |  SELECT o_custkey, freq, monetary, dmax - last_day AS recency,
+        |    NTILE(5) OVER (ORDER BY dmax - last_day ASC, o_custkey ASC)
+        |      AS r_score,
+        |    NTILE(5) OVER (ORDER BY freq DESC, o_custkey ASC) AS f_score,
+        |    NTILE(5) OVER (ORDER BY monetary DESC, o_custkey ASC)
+        |      AS m_score
+        |  FROM per CROSS JOIN anchor)
+        |SELECT r_score, f_score, m_score, COUNT(*) AS n_cust,
+        |  CAST(SUM(monetary) AS BIGINT) AS cell_cents,
+        |  CAST(SUM(monetary) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE)
+        |    AS avg_cents
+        |FROM scored GROUP BY 1, 2, 3""".stripMargin,
     // rev_m * 12 is exact int64 BEFORE the one IEEE division
     "q_seasonality_index" ->
       """WITH per AS (

@@ -744,42 +744,12 @@ object TextOps extends QueryModule {
         sum(when(col("hit").isNull, 1).otherwise(0)).cast("long")
           .as("n_new"))
 
-  /** Scale path of [[deltaDedup]] for when the INGEST BATCH itself is
-    * too large to broadcast its exact fingerprint set (a backfill wave,
-    * a multi-day catch-up): the probe side becomes a Bloom filter of the
-    * batch fingerprints — ~10 bits/key at 1 % fpp vs ~48 bytes/key for
-    * exact broadcast strings, a ~40× smaller broadcast for the same
-    * no-false-negative probe. The index store is pre-filtered in a map
-    * stage (`mightContain`, typed partition loop — no shuffle, no UDF
-    * wrapping per-row Catalyst boxing), shrinking it to true hits plus
-    * ~1 % false positives; the EXACT left-semi against the batch
-    * fingerprints then runs on that survivor set only and removes every
-    * false positive, so the output is bit-identical to [[deltaDedup]] —
-    * proven by sharing its oracle VERBATIM (the hash gate is the
-    * bloom-invariance proof) plus a TextSpec bit-parity check. The
-    * bloom build (`stat.bloomFilter`) and the `count` sizing it are one
-    * aggregation pass each over the batch-side fingerprints — batch
-    * cost, never index cost. */
-  def deltaDedupBloom(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val idxFp = TextIndexStore.fp(s, d)
-    val incoming = deltaIncomingFp(s, d, idxFp)
-    val incFp = incoming.select(col("fp")).distinct().localCheckpoint()
-    val bloom = incFp.stat.bloomFilter("fp",
-      math.max(incFp.count(), 1L), 0.01)
-    val bloomB = s.sparkContext.broadcast(bloom)
-    val possible = idxFp.select(col("fp")).as[String]
-      .mapPartitions(it => it.filter(fp => bloomB.value.mightContain(fp)))
-      .toDF("fp")
-    val dupFp = possible
-      .join(broadcast(incFp), Seq("fp"), "left_semi").distinct()
-    deltaRollup(incoming, dupFp)
-  }
-
   /** Exact n-gram (3-token shingle) Jaccard near-dup pairs ≥ 0.6.
-    * Shingle-keyed self-join — the *verifier* stage; at scale it runs on
-    * MinHash-LSH candidates only (see [[minhashLshPairs]]), or use the
-    * exact prefix-filtered form [[ngramJaccardBlocked]]. */
+    * Shingle-keyed self-join — the *verifier* stage. Its join meets every
+    * pair sharing ANY shingle (Σ df² rows, quadratic in the hottest
+    * shingles), so past toy scale it runs on MinHash-LSH candidates only
+    * (see [[minhashLshPairs]]), or use the exact prefix-filtered
+    * [[ngramJaccardHashed]]. */
   def ngramJaccardPairs(s: SparkSession, d: String): DataFrame =
     ngramJaccardPairsOf(docsParallel(s, d))
 
@@ -807,79 +777,14 @@ object TextOps extends QueryModule {
   /** Shared verification tail: (d1, d2, common) + per-doc sizes →
     * thresholded Jaccard rows in the q_ngram_jaccard output shape. */
   private def jaccardTail(pairs: DataFrame, sizes: DataFrame): DataFrame =
-    pairs
+    jaccardVerifyTail(pairs
       .join(sizes.withColumnRenamed("doc_id", "d1").withColumnRenamed("n", "n1"), "d1")
-      .join(sizes.withColumnRenamed("doc_id", "d2").withColumnRenamed("n", "n2"), "d2")
-      .withColumn("jaccard",
-        col("common").cast("double") / (col("n1") + col("n2") - col("common")))
-      .filter(col("jaccard") >= 0.6)
-      .select(col("d1"), col("d2"), col("common"), col("n1"), col("n2"), col("jaccard"))
-
-  /** Scale-path rewrite of [[ngramJaccardPairs]]: EXACT all-pairs Jaccard
-    * with prefix filtering + size filtering (the All-Pairs/PPJoin family —
-    * Bayardo, Ma & Srikant, "Scaling Up All Pairs Similarity Search",
-    * WWW'07; Chaudhuri et al.'s SSJoin prefix filter). Registered under
-    * the ORIGINAL query's oracle verbatim (shared [[ngramJaccardSql]]) —
-    * the hash gate proves blocking-invariance, and
-    * DedupPropertySpec proves prefix completeness against a pure-Scala
-    * brute force on random dense corpora.
-    *
-    * Why the naive form dies at 100 TB: its self-join meets every pair
-    * sharing ANY shingle — Σ df² pair-rows over the shingle frequency
-    * distribution, quadratic in the hottest keys (a boilerplate header
-    * shared by 1M docs alone yields 10^12 join rows). Prefix filtering
-    * makes candidate generation provably complete while joining only on
-    * each doc's p = n − ceil(0.6·n) + 1 RAREST shingles (global
-    * (df, sh) canonical order, df ascending): if J(a,b) ≥ 0.6 then the
-    * globally-smallest common shingle is in both prefixes — were it not in
-    * a's prefix, all of a∩b would sit in a's suffix of ceil(0.6·n)−1 <
-    * ceil(0.6·n) ≤ |a∩b| slots. So the join keyspace is the thin rare
-    * tail (~0.4·n keys/doc), the hot-key quadratic term is gone, and the
-    * size filter 5·min(n1,n2) ≥ 3·max(n1,n2) (J ≥ 0.6 ⟹ common ≥
-    * 0.6·max, common ≤ min) prunes mismatched-length collisions before
-    * the distinct. Verification then counts true intersections for
-    * candidates only — cost ∝ candidates × doc size, not corpus². The
-    * prefix cutoff uses integer-exact ceil(3n/5) = (3n+4) div 5 — a
-    * float 0.6·n could round the prefix one short and silently break
-    * completeness. */
-  def ngramJaccardBlocked(s: SparkSession, d: String): DataFrame =
-    ngramJaccardBlockedOf(docsParallel(s, d))
-
-  /** One typed pass rolling each doc to its DISTINCT 3-shingle set — the
-    * minhashSignatures precedent: the declarative
-    * explode(array_distinct(shingles(...))) chain is an interpreted
-    * lambda-HOF pipeline (CodegenFallback, the measured trap), while
-    * this loop is a tight per-partition scan. Bit-parity with the
-    * declarative form is held by the shared oracles (DuckDB computes
-    * shingles declaratively) + DedupPropertySpec's brute force:
-    * split(" ", -1) keeps trailing empties, first-occurrence distinct,
-    * docs under 3 tokens roll to an empty set and drop at the explode.
-    * Materialized (localCheckpoint): read by the df-count, the prefix
-    * build and both verification sides of each caller. */
-  private[graft] def shingleSetsOf(docs: DataFrame): DataFrame = {
-    val s = docs.sparkSession
-    import s.implicits._
-    docs.select(col("doc_id"), col("text")).as[(Long, String)]
-      .mapPartitions { it =>
-        it.map { case (id, text) =>
-          val toks = text.split(" ", -1)
-          val seen = scala.collection.mutable.LinkedHashSet.empty[String]
-          var i = 0
-          while (i + 2 < toks.length) {
-            seen += (toks(i) + " " + toks(i + 1) + " " + toks(i + 2)); i += 1
-          }
-          (id, seen.toArray)
-        }
-      }.toDF("doc_id", "shs")
-      .withColumn("n", size(col("shs")).cast("long"))
-      .localCheckpoint()
-  }
+      .join(sizes.withColumnRenamed("doc_id", "d2").withColumnRenamed("n", "n2"), "d2"))
 
   /** Per-shingle document frequency over the exploded (doc_id, n, sh)
-    * frame — stage 2 of the prefix-filter pipeline. Shared by the
-    * blocked/hashed/ppjoin forms AND [[graft.ProfileNgb]] (ADVICE r10:
-    * the profiler must time the SHIPPED stages, not a re-derivation). */
-  private[graft] def dfreqOf(sh: DataFrame): DataFrame =
+    * frame — stage 2 of the prefix-filter pipeline of
+    * [[ngramJaccardHashed]]. */
+  private def dfreqOf(sh: DataFrame): DataFrame =
     sh.groupBy(col("sh")).agg(count(lit(1)).as("df"))
 
   /** Prefix build — stage 3: rank each doc's shingles in the GLOBAL
@@ -893,10 +798,8 @@ object TextOps extends QueryModule {
     * completeness. Emits (doc_id, sh, n, i) where i is the 1-based
     * position of the shingle in the doc's FULL canonical-sorted set (the
     * prefix is the head, so prefix position = full position) — the
-    * blocked/hashed callers ignore i; the ppjoin positional filter
-    * consumes it. Column-generic over the shingle type (string or fp60
-    * long), so the blocked and hashed pipelines share this code. */
-  private[graft] def prefixOf(sh: DataFrame, dfreq: DataFrame): DataFrame =
+    * positional filter in [[candidatesPpjoinOf]] consumes it. */
+  private def prefixOf(sh: DataFrame, dfreq: DataFrame): DataFrame =
     sh.join(dfreq, "sh")
       .groupBy(col("doc_id"))
       .agg(array_sort(collect_list(struct(col("df"), col("sh")))).as("arr"),
@@ -908,22 +811,12 @@ object TextOps extends QueryModule {
       .select(col("doc_id"), col("p.sh").as("sh"), col("p.df").as("df"),
         col("n"), (col("pos0") + 1).cast("long").as("i"))
 
-  /** Candidate generation — stage 4: prefix-keyed self-join with the
-    * size filter 5·min(n1,n2) ≥ 3·max(n1,n2) (J ≥ 0.6 ⟹ common ≥
-    * 0.6·max, common ≤ min), deduped to distinct (d1, d2). */
-  private[graft] def candidatesOf(prefix: DataFrame): DataFrame =
-    prefix.as("a").join(prefix.as("b"),
-        col("a.sh") === col("b.sh") && col("a.doc_id") < col("b.doc_id") &&
-          col("a.n") * 5 >= col("b.n") * 3 && col("b.n") * 5 >= col("a.n") * 3)
-      .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
-      .distinct()
-
   /** Candidate generation with PPJoin POSITIONAL filtering (Xiao, Wang,
     * Lin & Yu, "Efficient Similarity Joins for Near Duplicate Detection",
-    * WWW'08 §3.2) — stage 4 of the ppjoin form. Same prefix-keyed join
-    * and size filter as [[candidatesOf]], but instead of deduping the
-    * prefix collisions away it AGGREGATES them per pair and applies an
-    * exact overlap upper bound before any verification:
+    * WWW'08 §3.2) — stage 4. A prefix-keyed self-join with the size
+    * filter 5·min(n1,n2) ≥ 3·max(n1,n2) (J ≥ 0.6 ⟹ common ≥ 0.6·max,
+    * common ≤ min); the prefix collisions are AGGREGATED per pair and an
+    * exact overlap upper bound prunes them before any verification:
     *
     * For a pair (a, b), let k = number of shingles shared by both
     * PREFIXES and (i_k, j_k) the positions (1-based, in each doc's full
@@ -936,24 +829,14 @@ object TextOps extends QueryModule {
     *     overlap(a,b) ≤ k + min(n1 − i_k, n2 − j_k),
     * while J ≥ 0.6 requires overlap ≥ α = ceil(3·(n1+n2)/8) (from
     * 1.6·common ≥ 0.6·(n1+n2)). Pairs failing the bound are pruned with
-    * NO false negatives — exactness is preserved, which the shared
-    * verbatim oracle proves. The per-pair aggregate runs on the
-    * prefix-collision frame the blocked form already materializes for its
-    * `distinct` — same exchange, one extra max/count — and every pruned
-    * pair is a candidate that skips the verify join entirely (the stage
-    * the r10 profile proved dominant: 193 k candidates for 256 final
-    * pairs). α uses integer-exact floor((3·(n1+n2)+7)/8) = ceil(3s/8) —
-    * the prefix-cutoff discipline. */
-  private[graft] def candidatesPpjoinOf(prefix: DataFrame): DataFrame =
-    ppjoinPositionalTail(
-      prefix.as("a").join(prefix.as("b"),
+    * NO false negatives (DedupPropertySpec's brute force holds it), and
+    * every pruned pair skips the verify join, the dominant stage. α uses
+    * integer-exact floor((3·(n1+n2)+7)/8) = ceil(3s/8) — the
+    * prefix-cutoff discipline. */
+  private def candidatesPpjoinOf(prefix: DataFrame): DataFrame =
+    prefix.as("a").join(prefix.as("b"),
         col("a.sh") === col("b.sh") && col("a.doc_id") < col("b.doc_id") &&
-          col("a.n") * 5 >= col("b.n") * 3 && col("b.n") * 5 >= col("a.n") * 3))
-
-  /** The per-pair positional aggregate + exact overlap bound shared by
-    * [[candidatesPpjoinOf]] and its length-bucketed variant. */
-  private def ppjoinPositionalTail(joined: DataFrame): DataFrame =
-    joined
+          col("a.n") * 5 >= col("b.n") * 3 && col("b.n") * 5 >= col("a.n") * 3)
       .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"),
         col("a.n").as("n1"), col("b.n").as("n2"),
         col("a.df").as("df"), col("a.sh").as("sh"),
@@ -969,37 +852,8 @@ object TextOps extends QueryModule {
         floor((lit(3) * (col("n1") + col("n2")) + lit(7)) / lit(8)))
       .select(col("d1"), col("d2"))
 
-  /** [[candidatesPpjoinOf]] with LENGTH-BUCKETED join keys — the last
-    * exact candidate-generation lever the r11 profile left untested
-    * (VERDICT r11 #6): docs can only pair when the Jaccard size filter
-    * 5·min ≥ 3·max can be met, i.e. n2/n1 ∈ [3/5, 5/3]; bucketing n by
-    * base-5/3 log means a compatible partner sits within ±1 bucket, so
-    * adding the bucket to the equi-key stops the join from GENERATING
-    * (and then residual-filtering) the length-incompatible collisions
-    * of hot shingles. The probe side replicates to the 3 admissible
-    * buckets (3× exchange rows) — the classic trade; the exact size
-    * filter stays as a residual, so output is IDENTICAL by construction
-    * (each pair meets exactly once: the build side keys on its single
-    * own bucket). The bucket boundary uses a transcendental log, which
-    * is fine HERE only because buckets never reach an output or an
-    * oracle — both join sides compute the same in-JVM value, and the
-    * exact integer filters decide membership. Profiled by
-    * [[graft.ProfileNgb]]; see PLANS.md for the measured verdict. */
-  private[graft] def candidatesPpjoinBucketedOf(prefix: DataFrame)
-      : DataFrame = {
-    val lb = floor(log(col("n").cast("double")) /
-      lit(math.log(5.0 / 3.0))).cast("long")
-    val build = prefix.withColumn("lb", lb)
-    val probe = build.withColumn("lb",
-      explode(array(col("lb") - 1, col("lb"), col("lb") + 1)))
-    ppjoinPositionalTail(
-      probe.as("a").join(build.as("b"),
-        col("a.sh") === col("b.sh") && col("a.lb") === col("b.lb") &&
-          col("a.doc_id") < col("b.doc_id") &&
-          col("a.n") * 5 >= col("b.n") * 3 && col("b.n") * 5 >= col("a.n") * 3))
-  }
-
-  /** Threshold + shape tail shared by every prefix-filtered form. */
+  /** Threshold + shape tail: (d1, d2, common, n1, n2) → the
+    * q_ngram_jaccard output rows at J ≥ 0.6. */
   private def jaccardVerifyTail(counted: DataFrame): DataFrame =
     counted
       .withColumn("jaccard",
@@ -1008,61 +862,47 @@ object TextOps extends QueryModule {
       .select(col("d1"), col("d2"), col("common"), col("n1"), col("n2"),
         col("jaccard"))
 
-  private[graft] def ngramJaccardBlockedOf(docs: DataFrame): DataFrame = {
-    val byDoc = shingleSetsOf(docs)
-    val sh = byDoc.select(col("doc_id"), col("n"),
-      explode(col("shs")).as("sh")) // plain-array explode: codegen Generate
-    val cand = candidatesOf(prefixOf(sh, dfreqOf(sh)))
-    // verification joins each candidate pair to the two doc-level shingle
-    // sets (broadcast-sized relative to candidates) and intersects them
-    // in a typed loop — interpreted array_intersect measured 5.5 s where
-    // this runs in tenths; cost is candidates × doc size exactly, no
-    // corpus-wide pair×shingle aggregate
-    jaccardVerifyTail(sharedCounts(cand, byDoc))
-  }
-
-  /** [[ngramJaccardBlocked]] with PPJoin positional filtering between
-    * candidate generation and verification — the next lever after the
-    * fp60-hashed verify the round-10 profile named: prune candidates
-    * EXACTLY (see [[candidatesPpjoinOf]]) so fewer pairs ship shingle
-    * arrays through the dominant verify exchange. Registered under the
-    * ORIGINAL q_ngram_jaccard oracle verbatim — the hash gate proves the
-    * positional filter loses no pair. */
-  def ngramJaccardPpjoin(s: SparkSession, d: String): DataFrame =
-    ngramJaccardPpjoinOf(docsParallel(s, d))
-
-  private[graft] def ngramJaccardPpjoinOf(docs: DataFrame): DataFrame = {
-    val byDoc = shingleSetsOf(docs)
-    val sh = byDoc.select(col("doc_id"), col("n"),
-      explode(col("shs")).as("sh"))
-    val cand = candidatesPpjoinOf(prefixOf(sh, dfreqOf(sh)))
-    jaccardVerifyTail(sharedCounts(cand, byDoc))
-  }
-
-  /** [[ngramJaccardBlocked]] with the pipeline run on fp60-HASHED
-    * shingles — the constant-factor lever the round-10 stage profile
-    * (PLANS.md, `graft.ProfileNgb`) identified: VERIFY dominates the
-    * blocked query (4.9 s of 8.4 staged at sf0.1) because every candidate
-    * row ships both docs' full shingle-STRING arrays (~20 B each) through
-    * the verify join's exchange. Here each distinct 3-shingle maps to the
-    * 60-bit md5 device (`fp60`) at roll time — the [[containmentPairsOf]]
-    * discipline — so every downstream join, array, and exchange carries
-    * 8-byte longs: prefix build, candidate join, and the dominant verify
-    * exchange all shrink ~3×. Registered with its OWN oracle that hashes
-    * identically in DuckDB, so both engines operate on the same hashed
-    * universe by construction and the gate stays exact even in the
-    * astronomically-unlikely collision case (a collision merges the same
-    * two shingles on both sides). DedupPropertySpec-style parity: the
-    * TextSpec bit-parity test asserts the hashed pair set equals
-    * [[ngramJaccardBlocked]]'s on the live corpus. */
+  /** EXACT all-pairs n-gram Jaccard ≥ 0.6 by prefix filtering + size
+    * filtering (the All-Pairs/PPJoin family — Bayardo, Ma & Srikant,
+    * "Scaling Up All Pairs Similarity Search", WWW'07; Chaudhuri et al.'s
+    * SSJoin prefix filter) with PPJoin positional filtering
+    * ([[candidatesPpjoinOf]]), on fp60-HASHED shingles.
+    *
+    * Prefix filtering joins only on each doc's p = n − ceil(0.6·n) + 1
+    * RAREST shingles (global (df, sh) canonical order, df ascending) and
+    * is still complete: if J(a,b) ≥ 0.6 then the globally-smallest
+    * common shingle is in both prefixes — were it not in a's prefix, all
+    * of a∩b would sit in a's suffix of ceil(0.6·n)−1 < ceil(0.6·n) ≤
+    * |a∩b| slots. So the join keyspace is the thin rare tail (~0.4·n
+    * keys/doc) and the hot-key quadratic term of [[ngramJaccardPairs]] is
+    * gone. Verification counts true intersections for candidates only —
+    * cost ∝ candidates × doc size, not corpus². DedupPropertySpec proves
+    * completeness against a pure-Scala brute force on random dense
+    * corpora.
+    *
+    * Each distinct 3-shingle maps to the 60-bit md5 device (`fp60`) at
+    * roll time — the [[containmentPairsOf]] discipline — so every join,
+    * array, and exchange carries 8-byte longs, not shingle strings.
+    * Registered with its OWN oracle that hashes identically in DuckDB, so
+    * both engines operate on the same hashed universe by construction and
+    * the gate stays exact even in the astronomically-unlikely collision
+    * case (a collision merges the same two shingles on both sides).
+    * TextSpec asserts the pair set equals [[ngramJaccardPairs]]'s on the
+    * live corpus. Limit: the prefix build collects each doc's full sorted
+    * shingle set in one row, so a single huge document is one task. */
   def ngramJaccardHashed(s: SparkSession, d: String): DataFrame =
     ngramJaccardHashedOf(docsParallel(s, d))
 
-  /** fp60 twin of [[shingleSetsOf]]: one typed pass rolling each doc to
-    * its distinct 3-shingle set, each shingle hashed to 60 bits (first
-    * 15 md5 hex chars — bit-identical to DuckDB's
-    * `('0x'||substr(md5(sh),1,15))::BIGINT`). */
-  private[graft] def hashedShingleSetsOf(docs: DataFrame): DataFrame = {
+  /** One typed pass rolling each doc to its distinct 3-shingle set,
+    * each shingle hashed to 60 bits (first 15 md5 hex chars —
+    * bit-identical to DuckDB's `('0x'||substr(md5(sh),1,15))::BIGINT`).
+    * The declarative explode(array_distinct(shingles(...))) chain is an
+    * interpreted lambda-HOF pipeline (CodegenFallback); this loop is a
+    * tight per-partition scan. split(" ", -1) keeps trailing empties and
+    * docs under 3 tokens roll to an empty set and drop at the explode.
+    * Materialized (localCheckpoint): read by the df-count, the prefix
+    * build and both verification sides. */
+  private def hashedShingleSetsOf(docs: DataFrame): DataFrame = {
     val s = docs.sparkSession
     import s.implicits._
     docs.select(col("doc_id"), col("text")).as[(Long, String)]
@@ -1094,19 +934,16 @@ object TextOps extends QueryModule {
     val byDoc = hashedShingleSetsOf(docs)
     val sh = byDoc.select(col("doc_id"), col("n"),
       explode(col("shs")).as("sh"))
-    // identical prefix-filter mechanics to [[ngramJaccardBlockedOf]]
-    // (SHARED stage code — [[prefixOf]]/[[candidatesPpjoinOf]] are
-    // column-generic): the canonical order is (df, hashed-shingle), a
-    // total order both engines share since both hash with the same md5
-    // device. The ppjoin positional filter composes with the fp60 verify
-    // — both levers the r10 profile named, stacked.
+    // the canonical order is (df, hashed-shingle), a total order both
+    // engines share since both hash with the same md5 device
     val cand = candidatesPpjoinOf(prefixOf(sh, dfreqOf(sh)))
     jaccardVerifyTail(sharedCountsLong(cand, byDoc))
   }
 
-  /** [[sharedCounts]] over hashed (Array[Long]) shingle sets — the typed
-    * intersection loop on primitive longs, no string hashing or equality
-    * in the hot path. */
+  /** Verification core: join candidate (d1, d2) pairs to their two
+    * hashed shingle sets and count the true intersection in a typed loop
+    * on primitive longs (interpreted array_intersect measured 5.5 s where
+    * the loop runs in tenths). Returns (d1, d2, common, n1, n2). */
   private def sharedCountsLong(cand: DataFrame, byDoc: DataFrame): DataFrame = {
     val s = cand.sparkSession
     import s.implicits._
@@ -1121,38 +958,6 @@ object TextOps extends QueryModule {
         it.map { case (d1, d2, s1, n1, s2, n2) =>
           val set = new java.util.HashSet[Long](s2.length * 2)
           s2.foreach(x => set.add(x): Unit)
-          var common = 0L
-          s1.foreach(x => if (set.contains(x)) common += 1)
-          (d1, d2, common, n1, n2)
-        }
-      }.toDF("d1", "d2", "common", "n1", "n2")
-  }
-
-  /** Verify-stage entry for [[graft.ProfileNgb]] (stage timing only). */
-  private[graft] def verifyJaccardForProfile(cand: DataFrame,
-      byDoc: DataFrame): Long =
-    sharedCounts(cand, byDoc)
-      .withColumn("jaccard",
-        col("common").cast("double") / (col("n1") + col("n2") - col("common")))
-      .filter(col("jaccard") >= 0.6)
-      .count()
-
-  /** Shared verification core: join candidate (d1, d2) pairs to their two
-    * shingle sets and count the true intersection in a typed partition
-    * loop. Returns (d1, d2, common, n1, n2). */
-  private def sharedCounts(cand: DataFrame, byDoc: DataFrame): DataFrame = {
-    val s = cand.sparkSession
-    import s.implicits._
-    cand
-      .join(byDoc.select(col("doc_id").as("d1"), col("shs").as("s1"),
-        col("n").as("n1")), "d1")
-      .join(byDoc.select(col("doc_id").as("d2"), col("shs").as("s2"),
-        col("n").as("n2")), "d2")
-      .select(col("d1"), col("d2"), col("s1"), col("n1"), col("s2"), col("n2"))
-      .as[(Long, Long, Array[String], Long, Array[String], Long)]
-      .mapPartitions { it =>
-        it.map { case (d1, d2, s1, n1, s2, n2) =>
-          val set = s2.toSet
           var common = 0L
           s1.foreach(x => if (set.contains(x)) common += 1)
           (d1, d2, common, n1, n2)
@@ -1260,7 +1065,7 @@ object TextOps extends QueryModule {
     * The one-sided size filter 5·|B| ≥ 4·|A| (B must hold the overlap)
     * prunes before the distinct. All cutoffs are integer div — the module's
     * float-prefix trap. Verification intersects candidate pairs only
-    * (typed loop, the [[sharedCounts]] core); the threshold re-check is
+    * (typed loop, the [[sharedCountsLong]] core); the threshold re-check is
     * integer (5·common ≥ 4·n_small), the emitted ratio a single division.
     *
     * Liveness: the corpus is excerpt-free by construction, so docs with
@@ -1271,7 +1076,7 @@ object TextOps extends QueryModule {
     *
     * At 100 TB: candidate generation joins ~n/5 rare-tail keys per doc
     * against the inverted shingle index — the same complete-but-thin
-    * keyspace as [[ngramJaccardBlocked]], no hot-key quadratic term, and
+    * keyspace as [[ngramJaccardHashed]], no hot-key quadratic term, and
     * the asymmetric direction means ONE pass flags every excerpt
     * regardless of host size. */
   def containmentPairs(s: SparkSession, d: String): DataFrame = {
@@ -2321,9 +2126,9 @@ object TextOps extends QueryModule {
     * next sequence when its START offset crosses the budget boundary.
     * Greedy packing is inherently order-defined, so the parallel unit is
     * the PACKING GROUP (source here): one shuffle on the group key, one
-    * cumulative window per group. At 100 TB one window task per source
-    * serializes — [[seqPackingSharded]] is the scale path (two-phase
-    * parallel scan, byte-identical output, #shards× the parallelism). */
+    * cumulative window per group. Limit: parallelism is capped at the
+    * number of sources — each source's running sum is ONE window task,
+    * so a single huge source packs serially. */
   def seqPacking(s: SparkSession, d: String): DataFrame = {
     val w = Window.partitionBy(col("source")).orderBy(col("doc_id"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -2331,52 +2136,6 @@ object TextOps extends QueryModule {
       .select(col("source"), col("doc_id"),
         size(tokens(col("text"))).cast("long").as("n_tok"))
       .withColumn("cum", sum(col("n_tok")).over(w))
-      .withColumn("seq_id", floor((col("cum") - col("n_tok")) / lit(2048L)))
-      .groupBy(col("source"), col("seq_id"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("tok_sum"))
-  }
-
-  /** Sharded sequence packing — the [[seqPacking]] scale path executed,
-    * not just promised. The per-source prefix sum is associative, so it
-    * decomposes into a classic two-phase parallel scan:
-    *
-    *   1. shard = floor(doc_id / width): a pure function of the row's key
-    *      (content-addressed, partition-independent), and monotone in
-    *      doc_id, so concatenating shards in shard order IS doc_id order.
-    *   2. per-shard token totals → one tiny exclusive-prefix window over
-    *      #shards rows per source (thousands of rows at 100 TB, not
-    *      billions) → broadcast back.
-    *   3. per-(source, shard) local cumulative window + the shard offset
-    *      = the exact global running total.
-    *
-    * `seq_id` is therefore BYTE-IDENTICAL to the single-group form for any
-    * shard width — shard count is a pure parallelism dial, which is why
-    * this entry shares `q_seq_packing`'s oracle verbatim (the hash gate
-    * proves shard-invariance, the same trick the salted join uses). The
-    * serial window over a whole 100 TB source in [[seqPacking]] becomes
-    * #shards concurrent window tasks here; only the doc-count-sized
-    * (source, shard, offset) table is driver/broadcast-visible. */
-  def seqPackingSharded(s: SparkSession, d: String): DataFrame =
-    seqPackingSharded(s, d, shardWidth = 512L)
-
-  def seqPackingSharded(s: SparkSession, d: String, shardWidth: Long): DataFrame = {
-    require(shardWidth >= 1L, s"shardWidth must be >= 1, got $shardWidth")
-    val base = docsParallel(s, d)
-      .select(col("source"), col("doc_id"),
-        size(tokens(col("text"))).cast("long").as("n_tok"))
-      // integer div, not floor(double-divide): doc_id stays exact past 2^53
-      .withColumn("shard", expr(s"doc_id div ${shardWidth}L"))
-    val wOff = Window.partitionBy(col("source")).orderBy(col("shard"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val offsets = base.groupBy(col("source"), col("shard"))
-      .agg(sum(col("n_tok")).as("shard_tok"))
-      .withColumn("offset", sum(col("shard_tok")).over(wOff) - col("shard_tok"))
-      .select(col("source"), col("shard"), col("offset"))
-    val wLoc = Window.partitionBy(col("source"), col("shard"))
-      .orderBy(col("doc_id"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    base.join(broadcast(offsets), Seq("source", "shard"))
-      .withColumn("cum", col("offset") + sum(col("n_tok")).over(wLoc))
       .withColumn("seq_id", floor((col("cum") - col("n_tok")) / lit(2048L)))
       .groupBy(col("source"), col("seq_id"))
       .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("tok_sum"))
@@ -3058,12 +2817,9 @@ object TextOps extends QueryModule {
     "q_segment_dedup"      -> segmentDedup _,
     "q_span_dedup"         -> spanDedup _,
     "q_delta_dedup"        -> deltaDedup _,
-    "q_delta_dedup_bloom"  -> deltaDedupBloom _,
     "q_delta_neardup"      -> deltaNearDup _,
     "q_ngram_jaccard"      -> ngramJaccardPairs _,
-    "q_ngram_jaccard_blocked" -> ngramJaccardBlocked _,
     "q_ngram_jaccard_hashed" -> ngramJaccardHashed _,
-    "q_ngram_jaccard_ppjoin" -> ngramJaccardPpjoin _,
     "q_split_leakage"      -> splitLeakage _,
     "q_importance_resample" -> importanceResample _,
     "q_segment_neardup"    -> segmentNearDup _,
@@ -3082,7 +2838,6 @@ object TextOps extends QueryModule {
     "q_neardup_canonical" -> neardupCanonical _,
     "q_repetition_ratio"   -> repetitionRatio _,
     "q_seq_packing"        -> seqPacking _,
-    "q_seq_packing_sharded" -> ((s: SparkSession, d: String) => seqPackingSharded(s, d)),
     "q_tfidf_topterms"     -> tfidfTopTerms _,
     "q_subword_vocab"      -> subwordVocabQuery _,
     "q_subword_tokenize"   -> subwordTokenize _,
@@ -3133,52 +2888,6 @@ object TextOps extends QueryModule {
        |         LATERAL (SELECT UNNEST(range(1,
        |           length(d.word) - CAST(t.n AS INT) + 2)) AS i) s
        |  ) GROUP BY 1)""".stripMargin
-
-  /** Shared by `q_seq_packing` and `q_seq_packing_sharded`: both must
-    * produce the global-cumulative-sum packing exactly. */
-  private val seqPackingSql: String =
-    s"""WITH d AS (SELECT source, doc_id,
-       |             CAST(len($dToks) AS BIGINT) AS n_tok FROM documents),
-       |c AS (SELECT source, doc_id, n_tok,
-       |        SUM(n_tok) OVER (PARTITION BY source ORDER BY doc_id
-       |          ROWS UNBOUNDED PRECEDING) AS cum
-       |      FROM d)
-       |SELECT source, CAST(FLOOR((cum - n_tok) / 2048) AS BIGINT) AS seq_id,
-       |  COUNT(*) AS n_docs, CAST(SUM(n_tok) AS BIGINT) AS tok_sum
-       |FROM c GROUP BY 1, 2""".stripMargin
-
-  /** Shared by `q_delta_dedup` and `q_delta_dedup_bloom`: the bloom
-    * pre-filter is exact end-to-end, so one oracle proves both. */
-  private val deltaDedupSql: String =
-    s"""WITH docs AS (SELECT doc_id, text, source FROM documents),
-       |idx AS (SELECT * FROM docs WHERE doc_id % 5 <> 0),
-       |inc AS (SELECT * FROM docs WHERE doc_id % 5 = 0
-       |        UNION ALL
-       |        SELECT doc_id + $PlantOffset, text, source FROM idx
-       |        WHERE doc_id % 7 = 0),
-       |ifp AS (SELECT DISTINCT md5(text) AS fp FROM idx)
-       |SELECT source, COUNT(*) AS n_incoming,
-       |  CAST(SUM(CASE WHEN md5(text) IN (SELECT fp FROM ifp)
-       |           THEN 1 ELSE 0 END) AS BIGINT) AS n_dup,
-       |  CAST(SUM(CASE WHEN md5(text) IN (SELECT fp FROM ifp)
-       |           THEN 0 ELSE 1 END) AS BIGINT) AS n_new
-       |FROM inc GROUP BY source""".stripMargin
-
-  /** Shared by `q_ngram_jaccard` and `q_ngram_jaccard_blocked`: the
-    * blocked form is an exact rewrite, so one oracle proves both. */
-  private val ngramJaccardSql: String =
-    s"""WITH sh AS (
-       |  SELECT DISTINCT doc_id, UNNEST($dShingles3) AS sh
-       |  FROM (SELECT doc_id, $dToks AS t FROM documents)),
-       |sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY 1),
-       |pairs AS (
-       |  SELECT a.doc_id AS d1, b.doc_id AS d2, COUNT(*) AS common
-       |  FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-       |  GROUP BY 1, 2)
-       |SELECT d1, d2, common, sa.n AS n1, sb.n AS n2,
-       |  CAST(common AS DOUBLE)/(sa.n + sb.n - common) AS jaccard
-       |FROM pairs JOIN sizes sa ON d1 = sa.doc_id JOIN sizes sb ON d2 = sb.doc_id
-       |WHERE CAST(common AS DOUBLE)/(sa.n + sb.n - common) >= 0.6""".stripMargin
 
   private val containmentSql: String =
     s"""WITH aug AS (
@@ -3623,11 +3332,20 @@ object TextOps extends QueryModule {
          |  CAST(SUM(w.cnt * d.n_sub) AS BIGINT) AS n_subtokens,
          |  CAST(SUM(w.cnt * d.n_sub) AS DOUBLE) / SUM(w.cnt) AS fertility
          |FROM wcnt w JOIN done d USING (word) GROUP BY 1""".stripMargin,
-    "q_delta_dedup"       -> deltaDedupSql,
-    // the bloom pre-filter is exactness-preserving by construction (the
-    // exact semi-join removes every false positive) — shared oracle
-    // VERBATIM, so the hash gate proves bloom-invariance
-    "q_delta_dedup_bloom" -> deltaDedupSql,
+    "q_delta_dedup" ->
+      s"""WITH docs AS (SELECT doc_id, text, source FROM documents),
+         |idx AS (SELECT * FROM docs WHERE doc_id % 5 <> 0),
+         |inc AS (SELECT * FROM docs WHERE doc_id % 5 = 0
+         |        UNION ALL
+         |        SELECT doc_id + $PlantOffset, text, source FROM idx
+         |        WHERE doc_id % 7 = 0),
+         |ifp AS (SELECT DISTINCT md5(text) AS fp FROM idx)
+         |SELECT source, COUNT(*) AS n_incoming,
+         |  CAST(SUM(CASE WHEN md5(text) IN (SELECT fp FROM ifp)
+         |           THEN 1 ELSE 0 END) AS BIGINT) AS n_dup,
+         |  CAST(SUM(CASE WHEN md5(text) IN (SELECT fp FROM ifp)
+         |           THEN 0 ELSE 1 END) AS BIGINT) AS n_new
+         |FROM inc GROUP BY source""".stripMargin,
     "q_delta_neardup" ->
       s"""WITH docs AS (SELECT doc_id, text, source FROM documents),
          |idx AS (SELECT * FROM docs WHERE doc_id % 5 <> 0),
@@ -3671,7 +3389,19 @@ object TextOps extends QueryModule {
          |  CAST(SUM(CASE WHEN doc_id IN (SELECT inc_id FROM flagged)
          |           THEN 0 ELSE 1 END) AS BIGINT) AS n_clean
          |FROM inc GROUP BY source""".stripMargin,
-    "q_ngram_jaccard"         -> ngramJaccardSql,
+    "q_ngram_jaccard" ->
+      s"""WITH sh AS (
+         |  SELECT DISTINCT doc_id, UNNEST($dShingles3) AS sh
+         |  FROM (SELECT doc_id, $dToks AS t FROM documents)),
+         |sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY 1),
+         |pairs AS (
+         |  SELECT a.doc_id AS d1, b.doc_id AS d2, COUNT(*) AS common
+         |  FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
+         |  GROUP BY 1, 2)
+         |SELECT d1, d2, common, sa.n AS n1, sb.n AS n2,
+         |  CAST(common AS DOUBLE)/(sa.n + sb.n - common) AS jaccard
+         |FROM pairs JOIN sizes sa ON d1 = sa.doc_id JOIN sizes sb ON d2 = sb.doc_id
+         |WHERE CAST(common AS DOUBLE)/(sa.n + sb.n - common) >= 0.6""".stripMargin,
     // OWN oracle, hashing identically: both engines roll distinct
     // 3-shingles to the fp60 device before any pair logic, so the gate
     // compares the same hashed universe (collision-proof by construction)
@@ -3748,12 +3478,6 @@ object TextOps extends QueryModule {
          |  leaked_pairs, naive_leaked_pairs
          |FROM sp CROSS JOIN leaks
          |GROUP BY 1, 5, 6""".stripMargin,
-    // the blocked rewrite shares the oracle VERBATIM: hash match ⟹ the
-    // prefix+size filters changed nothing but the work done
-    "q_ngram_jaccard_blocked" -> ngramJaccardSql,
-    // ppjoin shares it too: hash match ⟹ positional filtering pruned
-    // only pairs that could never reach the 0.6 threshold
-    "q_ngram_jaccard_ppjoin" -> ngramJaccardSql,
     "q_containment_dedup" -> containmentSql,
     "q_dup_span_profile" ->
       s"""WITH aug AS (
@@ -4125,10 +3849,16 @@ object TextOps extends QueryModule {
          |       ELSE 0.0 END AS rep_ratio
          |FROM (SELECT doc_id, $dShingles3 AS sh
          |      FROM (SELECT doc_id, $dToks AS t FROM documents))""".stripMargin,
-    "q_seq_packing" -> seqPackingSql,
-    // deliberately the SAME oracle: the sharded two-phase scan must be
-    // byte-identical to the serial window — the hash gate proves it
-    "q_seq_packing_sharded" -> seqPackingSql,
+    "q_seq_packing" ->
+      s"""WITH d AS (SELECT source, doc_id,
+         |             CAST(len($dToks) AS BIGINT) AS n_tok FROM documents),
+         |c AS (SELECT source, doc_id, n_tok,
+         |        SUM(n_tok) OVER (PARTITION BY source ORDER BY doc_id
+         |          ROWS UNBOUNDED PRECEDING) AS cum
+         |      FROM d)
+         |SELECT source, CAST(FLOOR((cum - n_tok) / 2048) AS BIGINT) AS seq_id,
+         |  COUNT(*) AS n_docs, CAST(SUM(n_tok) AS BIGINT) AS tok_sum
+         |FROM c GROUP BY 1, 2""".stripMargin,
     "q_tfidf_topterms" ->
       s"""WITH terms AS (SELECT doc_id, UNNEST($dToks) AS term FROM documents),
          |tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM terms GROUP BY 1, 2),

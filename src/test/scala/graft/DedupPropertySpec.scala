@@ -121,13 +121,14 @@ class DedupPropertySpec extends AnyFunSuite {
     }
   }
 
-  /** Property: prefix filtering is COMPLETE — the blocked all-pairs
-    * Jaccard equals a pure-Scala brute force over every pair, on random
-    * dense corpora (4-token alphabet → heavy shingle sharing, i.e. the
-    * hot-key regime the prefix filter exists for) with planted copies
-    * (exact + one-token-perturbed) so the ≥0.6 set is provably non-empty.
-    * This is the mathematical claim behind sharing q_ngram_jaccard's
-    * oracle verbatim: any missed candidate would diverge here. */
+  /** Property: prefix filtering is COMPLETE — the prefix-filtered
+    * all-pairs Jaccard of q_ngram_jaccard_hashed equals a pure-Scala brute
+    * force over every pair, on random dense corpora (4-token alphabet →
+    * heavy shingle sharing, i.e. the hot-key regime the prefix filter
+    * exists for) with planted copies (exact + one-token-perturbed) so the
+    * ≥0.6 set is provably non-empty. The 125 possible 3-shingles over the
+    * four tokens plus the perturbation token have no fp60 collision, so
+    * hashing cannot mask a missed candidate: any would diverge here. */
   test("prefix-filtered jaccard equals brute force on random dense corpora") {
     val rnd = new scala.util.Random(13)
     for (trial <- 1 to 3) {
@@ -154,7 +155,7 @@ class DedupPropertySpec extends AnyFunSuite {
       } yield (a, b, c.toLong, sa.size.toLong, sb.size.toLong)).toSet
       assert(expected.nonEmpty, s"trial $trial: degenerate corpus (no pairs)")
       val got = graft.ops.TextOps
-        .ngramJaccardBlockedOf(docs.toDF("doc_id", "text"))
+        .ngramJaccardHashedOf(docs.toDF("doc_id", "text"))
         .collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
           r.getLong(4)))
@@ -166,11 +167,11 @@ class DedupPropertySpec extends AnyFunSuite {
   /** Property: PPJoin POSITIONAL filtering is EXACT — pruning a candidate
     * by `k + min(n1−i_k, n2−j_k) < ceil(3(n1+n2)/8)` can never drop a pair
     * with J ≥ 0.6 (Xiao et al. WWW'08 §3.2 upper bound). Same brute-force
-    * contract as the blocked test above, fresh seed, on the dense
-    * 4-token-alphabet corpora where prefix collisions (and hence the
-    * positional filter's opportunities AND its risk surface) are maximal.
-    * Any false negative from the positional bound would diverge here
-    * before the shared-verbatim oracle could catch it at gate time. */
+    * contract as the prefix-filter test above, fresh seed, on the dense
+    * 4-token-alphabet corpora (no fp60 collision, as above) where prefix
+    * collisions (and hence the positional filter's opportunities AND its
+    * risk surface) are maximal.
+    * Any false negative from the positional bound would diverge here. */
   test("ppjoin positional-filtered jaccard equals brute force on random dense corpora") {
     val rnd = new scala.util.Random(29)
     for (trial <- 1 to 3) {
@@ -195,46 +196,12 @@ class DedupPropertySpec extends AnyFunSuite {
       } yield (a, b, c.toLong, sa.size.toLong, sb.size.toLong)).toSet
       assert(expected.nonEmpty, s"trial $trial: degenerate corpus (no pairs)")
       val got = graft.ops.TextOps
-        .ngramJaccardPpjoinOf(docs.toDF("doc_id", "text"))
+        .ngramJaccardHashedOf(docs.toDF("doc_id", "text"))
         .collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
           r.getLong(4)))
         .toSet
       assert(got === expected, s"trial $trial over ${docs.size} docs")
-    }
-  }
-
-  /** Property: length-bucketing the ppjoin candidate join loses NOTHING —
-    * the ±1-bucket replication covers the whole admissible length ratio
-    * [3/5, 5/3] (a compatible partner's base-5/3 log bucket is within 1),
-    * so the bucketed pair set equals the plain ppjoin's on corpora whose
-    * doc lengths deliberately SPAN many buckets (4–40 tokens, the regime
-    * where a broken boundary would lose cross-bucket pairs; the profiled
-    * sf0.1 corpus is too length-homogeneous to catch that). */
-  test("length-bucketed ppjoin candidates equal the plain ppjoin's on " +
-      "length-diverse corpora") {
-    import org.apache.spark.sql.functions.{col, explode}
-    val rnd = new scala.util.Random(41)
-    for (trial <- 1 to 3) {
-      val base = (1 to 50).map { id =>
-        val n = 4 + rnd.nextInt(37)
-        (id.toLong,
-          (1 to n).map(_ => ('a' + rnd.nextInt(4)).toChar.toString).mkString(" "))
-      }
-      val docs = (base ++
-        base.filter(_._1 % 5 == 0).map { case (id, t) => (id + 1000, t) })
-        .toDF("doc_id", "text")
-      val byDoc = graft.ops.TextOps.shingleSetsOf(docs)
-      val sh = byDoc.select(col("doc_id"), col("n"),
-        explode(col("shs")).as("sh"))
-      val prefix = graft.ops.TextOps
-        .prefixOf(sh, graft.ops.TextOps.dfreqOf(sh)).localCheckpoint()
-      val plain = graft.ops.TextOps.candidatesPpjoinOf(prefix)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val bucketed = graft.ops.TextOps.candidatesPpjoinBucketedOf(prefix)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(plain.nonEmpty, s"trial $trial: degenerate (no candidates)")
-      assert(bucketed === plain, s"trial $trial")
     }
   }
 

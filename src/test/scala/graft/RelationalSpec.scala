@@ -49,20 +49,22 @@ class RelationalSpec extends AnyFunSuite {
     // SQL verbatim; the groups that still do are declared here, so a new
     // face fails this test and a folded group must leave the list
     val declared = Set(
-      Set("q_ngram_jaccard", "q_ngram_jaccard_blocked",
-        "q_ngram_jaccard_ppjoin"),
       Set("q_basket_communities", "q_basket_communities_bucketed",
         "q_basket_communities_copart"),
-      Set("q_delta_dedup", "q_delta_dedup_bloom"),
-      Set("q_fuzzy_brand", "q_fuzzy_brand_blocked"),
-      Set("q_rfm_segments", "q_rfm_segments_hist"),
       Set("q_scd2_history", "q_scd2_incremental"),
-      Set("q_seq_packing", "q_seq_packing_sharded"),
       Set("q_ads_keyword_stats", "q_ads_keyword_lateral"))
     val shared = SparkEntry.oracleSql.groupBy(_._2).values
       .map(_.keySet).filter(_.size > 1).toSet
     assert(shared === declared,
       s"undeclared: ${shared -- declared}; gone: ${declared -- shared}")
+  }
+
+  test("every Bench store probe names a registered query") {
+    // Bench throws on such a probe when it runs; this catches it first
+    val missing = Bench.storeProbes.map(_._2)
+      .filterNot(SparkEntry.queries.contains)
+    assert(missing.isEmpty, "store probes naming unregistered queries: " +
+      missing.mkString(", "))
   }
 
   test("lag-gap sessionizer agrees with native session_window") {

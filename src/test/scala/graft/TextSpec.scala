@@ -225,31 +225,6 @@ class TextSpec extends AnyFunSuite {
       s"no natural near-dup found beyond exact dups: $nd vs $xd")
   }
 
-  test("sharded sequence packing is byte-identical to the serial window " +
-      "for any shard width") {
-    val serial = TextOps.seqPacking(spark, dir).collect()
-      .map(r => (r.getString(0), r.getLong(1)) -> (r.getLong(2), r.getLong(3)))
-      .toMap
-    // width 1 = one shard per doc_id (extreme fan-out), width 7 = ragged
-    // shard boundaries that never align with the 2048-token budget,
-    // width Long.MaxValue = a single shard (degenerates to the serial form)
-    for (width <- Seq(1L, 7L, 512L, Long.MaxValue)) {
-      val sharded = TextOps.seqPackingSharded(spark, dir, width).collect()
-        .map(r => (r.getString(0), r.getLong(1)) -> (r.getLong(2), r.getLong(3)))
-        .toMap
-      assert(sharded === serial, s"shard width $width diverged")
-    }
-    // the parallelism claim: at width 7 the offsets table really does
-    // split each source into many packing shards
-    import spark.implicits._
-    val nShards = Tables.documents(spark, dir)
-      .select(col("source"), expr("doc_id div 7").as("shard"))
-      .distinct().groupBy("source").count()
-      .as[(String, Long)].collect().toMap
-    assert(nShards.values.forall(_ > 1),
-      s"expected multi-shard sources, got $nShards")
-  }
-
   test("typed gramRows is bit-identical to the declarative shingle explode") {
     val docs = graft.Tables.documents(spark, dir)
       .select(col("doc_id"), col("text"))
@@ -264,17 +239,6 @@ class TextSpec extends AnyFunSuite {
     val bySource = TextOps.gramRowsBy(spark,
       graft.Tables.documents(spark, dir), col("source"), 8)
     assert(bySource.count() === typed.count())
-  }
-
-  test("bloom delta dedup is bit-identical to the exact-broadcast form") {
-    // the shared oracle proves this at the gate; this is the fast local
-    // pin, and it exercises the bloom path's false-positive removal on
-    // the same planted re-ingests
-    val exact = TextOps.deltaDedup(spark, dir)
-    val bloom = TextOps.deltaDedupBloom(spark, dir)
-    assert(bloom.exceptAll(exact).isEmpty && exact.exceptAll(bloom).isEmpty)
-    assert(bloom.collect().map(_.getLong(2)).sum > 0,
-      "degenerate: no planted dup flagged through the bloom path")
   }
 
   test("heavy hitters: planted boundary is live on BOTH sides and the " +
@@ -473,14 +437,15 @@ class TextSpec extends AnyFunSuite {
 
   test("fp60-hashed blocked jaccard is bit-parity with the string-verify " +
       "blocked form on the live corpus") {
-    // the hashed pipeline only changes the shingle REPRESENTATION; pair
-    // set, counts, and jaccard values must all survive the hashing
+    // the prefix-filtered hashed pipeline against the string-shingle
+    // self-join: pair set, counts, and jaccard values must all survive
+    // the filtering and the hashing
     def key(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => ((r.getLong(0), r.getLong(1)),
         (r.getLong(2), r.getLong(3), r.getLong(4), r.getDouble(5)))).toMap
-    val blocked = key(TextOps.queries("q_ngram_jaccard_blocked")(spark, dir))
+    val naive = key(TextOps.queries("q_ngram_jaccard")(spark, dir))
     val hashed = key(TextOps.queries("q_ngram_jaccard_hashed")(spark, dir))
-    assert(hashed === blocked)
+    assert(hashed === naive)
   }
 
   test("epoch plan: targets exhaust the budget up to floor slack and " +
