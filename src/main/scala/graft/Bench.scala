@@ -73,20 +73,25 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
 
-  /** Store pre-build probes: (store tag, the cheapest registered query
-    * that builds the store). Order matters — q_hybrid_rrf_dense touches
-    * both the postings and the embed store, so running it AFTER postings
-    * charges each build to its own line (the dense probe then pays only
-    * the embed build). */
+  /** Store pre-build probes: (the tag of one store directory, the
+    * cheapest registered query that builds it), one entry per store.
+    * Order matters: a probe must build exactly its own store, so a store
+    * another one reads is probed first — `dwd` before `scd2h`, the
+    * bucketed lineitem before the orders join and the LPA edges (both
+    * read it), `textcorpus` before `corpussurv`, `postings` before
+    * `embed` (q_hybrid_rrf_dense reads both). RelationalSpec runs the
+    * probes in this order on a fresh input and checks each one adds one
+    * directory named by its tag. */
   val storeProbes: Seq[(String, String)] = Seq(
-    "dwd_wide" -> "q_dwd_order_wide", "dwd_latest" -> "q_dws_sku_order",
-    "scd2h" -> "q_scd2_history", "bucket" -> "q_rev_by_priority",
-    "textidx" -> "q_delta_dedup", "textsig" -> "q_delta_neardup",
+    "dwd" -> "q_dwd_order_wide", "scd2h" -> "q_scd2_history",
+    "bucket_lineitem_bkt" -> "q_order_line_stats",
+    "bucket_orders_bkt" -> "q_rev_by_priority",
+    "textidx" -> "q_delta_dedup", "textcorpus" -> "q_minhash_lsh_pairs",
     "corpussurv" -> "q_corpus_filter", "postings" -> "q_inverted_search",
     "embed" -> "q_hybrid_rrf_dense",
-    "pqindex" -> "q_ann_pq", "anntruth" -> "q_ann_recall",
+    "pqindex" -> "q_ann_pq", "anntruth" -> "q_ann_pq_recall",
     "compact" -> "q_compaction_exec", "zexec" -> "q_zorder_exec",
-    "lpaedges" -> "q_basket_communities_bucketed")
+    "bucket_lpa_edges" -> "q_basket_communities_bucketed")
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -133,10 +138,19 @@ object Bench {
     // ADAPTIVE=0` restores the fixed-count sweep.
     val adaptive =
       !sys.env.get("SPARK_GRAFT_BENCH_ADAPTIVE").contains("0") && runs > 2
+    val isChild = sys.env.contains("SPARK_GRAFT_BENCH_CHILD")
+    // A name-filtered run skips the store pre-build, so without a warm-up
+    // each query's first timed run carries its cold JIT/codegen cost (and
+    // a store probe its store build): every query read 3.9-17.1x dispersed
+    // and was re-run in a forked JVM. One untimed run per query first.
+    // The isolation child is name-filtered too but keeps the full run's
+    // protocol: it re-measures sweep outliers as the sweep measured them.
+    val warmUp = args.nonEmpty && !isChild
     def timed(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
               name: String): (Double, Double, Double) = {
       val r =
         try {
+          if (warmUp) time(fn)
           val ts = scala.collection.mutable.ArrayBuffer.empty[Double]
           var i = 0
           while (i < runs && !(adaptive && ts.size >= 2 && {
@@ -171,7 +185,6 @@ object Bench {
     // folded sweep min, so (prebuild − sweep_min) IS the build split the
     // adjudication wants. Skipped in the child (it probes the parent's
     // stores via the shared root) and for name-filtered local runs.
-    val isChild = sys.env.contains("SPARK_GRAFT_BENCH_CHILD")
 
     // Locale.ROOT: the f-interpolator uses the default locale, which on a
     // comma-decimal JVM would print 53,200 and corrupt the JSON line

@@ -110,7 +110,7 @@ object GraftSession {
       // without it the bucket-co-located SMJ keeps a redundant in-partition
       // Sort on both sides; BucketJoinSpec pins the sort-free plan
       .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      // DwdStore.recoverSwap's first-build promotion rule is "_SUCCESS
+      // StoreDirs.recoverSwap's first-build promotion rule is "_SUCCESS
       // present ⇒ the parquet job committed" (ADVICE r11): pin the marker
       // config here so a cluster-side committer change can't silently
       // invalidate the recovery contract — with the marker disabled a

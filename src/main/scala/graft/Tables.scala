@@ -26,7 +26,7 @@ import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType}
   * walked through the Hadoop `FileSystem`) plus the session confs that
   * steer inference ([[inferenceConfs]]): a regenerated table — e.g.
   * `events.ts` flipping between NANOS and MICROS — or a store rewritten
-  * by `StoreDirs.durableOverwrite` gets a new key, is re-inferred, and
+  * by `StoreDirs.fold` gets a new key, is re-inferred, and
   * replaces its entry. The map holds `StructType`s only, never a
   * DataFrame, and grows with the number of distinct paths, not with
   * rewrites of one path. */

@@ -47,9 +47,7 @@ object BucketStore {
                      src: => DataFrame, key: String): String =
     lock.synchronized {
       val fresh = StoreDirs.freshKey(s, d)
-      val digest = java.security.MessageDigest.getInstance("MD5")
-        .digest(fresh.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-      val name = s"${table}_g_$digest"
+      val name = s"${table}_g_${StoreDirs.digest(fresh)}"
       if (!s.catalog.tableExists(name)) {
         src.repartition(NBuckets, col(key))
           .write.mode("overwrite")

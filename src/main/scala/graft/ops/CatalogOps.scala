@@ -194,9 +194,6 @@ object CatalogOps extends QueryModule {
         expr(s"(cum - bytes) div $CompactTargetBytes"))
   }
 
-  private val compactBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** The OPTIMIZE executor's store, built once per input fingerprint
     * (the [[DwdStore]] memo pattern): (1) `frag` — the FRAGMENTED input
     * layout, one physical directory per (event_type, day) partition (the
@@ -210,22 +207,21 @@ object CatalogOps extends QueryModule {
     * the frag layout), each output task streams one bin (≈ the target
     * size by construction), and nothing else is touched. */
   private def compactStore(s: SparkSession, d: String): String =
-    compactBuilt.computeIfAbsent(StoreDirs.freshKey(s, d), k =>
-      StoreDirs.ensureBuilt("compact", k) { base =>
-        Tables.events(s, d)
-          .withColumn("day", date_format(col("ts"), "yyyy-MM-dd"))
-          .repartition(col("event_type"), col("day"))
-          .write.mode("overwrite").partitionBy("event_type", "day")
-          .parquet(s"$base/frag")
-        val assign = partBins(s, d)
-          .select(col("event_type"), col("day"), col("bin_id"))
-        Tables.read(s, s"$base/frag")
-          .withColumn("day", col("day").cast("string"))
-          .join(broadcast(assign), Seq("event_type", "day"))
-          .repartition(col("event_type"), col("bin_id"))
-          .write.mode("overwrite").partitionBy("event_type", "bin_id")
-          .parquet(s"$base/compacted")
-      })
+    StoreDirs.store(s, "compact", d) { base =>
+      Tables.events(s, d)
+        .withColumn("day", date_format(col("ts"), "yyyy-MM-dd"))
+        .repartition(col("event_type"), col("day"))
+        .write.mode("overwrite").partitionBy("event_type", "day")
+        .parquet(s"$base/frag")
+      val assign = partBins(s, d)
+        .select(col("event_type"), col("day"), col("bin_id"))
+      Tables.read(s, s"$base/frag")
+        .withColumn("day", col("day").cast("string"))
+        .join(broadcast(assign), Seq("event_type", "day"))
+        .repartition(col("event_type"), col("bin_id"))
+        .write.mode("overwrite").partitionBy("event_type", "bin_id")
+        .parquet(s"$base/compacted")
+    }
 
   /** The compacted store's rows (day re-cast to string), for
     * CompactionSpec's full-column multiset-equality check. */
@@ -278,9 +274,6 @@ object CatalogOps extends QueryModule {
         col("bytes"), col("day_from"), col("day_to"))
   }
 
-  private val zorderBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** The OPTIMIZE ZORDER executor's store: BOTH candidate layouts of the
     * same rows physically written, one file per bucket (the combo-keyed
     * repartition + partitionBy device [[compactionExec]] established) —
@@ -290,19 +283,18 @@ object CatalogOps extends QueryModule {
     * audit, so the executor can never cluster by a different curve than
     * the one `q_zorder_layout` scores. */
   private def zorderStore(s: SparkSession, d: String): String =
-    zorderBuilt.computeIfAbsent(StoreDirs.freshKey(s, d), k =>
-      StoreDirs.ensureBuilt("zexec", k) { base =>
-        val b = Relational.zorderBuckets(s, d)
-          .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"),
-            col("zf"), col("lin"))
-          .localCheckpoint() // two layout writes consume it
-        b.repartition(col("zf"))
-          .write.mode("overwrite").partitionBy("zf")
-          .parquet(s"$base/zorder")
-        b.repartition(col("lin"))
-          .write.mode("overwrite").partitionBy("lin")
-          .parquet(s"$base/linear")
-      })
+    StoreDirs.store(s, "zexec", d) { base =>
+      val b = Relational.zorderBuckets(s, d)
+        .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"),
+          col("zf"), col("lin"))
+        .localCheckpoint() // two layout writes consume it
+      b.repartition(col("zf"))
+        .write.mode("overwrite").partitionBy("zf")
+        .parquet(s"$base/zorder")
+      b.repartition(col("lin"))
+        .write.mode("overwrite").partitionBy("lin")
+        .parquet(s"$base/linear")
+    }
 
   /** Z-ORDER execution audit — the `OPTIMIZE ZORDER` sibling of
     * [[compactionExec]], closing the clustering loop the same way:

@@ -32,15 +32,11 @@ import org.apache.spark.sql.functions._
   */
 object CorpusStore {
 
-  private val built =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def ensure(s: SparkSession, d: String): String =
-    built.computeIfAbsent(StoreDirs.freshKey(s, d), k =>
-      StoreDirs.ensureBuilt("corpussurv", k) { base =>
-        TextOps.filteredCorpusCompute(s, d)
-          .write.mode("overwrite").parquet(s"$base/surv")
-      })
+    StoreDirs.store(s, "corpussurv", d) { base =>
+      TextOps.filteredCorpusCompute(s, d)
+        .write.mode("overwrite").parquet(s"$base/surv")
+    }
 
   /** The materialized survivor manifest (doc_id, source, n_tok, char_sum). */
   def survivors(s: SparkSession, d: String): DataFrame =

@@ -36,9 +36,6 @@ import org.apache.spark.sql.functions._
   */
 object EmbedStore {
 
-  private val built =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Fresh sparse embedding rows (doc_id, b, cnt) of one document batch:
     * truncate to the embedding input cap, then the typed bigram pass.
     * Deterministic per document — the idempotence the merge relies on. */
@@ -49,12 +46,11 @@ object EmbedStore {
       "doc_id")
 
   private def ensure(s: SparkSession, d: String): String =
-    built.computeIfAbsent(StoreDirs.freshKey(s, d), k =>
-      StoreDirs.ensureBuilt("embed", k) { base =>
-        val docs = Tables.documents(s, d)
-          .repartition(s.sparkContext.defaultParallelism)
-        vectorsOf(docs).write.mode("overwrite").parquet(s"$base/vectors")
-      })
+    StoreDirs.store(s, "embed", d) { base =>
+      val docs = Tables.documents(s, d)
+        .repartition(s.sparkContext.defaultParallelism)
+      vectorsOf(docs).write.mode("overwrite").parquet(s"$base/vectors")
+    }
 
   /** The materialized (doc_id, b, cnt) sparse document vectors. */
   def vectors(s: SparkSession, d: String): DataFrame =
@@ -77,15 +73,9 @@ object EmbedStore {
     * the embedding surface). In production the overwrite is a MERGE into
     * the doc_id-bucketed table touching only the batch's buckets (the
     * [[CdcOps]] touched-buckets device); plain parquet rewrites the
-    * store, crash-durably ([[StoreDirs.durableOverwrite]]). */
+    * store, crash-durably ([[StoreDirs.fold]]). */
   def refresh(s: SparkSession, base: String, batch: DataFrame): Unit = {
-    val vDir = s"$base/vectors"
     val fresh = vectorsOf(batch)
-    val merged =
-      if (StoreDirs.recoverThenExists(vDir))
-        mergeVectors(Tables.read(s, vDir), fresh).localCheckpoint()
-      else fresh.localCheckpoint()
-    StoreDirs.durableOverwrite(merged, vDir)
-    Relational.unpersistCheckpoint(merged)
+    StoreDirs.fold(s, s"$base/vectors")(_.fold(fresh)(mergeVectors(_, fresh)))
   }
 }

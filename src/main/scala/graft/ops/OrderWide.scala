@@ -354,19 +354,12 @@ object OrderWide extends QueryModule {
     * overwrite is whole-store only because plain parquet has no MERGE
     * (production: key-partitioned lakehouse table, touched partitions
     * only). */
-  def scd2Refresh(s: SparkSession, histDir: String, batch: DataFrame): Unit = {
-    val h =
-      if (StoreDirs.recoverThenExists(histDir))
-        Scd2.applyBatch(Tables.read(s, histDir), batch,
-          "detail_id", "op_ts", chainOrder).localCheckpoint()
-      else
-        Scd2.fromLog(batch, "detail_id", "op_ts", chainOrder)
-          .localCheckpoint()
-    // staged swap, not in-place overwrite: a crash mid-write must leave
-    // a complete history copy on disk ([[StoreDirs.durableOverwrite]])
-    StoreDirs.durableOverwrite(h, histDir)
-    Relational.unpersistCheckpoint(h)
-  }
+  def scd2Refresh(s: SparkSession, histDir: String, batch: DataFrame): Unit =
+    StoreDirs.fold(s, histDir) {
+      case Some(hist) =>
+        Scd2.applyBatch(hist, batch, "detail_id", "op_ts", chainOrder)
+      case None => Scd2.fromLog(batch, "detail_id", "op_ts", chainOrder)
+    }
 
   /** One-shot rebuild over an arbitrary changelog frame with the SAME
     * key/seq/tie-order as the maintained store — the comparison arm of
@@ -666,15 +659,12 @@ object OrderWide extends QueryModule {
   * project what they need and parquet column pruning does the rest. */
 object Scd2Store {
 
-  private val built = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def ensure(s: SparkSession, d: String): String =
-    built.computeIfAbsent(StoreDirs.freshKey(s, d), k =>
-      StoreDirs.ensureBuilt("scd2h", k) { base =>
-        Scd2.fromLog(OrderWide.versions(DwdStore.wide(s, d)),
-          "detail_id", "op_ts", OrderWide.chainOrder)
-          .write.mode("overwrite").parquet(s"$base/hist")
-      })
+    StoreDirs.store(s, "scd2h", d) { base =>
+      Scd2.fromLog(OrderWide.versions(DwdStore.wide(s, d)),
+        "detail_id", "op_ts", OrderWide.chainOrder)
+        .write.mode("overwrite").parquet(s"$base/hist")
+    }
 
   /** The materialized raw SCD2 history. */
   def hist(s: SparkSession, d: String): DataFrame =

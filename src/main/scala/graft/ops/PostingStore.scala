@@ -28,19 +28,16 @@ import org.apache.spark.sql.functions._
   */
 object PostingStore {
 
-  private val built = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def ensure(s: SparkSession, d: String): String =
-    built.computeIfAbsent(StoreDirs.freshKey(s, d), k =>
-      StoreDirs.ensureBuilt("postings", k) { base =>
-        val docs = Tables.documents(s, d)
-          .repartition(s.sparkContext.defaultParallelism)
-        RetrievalOps.postingsOf(docs)
-          .write.mode("overwrite").parquet(s"$base/postings")
-        docs.select(col("doc_id"),
-            size(split(col("text"), " ")).cast("long").as("dl"))
-          .write.mode("overwrite").parquet(s"$base/doclen")
-      })
+    StoreDirs.store(s, "postings", d) { base =>
+      val docs = Tables.documents(s, d)
+        .repartition(s.sparkContext.defaultParallelism)
+      RetrievalOps.postingsOf(docs)
+        .write.mode("overwrite").parquet(s"$base/postings")
+      docs.select(col("doc_id"),
+          size(split(col("text"), " ")).cast("long").as("dl"))
+        .write.mode("overwrite").parquet(s"$base/doclen")
+    }
 
   /** The materialized (term, doc_id, tf) posting lists. */
   def postings(s: SparkSession, d: String): DataFrame =
@@ -58,8 +55,7 @@ object PostingStore {
     * posting lists via the `max(tf)` merge (idempotent under
     * at-least-once replay — a re-delivered document re-derives identical
     * (term, doc_id, tf) rows) and doclen via the same max-collapse on
-    * (doc_id, dl). The merged frame is localCheckpointed before the
-    * overwrite because the store is both input and output of the merge.
+    * (doc_id, dl), each through [[StoreDirs.fold]].
     *
     * Scale: the merge SHUFFLES only store ∪ batch partials keyed by
     * (term, doc_id); here the overwrite then rewrites the whole store
@@ -71,29 +67,12 @@ object PostingStore {
     * whole-corpus build under uneven batch boundaries + a replayed
     * batch. */
   def refresh(s: SparkSession, base: String, batch: DataFrame): Unit = {
-    val pDir = s"$base/postings"
-    val dDir = s"$base/doclen"
     val freshP = RetrievalOps.postingsOf(batch)
     val freshD = batch.select(col("doc_id"),
       size(split(col("text"), " ")).cast("long").as("dl"))
-    val mergedP =
-      if (StoreDirs.recoverThenExists(pDir))
-        RetrievalOps.mergePostings(Tables.read(s, pDir), freshP)
-          .localCheckpoint()
-      else freshP.localCheckpoint()
-    val mergedD =
-      if (StoreDirs.recoverThenExists(dDir))
-        Tables.read(s, dDir).unionByName(freshD)
-          .groupBy(col("doc_id")).agg(max(col("dl")).as("dl"))
-          .localCheckpoint()
-      else freshD.localCheckpoint()
-    // staged swap, not in-place overwrite: a crash mid-write must leave
-    // a complete store copy on disk ([[StoreDirs.durableOverwrite]])
-    StoreDirs.durableOverwrite(mergedP, pDir)
-    StoreDirs.durableOverwrite(mergedD, dDir)
-    // the checkpoints are consumed by the writes above — release their
-    // blocks instead of pinning one store copy per micro-batch
-    Relational.unpersistCheckpoint(mergedP)
-    Relational.unpersistCheckpoint(mergedD)
+    StoreDirs.fold(s, s"$base/postings")(
+      _.fold(freshP)(RetrievalOps.mergePostings(_, freshP)))
+    StoreDirs.fold(s, s"$base/doclen")(_.fold(freshD)(
+      _.unionByName(freshD).groupBy(col("doc_id")).agg(max(col("dl")).as("dl"))))
   }
 }

@@ -29,17 +29,14 @@ import org.apache.spark.sql.functions._
   */
 object TextIndexStore {
 
-  private val built = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def ensure(s: SparkSession, d: String): String =
-    built.computeIfAbsent(StoreDirs.freshKey(s, d), k =>
-      StoreDirs.ensureBuilt("textidx", k) { base =>
-        val index = TextOps.deltaIndex(s, d)
-        index.select(col("doc_id"), col("source"), md5(col("text")).as("fp"))
-          .write.mode("overwrite").parquet(s"$base/fp")
-        TextOps.minhashSignaturesOf(s, index)
-          .write.mode("overwrite").parquet(s"$base/sig")
-      })
+    StoreDirs.store(s, "textidx", d) { base =>
+      val index = TextOps.deltaIndex(s, d)
+      index.select(col("doc_id"), col("source"), md5(col("text")).as("fp"))
+        .write.mode("overwrite").parquet(s"$base/fp")
+      TextOps.minhashSignaturesOf(s, index)
+        .write.mode("overwrite").parquet(s"$base/sig")
+    }
 
   /** The materialized (doc_id, source, fp) exact-dedup index. */
   def fp(s: SparkSession, d: String): DataFrame =
@@ -50,14 +47,13 @@ object TextIndexStore {
     Tables.read(s, s"${ensure(s, d)}/sig")
 
   private def ensureCorpus(s: SparkSession, d: String): String =
-    built.computeIfAbsent("corpus|" + StoreDirs.freshKey(s, d), k =>
-      StoreDirs.ensureBuilt("textcorpus", k.stripPrefix("corpus|")) { base =>
-        val docs = TextOps.docsParallel(s, d)
-        TextOps.minhashSignaturesOf(s, docs)
-          .write.mode("overwrite").parquet(s"$base/sig")
-        docs.select(col("doc_id"), TextOps.shsetCol.as("shset"))
-          .write.mode("overwrite").parquet(s"$base/shset")
-      })
+    StoreDirs.store(s, "textcorpus", d) { base =>
+      val docs = TextOps.docsParallel(s, d)
+      TextOps.minhashSignaturesOf(s, docs)
+        .write.mode("overwrite").parquet(s"$base/sig")
+      docs.select(col("doc_id"), TextOps.shsetCol.as("shset"))
+        .write.mode("overwrite").parquet(s"$base/shset")
+    }
 
   /** FULL-corpus analogs of [[sig]] for the self-join near-dup path
     * (VERDICT r11: `q_near_dup_pipeline`'s staged profile showed no

@@ -645,13 +645,8 @@ object TextOps extends QueryModule {
     * costs the batch scan plus a 64-row merge. */
   def cmsRefresh(s: SparkSession, dir: String, batch: DataFrame): Unit = {
     val b = cmsCellsOf(batch)
-    val merged =
-      (if (StoreDirs.recoverThenExists(dir))
-        Tables.read(s, dir).unionByName(b)
-          .groupBy(col("j"), col("b")).agg(sum(col("n")).as("n"))
-      else b).localCheckpoint()
-    StoreDirs.durableOverwrite(merged, dir)
-    Relational.unpersistCheckpoint(merged)
+    StoreDirs.fold(s, dir)(_.fold(b)(
+      _.unionByName(b).groupBy(col("j"), col("b")).agg(sum(col("n")).as("n"))))
   }
 
   def cmsFreq(s: SparkSession, d: String): DataFrame = {

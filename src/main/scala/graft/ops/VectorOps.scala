@@ -817,24 +817,21 @@ object VectorOps extends QueryModule {
     * recomputes identical values to the inline build (deterministic
     * training), so the DuckDB oracles, which retrain inline, still
     * hash-match — store-invariance for free. */
-  private val pqBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def pqStore(s: SparkSession, d: String): String =
-    pqBuilt.computeIfAbsent(StoreDirs.freshKey(s, d), k =>
-      StoreDirs.ensureBuilt("pqindex", k) { base =>
-        val e = embParallel(s, d)
-        pqCodebook(e).write.mode("overwrite").parquet(s"$base/codebook")
-        pqAssign(subspaced(e, "vec_id", "embedding"),
-            Tables.read(s, s"$base/codebook"))
-          .write.mode("overwrite").parquet(s"$base/codes")
-        // the IVFADC coarse layer: trained centroids + each vector's
-        // inverted-list assignment, both ingest-time artifacts (a vector's
-        // list never changes after indexing)
-        coarseCodebook(e).write.mode("overwrite").parquet(s"$base/coarse")
-        pqAssign(coarseSub(e), Tables.read(s, s"$base/coarse"))
-          .select(col("vec_id"), col("code").as("list"))
-          .write.mode("overwrite").parquet(s"$base/lists")
-      })
+    StoreDirs.store(s, "pqindex", d) { base =>
+      val e = embParallel(s, d)
+      pqCodebook(e).write.mode("overwrite").parquet(s"$base/codebook")
+      pqAssign(subspaced(e, "vec_id", "embedding"),
+          Tables.read(s, s"$base/codebook"))
+        .write.mode("overwrite").parquet(s"$base/codes")
+      // the IVFADC coarse layer: trained centroids + each vector's
+      // inverted-list assignment, both ingest-time artifacts (a vector's
+      // list never changes after indexing)
+      coarseCodebook(e).write.mode("overwrite").parquet(s"$base/coarse")
+      pqAssign(coarseSub(e), Tables.read(s, s"$base/coarse"))
+        .select(col("vec_id"), col("code").as("list"))
+        .write.mode("overwrite").parquet(s"$base/lists")
+    }
   private def storedCodebook(s: SparkSession, d: String): DataFrame =
     Tables.read(s, s"${pqStore(s, d)}/codebook")
   private def storedCodes(s: SparkSession, d: String): DataFrame =
@@ -1530,9 +1527,6 @@ object VectorOps extends QueryModule {
   def annIvfPqRecall(s: SparkSession, d: String): DataFrame =
     recallVsExactL2(s, d, annIvfPq(s, d))
 
-  private val truthBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** The exact squared-L2 top-5 ground truth per probe — computed ONCE
     * per input corpus and STORED (r11: the four gated recall audits each
     * re-scanned the corpus for the identical truth set, making them the
@@ -1542,23 +1536,22 @@ object VectorOps extends QueryModule {
     * recomputing the exact arm from scratch, so a corrupted store breaks
     * the hash, never passes silently. */
   private def exactTop5(s: SparkSession, d: String): DataFrame = {
-    val dir = truthBuilt.computeIfAbsent(StoreDirs.freshKey(s, d), k =>
-      StoreDirs.ensureBuilt("anntruth", k) { base =>
-        val e = embParallel(s, d)
-        val probes = e.filter(col("vec_id") < 8)
-          .select(col("vec_id").as("probe_id"), col("embedding").as("pvec"))
-        val exScored = e
-          .select(col("vec_id").as("neighbor_id"),
-            col("embedding").as("cvec"))
-          .crossJoin(broadcast(probes))
-          .filter(col("neighbor_id") =!= col("probe_id"))
-          .select(col("probe_id"), col("neighbor_id"),
-            (lit(0.0) - (normSq(col("pvec")) + normSq(col("cvec")) -
-              lit(2.0) * dot(col("pvec"), col("cvec")))).as("sim"))
-        topKPerProbe(exScored, 5)
-          .select(col("probe_id"), col("neighbor_id"))
-          .write.mode("overwrite").parquet(s"$base/top5")
-      })
+    val dir = StoreDirs.store(s, "anntruth", d) { base =>
+      val e = embParallel(s, d)
+      val probes = e.filter(col("vec_id") < 8)
+        .select(col("vec_id").as("probe_id"), col("embedding").as("pvec"))
+      val exScored = e
+        .select(col("vec_id").as("neighbor_id"),
+          col("embedding").as("cvec"))
+        .crossJoin(broadcast(probes))
+        .filter(col("neighbor_id") =!= col("probe_id"))
+        .select(col("probe_id"), col("neighbor_id"),
+          (lit(0.0) - (normSq(col("pvec")) + normSq(col("cvec")) -
+            lit(2.0) * dot(col("pvec"), col("cvec")))).as("sim"))
+      topKPerProbe(exScored, 5)
+        .select(col("probe_id"), col("neighbor_id"))
+        .write.mode("overwrite").parquet(s"$base/top5")
+    }
     Tables.read(s, s"$dir/top5")
   }
 

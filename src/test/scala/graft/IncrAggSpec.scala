@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.Relational
+import graft.ops.{Relational, StoreDirs}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -37,14 +37,8 @@ class IncrAggSpec extends AnyFunSuite {
     val q = in.toDS().toDF().writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val fresh = Relational.orderPartials(batch)
-        val merged =
-          if (new java.io.File(store).exists()) {
-            // materialize before overwrite: the store is both input and
-            // output of this merge
-            Relational.mergeOrderPartials(
-              spark.read.parquet(store), fresh).localCheckpoint()
-          } else fresh.localCheckpoint()
-        merged.write.mode("overwrite").parquet(store)
+        StoreDirs.fold(spark, store)(
+          _.fold(fresh)(Relational.mergeOrderPartials(_, fresh)))
       }
       .start()
     // deliberately uneven batch boundaries, including a 1-row batch and a

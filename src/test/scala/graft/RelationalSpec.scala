@@ -11,6 +11,15 @@ object TestSession {
     s
   }
   val sf = "/root/testdata/sf0.001"
+
+  /** A copy of [[sf]] under a new path, so every store built from it is
+    * built afresh instead of found in the memo. */
+  def freshSf(): String = {
+    val dir = java.nio.file.Files.createTempDirectory("sfcopy")
+    new java.io.File(sf).listFiles().foreach(f =>
+      java.nio.file.Files.copy(f.toPath, dir.resolve(f.getName)))
+    dir.toString
+  }
 }
 
 class RelationalSpec extends AnyFunSuite {
@@ -65,6 +74,20 @@ class RelationalSpec extends AnyFunSuite {
       .filterNot(SparkEntry.queries.contains)
     assert(missing.isEmpty, "store probes naming unregistered queries: " +
       missing.mkString(", "))
+    // run in Bench's order on a fresh input, each probe builds exactly
+    // the one store its tag names, so the record charges every build to
+    // its own line and no build lands in the sweep
+    val d = TestSession.freshSf()
+    def storeDirs: Set[String] =
+      Option(new java.io.File(graft.ops.StoreDirs.rootDir).list())
+        .fold(Set.empty[String])(_.toSet)
+    Bench.storeProbes.foreach { case (tag, qn) =>
+      val before = storeDirs
+      SparkEntry.queries(qn)(spark, d).queryExecution.toRdd.count()
+      val added = storeDirs -- before
+      assert(added.size === 1 && added.head.startsWith(tag + "_"),
+        s"probe $tag ($qn) added ${added.mkString(", ")}")
+    }
   }
 
   test("lag-gap sessionizer agrees with native session_window") {

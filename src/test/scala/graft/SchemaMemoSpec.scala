@@ -92,9 +92,9 @@ class SchemaMemoSpec extends AnyFunSuite {
   test("a store rewritten by StoreDirs.durableOverwrite is read with its " +
       "new schema") {
     val dir = s"${tmp()}/store"
-    StoreDirs.durableOverwrite(Seq(1L, 2L).toDF("id"), dir)
+    StoreDirs.fold(spark, dir)(_ => Seq(1L, 2L).toDF("id"))
     assert(Tables.read(spark, dir).schema.fieldNames.toSeq === Seq("id"))
-    StoreDirs.durableOverwrite(Seq((3L, "c")).toDF("id", "tag"), dir)
+    StoreDirs.fold(spark, dir)(_ => Seq((3L, "c")).toDF("id", "tag"))
     val after = Tables.read(spark, dir)
     assert(after.schema.fieldNames.toSeq === Seq("id", "tag"))
     assert(rows(after) === Seq(Row(3L, "c")))

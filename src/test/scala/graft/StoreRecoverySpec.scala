@@ -3,13 +3,14 @@ package graft
 import graft.ops.StoreDirs
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Crash-recovery contract of [[StoreDirs.durableOverwrite]]'s two-rename
-  * swap (ADVICE r10): every crash window leaves at least one COMPLETE
-  * copy on disk, and [[StoreDirs.recoverSwap]] must restore it — NEVER
-  * treat a missing live dir as an empty store while sibling copies exist,
-  * and never let the next overwrite's staging/old cleanup delete the sole
+/** Crash-recovery contract of [[StoreDirs.fold]]'s two-rename swap
+  * (ADVICE r10): every crash window leaves at least one COMPLETE copy on
+  * disk, and the next fold must restore it before it reads — NEVER treat
+  * a missing live dir as an empty store while sibling copies exist, and
+  * never let the next overwrite's staging/old cleanup delete the sole
   * survivors. Each test fabricates the exact on-disk state a crash at one
-  * point of the swap leaves behind, then asserts what recovery serves. */
+  * point of the swap leaves behind, then asserts what the next fold's
+  * merge is handed and what the store holds after it. */
 class StoreRecoverySpec extends AnyFunSuite {
   lazy val spark = TestSession.spark
 
@@ -24,14 +25,27 @@ class StoreRecoverySpec extends AnyFunSuite {
   private def readIds(dir: String): Set[Long] =
     spark.read.parquet(dir).collect().map(_.getLong(0)).toSet
 
+  /** Fold into `dir` and return the ids the merge was handed (`None` when
+    * the store was absent). The merge writes `next`, or keeps the prior
+    * rows when `next` is empty. */
+  private def fold(dir: String, next: Seq[Long] = Nil): Option[Set[Long]] = {
+    import spark.implicits._
+    var seen: Option[Set[Long]] = None
+    StoreDirs.fold(spark, dir) { prior =>
+      seen = prior.map(_.collect().map(_.getLong(0)).toSet)
+      if (next.isEmpty) prior.get else next.toDF("id")
+    }
+    seen
+  }
+
   test("crash between the two renames: .old (last committed) is restored, " +
       "in-flight .staging discarded") {
     val dir = tmp()
     write(dir + ".old", Seq(1L, 2L))     // live → .old rename happened
     write(dir + ".staging", Seq(3L, 4L)) // commit rename never ran
-    assert(StoreDirs.recoverThenExists(dir))
     // .old is the last COMMITTED state; preferring .staging would
     // double-apply the in-flight batch when the caller replays it
+    assert(fold(dir) === Some(Set(1L, 2L)))
     assert(readIds(dir) === Set(1L, 2L))
     assert(!new java.io.File(dir + ".staging").exists())
     assert(!new java.io.File(dir + ".old").exists())
@@ -43,7 +57,7 @@ class StoreRecoverySpec extends AnyFunSuite {
     write(dir + ".staging", Seq(7L))
     assert(new java.io.File(dir + ".staging", "_SUCCESS").exists(),
       "precondition: Spark's committer writes _SUCCESS")
-    assert(StoreDirs.recoverThenExists(dir))
+    assert(fold(dir) === Some(Set(7L)))
     assert(readIds(dir) === Set(7L))
   }
 
@@ -52,17 +66,17 @@ class StoreRecoverySpec extends AnyFunSuite {
     val dir = tmp()
     write(dir + ".staging", Seq(9L))
     assert(new java.io.File(dir + ".staging", "_SUCCESS").delete())
-    assert(!StoreDirs.recoverThenExists(dir))
+    assert(fold(dir, Seq(10L)) === None)
+    assert(readIds(dir) === Set(10L))
     assert(!new java.io.File(dir + ".staging").exists())
   }
 
   test("live dir present: recovery is a no-op and the next " +
       "durableOverwrite swaps cleanly") {
-    import spark.implicits._
     val dir = tmp()
-    StoreDirs.durableOverwrite(Seq(1L).toDF("id"), dir)
+    assert(fold(dir, Seq(1L)) === None)
     assert(readIds(dir) === Set(1L))
-    StoreDirs.durableOverwrite(Seq(2L).toDF("id"), dir)
+    assert(fold(dir, Seq(2L)) === Some(Set(1L)))
     assert(readIds(dir) === Set(2L))
     assert(!new java.io.File(dir + ".staging").exists())
     assert(!new java.io.File(dir + ".old").exists())
@@ -70,14 +84,13 @@ class StoreRecoverySpec extends AnyFunSuite {
 
   test("durableOverwrite after a mid-swap crash recovers FIRST — the " +
       "survivor is never deleted as stale staging/old debris") {
-    import spark.implicits._
     val dir = tmp()
     write(dir + ".old", Seq(1L))      // crash state: live missing
     write(dir + ".staging", Seq(2L))
-    // a read→merge→overwrite caller would read {1} via recoverThenExists;
-    // here we call the write side directly: entry recovery must restore
-    // live before the staging/old cleanup deletes the only copies
-    StoreDirs.durableOverwrite(Seq(5L).toDF("id"), dir)
+    // the merge ignores the store it is handed ({1}, restored from .old)
+    // and writes {5}: recovery must restore live before the staging/old
+    // cleanup deletes the only copies
+    assert(fold(dir, Seq(5L)) === Some(Set(1L)))
     assert(readIds(dir) === Set(5L))
   }
 
