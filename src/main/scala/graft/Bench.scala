@@ -13,12 +13,13 @@ import org.apache.spark.sql.SparkSession
   * from position-correlated contention bursts (23.8 s recorded for a query
   * whose isolated min is 1.14 s). So after the sweep, every query whose
   * sweep min exceeds `SPARK_GRAFT_BENCH_ISO_THRESH` seconds (default 1.0)
-  * — plus the `SPARK_GRAFT_BENCH_ISOLATED` (default 5) slowest-by-sweep-min
-  * — is re-run in a FRESH FORKED JVM, and the HEADLINE per-query figure is
-  * `min(sweep_min, isolated_min)`; `value`/`total` are recomputed from
-  * those folded mins. A contention spike big enough to matter is by
-  * construction big enough to cross the threshold, get isolated, and be
-  * replaced — the headline self-heals without anyone re-adjudicating noise.
+  * — plus, in a full sweep, the `SPARK_GRAFT_BENCH_ISOLATED` (default 5)
+  * slowest-by-sweep-min — is re-run in a FRESH FORKED JVM, and the
+  * HEADLINE per-query figure is `min(sweep_min, isolated_min)`;
+  * `value`/`total` are recomputed from those folded mins. A contention
+  * spike big enough to matter is by construction big enough to cross the
+  * threshold, get isolated, and be replaced — the headline self-heals
+  * without anyone re-adjudicating noise.
   *
   * WHY a fresh JVM, not a post-GC re-run here: r8 proved the in-process
   * isolation pass shares the sweep's aged heap — after ~500 query
@@ -76,14 +77,15 @@ object Bench {
   /** Store pre-build probes: (the tag of one store directory, the
     * cheapest registered query that builds it), one entry per store.
     * Order matters: a probe must build exactly its own store, so a store
-    * another one reads is probed first — `dwd` before `scd2h`, the
-    * bucketed lineitem before the orders join and the LPA edges (both
+    * another one reads is probed first — `dwd` before `dws` and `scd2h`,
+    * the bucketed lineitem before the orders join and the LPA edges (both
     * read it), `textcorpus` before `corpussurv`, `postings` before
     * `embed` (q_hybrid_rrf_dense reads both). RelationalSpec runs the
     * probes in this order on a fresh input and checks each one adds one
     * directory named by its tag. */
   val storeProbes: Seq[(String, String)] = Seq(
-    "dwd" -> "q_dwd_order_wide", "scd2h" -> "q_scd2_history",
+    "dwd" -> "q_dwd_order_wide", "dws" -> "q_ads_channel_stats",
+    "scd2h" -> "q_scd2_history",
     "bucket_lineitem_bkt" -> "q_order_line_stats",
     "bucket_orders_bkt" -> "q_rev_by_priority",
     "textidx" -> "q_delta_dedup", "textcorpus" -> "q_minhash_lsh_pairs",
@@ -291,20 +293,26 @@ object Bench {
     // Sweep outliers get a second, uninterleaved measurement in a FRESH
     // JVM (see scaladoc). Candidates: everything whose sweep min crossed
     // the absolute threshold (a contention spike that moves the total by
-    // definition crosses it), plus the nIsolated slowest-by-sweep-min,
-    // PLUS every query whose in-sweep dispersion (max/min across the
-    // runs) exceeds 2x — a run that disagrees with its siblings by 2x
-    // was contended, and the re-measure pass must confirm which figure
-    // is real instead of trusting whichever run happened to be quiet
-    // (r12 verdict #3: the q_collocations 38s-vs-1.5s case). Capped at
-    // isoMax slowest-first so the phase stays bounded.
+    // definition crosses it), plus the nIsolated slowest-by-sweep-min
+    // (full sweeps only), PLUS every query whose in-sweep dispersion
+    // (max/min across the runs) exceeds 2x — a run that disagrees with
+    // its siblings by 2x was contended, and the re-measure pass must
+    // confirm which figure is real instead of trusting whichever run
+    // happened to be quiet (r12 verdict #3: the q_collocations
+    // 38s-vs-1.5s case). Capped at isoMax slowest-first so the phase
+    // stays bounded.
     val isoMax = sys.env.getOrElse("SPARK_GRAFT_BENCH_ISO_MAX", "16").toInt
     val okSweep = results.filter(_._2 >= 0)
     val sweepMin = okSweep.map(r => (r._1, r._2)).toMap
     val sweepDisp = okSweep.filter(_._2 > 0)
       .map(r => (r._1, r._4 / r._2)).toMap
     val dispFlagged = sweepDisp.filter(_._2 > 2.0).keys.toSeq
-    val allCand = (okSweep.sortBy(-_._2).take(nIsolated).map(_._1) ++
+    // in a name-filtered run of N or fewer names the slowest-N rule would
+    // isolate every query whatever its dispersion
+    val slowest =
+      if (args.isEmpty) okSweep.sortBy(-_._2).take(nIsolated).map(_._1)
+      else Nil
+    val allCand = (slowest ++
       okSweep.filter(_._2 > isoThresh).map(_._1) ++ dispFlagged).distinct
     // dispersion-flagged queries get RESERVED cap slots (ADVICE r13): the
     // cap used to drop slowest-by-sweep-min LAST, which evicted exactly

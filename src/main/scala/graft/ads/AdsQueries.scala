@@ -1,7 +1,7 @@
 package graft.ads
 
 import graft.Tables
-import graft.ops.{DwdStore, OrderWide, QueryModule}
+import graft.ops.{DwdStore, DwsStore, OrderWide, QueryModule}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -14,22 +14,33 @@ import org.apache.spark.sql.functions._
   * Mapping of the gmall domains onto the star schema:
   *   channel→event_type, keyword corpus→documents, province→nation,
   *   GMV→lineitem revenue, visitor day→event date, sku category→p_type.
+  *
+  * Serving path: like the reference's publisher, which reads tables its
+  * DWS jobs pre-aggregated, 16 of these queries aggregate the
+  * [[graft.ops.DwsStore]] tables instead of the ODS tables. A grain row
+  * there stands for one distinct user, customer or order, so a
+  * `count(distinct x)` here is `count(x)`, and a query without a per-user
+  * window runs as a scan, one exchange and the result. The other seven
+  * say why they stay where they are.
   */
 object AdsQueries extends QueryModule {
 
   /** /traffic/uvCt,svCt,pvPerSession analogs + ORDER BY DESC
     * (TrafficChannelStatsMapper.java:11-49): per-channel uv/pv + derived
-    * per-uv ratio. */
+    * per-uv ratio, over the (event_type, user) DWS grain. */
   def channelStats(s: SparkSession, d: String): DataFrame =
-    Tables.events(s, d)
+    DwsStore.byTypeUser(s, d)
       .groupBy(col("event_type").as("ch"))
-      .agg(countDistinct(col("user_id")).as("uv_ct"),
-        count(lit(1)).as("pv_ct"),
-        sum(round(col("value") * 100).cast("long")).as("value_cents"))
+      .agg(count(col("user_id")).as("uv_ct"),
+        sum(col("pv")).as("pv_ct"),
+        sum(col("value_cents")).as("value_cents"))
       .withColumn("pv_per_uv", col("pv_ct").cast("double") / col("uv_ct"))
 
   /** /traffic/keywords (TrafficKeywordsMapper.java:10-21): keyword score =
-    * sum of source-weighted hits (`multiIf` → CASE), top-20. */
+    * sum of source-weighted hits (`multiIf` → CASE), top-20. Stays on
+    * `documents` (with [[keywordLateral]]): the keyword corpus is no DWS
+    * domain, and the query is already a scan, one exchange and the
+    * result. */
   def keywordStats(s: SparkSession, d: String): DataFrame =
     Tables.documents(s, d)
       .select(col("lang"), explode(split(col("text"), " ")).as("keyword"))
@@ -62,80 +73,81 @@ object AdsQueries extends QueryModule {
   }
 
   /** /traffic/visitorPerHr (TrafficVisitorStatsMapper.java:23-31): hourly
-    * buckets with conditional sums (`if(is_new='1',uv_ct,0)` analog). */
+    * buckets with conditional sums (`if(is_new='1',uv_ct,0)` analog), over
+    * the (hour, user) DWS grain. */
   def visitorPerHour(s: SparkSession, d: String): DataFrame =
-    Tables.events(s, d)
-      .groupBy(hour(col("ts")).as("hr"))
-      .agg(countDistinct(col("user_id")).as("uv_ct"),
-        count(lit(1)).as("pv_ct"),
-        sum(when(col("event_type") === "signup", 1).otherwise(0)).as("new_ct"))
+    DwsStore.byHourUser(s, d)
+      .groupBy(col("hr"))
+      .agg(count(col("user_id")).as("uv_ct"),
+        sum(col("pv")).as("pv_ct"),
+        sum(col("signup_ct")).as("new_ct"))
 
   /** /trade/stats (TradeStatsMapper.java:18-37): 4-way UNION ALL of typed
-    * metrics incl. count(distinct user). */
+    * metrics incl. count(distinct user), as one aggregate over the
+    * per-customer DWS grain, unpivoted to one row per metric (named by
+    * its column). A count over no rows is 0, as in the mapper's SQL,
+    * hence the `coalesce` on the summed counts. */
   def tradeStats(s: SparkSession, d: String): DataFrame = {
-    val o = Tables.orders(s, d)
-    def m(name: String, v: DataFrame): DataFrame =
-      v.select(lit(name).as("metric"), col("v"))
     // mixed money/count metrics unify on DOUBLE: the money sum accumulates
     // in exact decimal first; counts are integral so double is exact
-    m("order_total_amount",
-        o.agg(sum(col("o_totalprice").cast("decimal(18,2)"))
-          .cast("double").as("v")))
-      .unionAll(m("order_ct",
-        o.agg(count(lit(1)).cast("double").as("v"))))
-      .unionAll(m("order_user_ct",
-        o.agg(countDistinct(col("o_custkey")).cast("double").as("v"))))
-      .unionAll(m("open_order_ct",
-        o.filter(col("o_orderstatus") === "O")
-          .agg(count(lit(1)).cast("double").as("v"))))
+    def ct(c: Column): Column = coalesce(sum(c), lit(0L)).cast("double")
+    DwsStore.byCustomer(s, d).agg(
+        sum(col("price_sum")).cast("double").as("order_total_amount"),
+        ct(col("order_ct")).as("order_ct"),
+        count(col("o_custkey")).cast("double").as("order_user_ct"),
+        ct(col("open_ct")).as("open_order_ct"))
+      .unpivot(Array.empty[Column], "metric", "v")
   }
 
   /** /trade/provinceOrderCt + Amount (TradeStatsMapper.java:39-53):
-    * province rollup with null/'' guards — nation as the province analog. */
+    * province rollup with null/'' guards — nation as the province analog.
+    * The per-customer DWS rows carry the customer's `n_name`. */
   def provinceOrders(s: SparkSession, d: String): DataFrame =
-    Tables.orders(s, d)
-      .join(Tables.customer(s, d), col("o_custkey") === col("c_custkey"))
-      .join(broadcast(Tables.nation(s, d)),
-        col("c_nationkey") === col("n_nationkey"))
+    DwsStore.byCustomer(s, d)
       .filter(col("n_name").isNotNull && col("n_name") =!= "")
       .groupBy(col("n_name").as("province"))
-      .agg(count(lit(1)).as("order_ct"),
-        sum(col("o_totalprice").cast("decimal(18,2)"))
-          .cast("double").as("order_amount"))
+      .agg(sum(col("order_ct")).as("order_ct"),
+        sum(col("price_sum")).cast("double").as("order_amount"))
 
   /** /commodity/spu (CommodityStatsMapper.java:93-120): category key via
     * `split(' ')[0]` (the §2.7 scalar) + top-k GMV per category head. */
   def spuCategoryGmv(s: SparkSession, d: String): DataFrame =
-    Tables.lineitem(s, d).select("l_partkey", "l_extendedprice")
-      .join(broadcast(Tables.part(s, d).select("p_partkey", "p_type")),
-        col("l_partkey") === col("p_partkey"))
+    DwsStore.byPartFlag(s, d)
       .groupBy(element_at(split(col("p_type"), " "), 1).as("category1"))
-      .agg(count(lit(1)).as("item_ct"),
-        sum(col("l_extendedprice").cast("decimal(18,2)"))
-          .cast("double").as("gmv"))
+      .agg(sum(col("item_ct")).as("item_ct"),
+        sum(col("ext_sum")).cast("double").as("gmv"))
 
-  /** Legacy /gmv (SkuOrder.java:9): one scalar row. */
+  /** Legacy /gmv (SkuOrder.java:9): one scalar row. Stays on `lineitem`:
+    * a global aggregate is already a scan, one exchange and the
+    * result. */
   def gmvScalar(s: SparkSession, d: String): DataFrame =
     Tables.lineitem(s, d)
       .agg(sum(col("l_extendedprice").cast("decimal(18,2)"))
           .cast("double").as("gmv"),
         count(lit(1)).as("n_items"))
 
+  /** The active days of each user, in day order. */
+  private val userDays = Window.partitionBy(col("user_id")).orderBy(col("day"))
+
   /** Day-over-day retention: users active on day d AND d+1 (user-funnel
-    * family, UserStatsMapper.java:12-63). */
-  def userRetention(s: SparkSession, d: String): DataFrame = {
-    val ud = Tables.events(s, d)
-      .select(col("user_id"), to_date(col("ts")).as("day")).distinct()
-    ud.as("a").join(ud.as("b"),
-        col("a.user_id") === col("b.user_id") &&
-        col("b.day") === date_add(col("a.day"), 1))
-      .groupBy(date_format(col("a.day"), "yyyy-MM-dd").as("day"))
+    * family, UserStatsMapper.java:12-63). Over the one-row-per-user-day
+    * DWS grain, d+1 is active exactly when it is the user's next active
+    * day, so the self-join is a `lead` over the user's days. A NULL user
+    * matches no one in the join, so it is dropped first. */
+  def userRetention(s: SparkSession, d: String): DataFrame =
+    DwsStore.byUserDay(s, d)
+      .filter(col("user_id").isNotNull)
+      .withColumn("next_day", lead(col("day"), 1).over(userDays))
+      .filter(col("next_day") === date_add(col("day"), 1))
+      .groupBy(date_format(col("day"), "yyyy-MM-dd").as("day"))
       .agg(count(lit(1)).as("retained"))
-  }
 
   /** Sessionization + bounce rate (ujRate, TrafficChannelStatsMapper + the
     * W6 bounce capability as a batch oracle): 30-min-gap sessions per user;
-    * a 1-event session is a bounce. */
+    * a 1-event session is a bounce. Stays on `events` (with
+    * [[channelDerived]]): a 30-minute gap is a property of consecutive
+    * events, so it needs every event in order, which no DWS grain
+    * keeps. */
   def sessionStats(s: SparkSession, d: String): DataFrame = {
     val e = Tables.events(s, d)
       .select(col("user_id"), col("event_id"),
@@ -166,7 +178,9 @@ object AdsQueries extends QueryModule {
     * reference's ActivityStatsMapper queries order_activity_reduce_amount /
     * order_origin_total_amount columns its own DWS job never writes — we
     * add them): the MATERIALIZED wide rows are that window's input — one
-    * DWD build per run, every consumer scans the store. */
+    * DWD build per run, every consumer scans the store. Its two subsidy
+    * queries stay on the DWD rows: each is already a scan, one exchange
+    * and the result. */
   private def orderWindow(s: SparkSession, d: String): DataFrame =
     DwdStore.wide(s, d)
 
@@ -197,14 +211,14 @@ object AdsQueries extends QueryModule {
       .withColumn("coupon_subsidy_rate",
         col("coupon_reduce_amount") / col("origin_total_amount"))
 
-  /** p_type is single-word in the testdata, so the 3-level category
-    * hierarchy maps to the natural type → brand → size chain. */
-  private def partDims(s: SparkSession, d: String): DataFrame =
-    Tables.part(s, d).select(col("p_partkey"),
-      col("p_brand").as("trademark"),
-      col("p_type").as("category1"),
-      col("p_brand").as("category2"),
-      col("p_size").cast("string").as("category3"))
+  /** The part-dim keys of the commodity queries over the
+    * (brand, type, size, return flag) DWS grain. p_type is single-word in
+    * the testdata, so the 3-level category hierarchy maps to the natural
+    * type → brand → size chain. */
+  private val trademark = col("p_brand").as("trademark")
+  private val categories = Seq(col("p_type").as("category1"),
+    col("p_brand").as("category2"),
+    col("p_size").cast("string").as("category3"))
 
   /** Order-side vs refund-side (l_returnflag='R') aggregates joined FULL
     * OUTER per dim key — the CommodityStatsMapper.java:14-91 shape,
@@ -224,41 +238,35 @@ object AdsQueries extends QueryModule {
     * is non-null: the outer join never matches a NULL key, so it emits a
     * separate order-side and refund-side row for it, while `groupBy`
     * folds NULL keys into one group. The part-dim keys are non-null here
-    * on two counts: the inner broadcast join keeps only lineitem rows
-    * that matched a `part` row, and the projected `p_brand` / `p_type` /
-    * `p_size` are filled on every part row of the generated data (zero
-    * NULLs at every sf). A caller grouping on a nullable key must not
-    * reuse this template. */
+    * on two counts: the store's inner join keeps only lineitem rows
+    * that matched a `part` row, and `p_brand` / `p_type` / `p_size` are
+    * filled on every part row of the generated data (zero NULLs at every
+    * sf). A caller grouping on a nullable key must not reuse this
+    * template. */
   private def orderVsRefund(s: SparkSession, d: String,
-                            keys: Seq[String]): DataFrame = {
-    val li = Tables.lineitem(s, d)
-      .join(broadcast(partDims(s, d)), col("l_partkey") === col("p_partkey"))
+                            keys: Seq[Column]): DataFrame = {
     val isR = col("l_returnflag") === "R"
-    li.groupBy(keys.map(col): _*).agg(
-      count(lit(1)).as("order_count"),
-      sum(col("l_extendedprice").cast("decimal(18,2)")).cast("double")
-        .as("order_amount"),
-      sum(when(isR, lit(1L))).as("refund_count"),
-      sum(when(isR, col("l_extendedprice").cast("decimal(18,2)")))
-        .cast("double").as("refund_amount"))
+    DwsStore.byPartFlag(s, d).groupBy(keys: _*).agg(
+      sum(col("item_ct")).as("order_count"),
+      sum(col("ext_sum")).cast("double").as("order_amount"),
+      sum(when(isR, col("item_ct"))).as("refund_count"),
+      sum(when(isR, col("ext_sum"))).cast("double").as("refund_amount"))
   }
 
   /** /commodity/trademark (CommodityStatsMapper.java:14-38). */
   def trademarkStats(s: SparkSession, d: String): DataFrame =
-    orderVsRefund(s, d, Seq("trademark"))
+    orderVsRefund(s, d, Seq(trademark))
 
   /** /commodity/category (CommodityStatsMapper.java:41-91): 3-level
     * category rollup keys. */
   def categoryStats(s: SparkSession, d: String): DataFrame =
-    orderVsRefund(s, d, Seq("category1", "category2", "category3"))
+    orderVsRefund(s, d, categories)
 
   /** /commodity/tmPieGraph (CommodityStatsMapper.java:40-45). */
   def trademarkPie(s: SparkSession, d: String): DataFrame =
-    Tables.lineitem(s, d)
-      .join(broadcast(partDims(s, d)), col("l_partkey") === col("p_partkey"))
-      .groupBy(col("trademark"))
-      .agg(sum(col("l_extendedprice").cast("decimal(18,2)"))
-        .cast("double").as("order_amount"))
+    DwsStore.byPartFlag(s, d)
+      .groupBy(trademark)
+      .agg(sum(col("ext_sum")).cast("double").as("order_amount"))
 
   /** /commodity/trademark2 (selectGmvByTm, CommodityStatsMapper.java:119):
     * top-k trademarks by GMV, ORDER BY DESC LIMIT. */
@@ -269,37 +277,39 @@ object AdsQueries extends QueryModule {
 
   /** The §2.10 missing window itself:
     * dws_trade_trademark_category_user_spu_order_window — per (trademark,
-    * category1, user) order aggregates over the deduped wide rows. */
+    * category1, user) order aggregates over the deduped wide rows, read
+    * at the DWS (trademark, category1, user, order) grain. */
   def tmCatUserWindow(s: SparkSession, d: String): DataFrame =
-    DwdStore.latest(s, d)
-      .join(broadcast(partDims(s, d)), col("sku_id") === col("p_partkey"))
+    DwsStore.byTmCatUserOrder(s, d)
       .groupBy(col("trademark"), col("category1"), col("user_id"))
-      .agg(countDistinct(col("order_id")).as("order_ct"),
-        count(lit(1)).as("item_ct"),
-        sum(col("split_total_amount")).cast("double").as("order_amount"))
+      .agg(count(col("order_id")).as("order_ct"),
+        sum(col("item_ct")).as("item_ct"),
+        sum(col("amount_sum")).cast("double").as("order_amount"))
 
   /** /user/userChangeCt (UserStatsMapper.java:41-57): 3-way UNION ALL —
     * returning users / active users / new users. backCt uses the true
     * 7-day-gap rule (the DWS formula [[userBack]] aggregates per day;
     * here: distinct users with ≥1 such gap on the login-analog view
-    * stream) — round 2 approximated it with ">1 active day". */
+    * stream) — round 2 approximated it with ">1 active day".
+    *
+    * One pass over the user-day DWS grain: a user's previous VIEW day is
+    * the last earlier day with views (the lag over the view days alone),
+    * the window's partitioning by user lets the per-user rollup run
+    * without another exchange, and one aggregate counts all three. */
   def userChangeCt(s: SparkSession, d: String): DataFrame = {
-    val e = Tables.events(s, d)
-    def m(name: String, v: DataFrame): DataFrame =
-      v.select(lit(name).as("type"), col("ct"))
-    val days = e.filter(col("event_type") === "view")
-      .select(col("user_id"), to_date(col("ts")).as("day")).distinct()
-    val gap = datediff(col("day"),
-      lag(col("day"), 1).over(
-        Window.partitionBy(col("user_id")).orderBy(col("day"))))
-    m("backCt", days.withColumn("gap", gap)
-        .filter(col("gap") > 7)
-        .agg(countDistinct(col("user_id")).as("ct")))
-      .unionAll(m("activeUserCt",
-        e.agg(countDistinct(col("user_id")).as("ct"))))
-      .unionAll(m("newUserCt",
-        e.filter(col("event_type") === "signup")
-          .agg(countDistinct(col("user_id")).as("ct"))))
+    val prevView = last(when(col("view_ct") > 0, col("day")),
+      ignoreNulls = true)
+      .over(userDays.rowsBetween(Window.unboundedPreceding, -1))
+    val perUser = DwsStore.byUserDay(s, d)
+      .withColumn("back",
+        col("view_ct") > 0 && datediff(col("day"), prevView) > 7)
+      .groupBy(col("user_id"))
+      .agg(max(col("back")).as("back"), max(col("signup_ct") > 0).as("new"))
+    perUser.agg(
+        count(when(col("back"), col("user_id"))).as("backCt"),
+        count(col("user_id")).as("activeUserCt"),
+        count(when(col("new"), col("user_id"))).as("newUserCt"))
+      .unpivot(Array.empty[Column], "type", "ct")
   }
 
   /** The 7-day back-flow window (DwsUserUserLoginWindow.java:103-117):
@@ -313,71 +323,68 @@ object AdsQueries extends QueryModule {
     * stream is that analog here; over ALL events every testdata user is
     * active daily and the metric degenerates to constant zero.
     *
-    * Scale: the distinct is a map-side-combining hash agg on (user, day);
-    * the lag window repartitions by user_id once — the same keyed-state
+    * Scale: the user-day DWS rows are the distinct (user, day) pairs; the
+    * lag window repartitions by user_id once — the same keyed-state
     * partitioning the reference's KeyedStream uses. */
-  def userBack(s: SparkSession, d: String): DataFrame = {
-    val days = Tables.events(s, d)
-      .filter(col("event_type") === "view")
-      .select(col("user_id"), to_date(col("ts")).as("day")).distinct()
-    val prevDay = lag(col("day"), 1).over(
-      Window.partitionBy(col("user_id")).orderBy(col("day")))
-    days.withColumn("prev_day", prevDay)
+  def userBack(s: SparkSession, d: String): DataFrame =
+    DwsStore.byUserDay(s, d)
+      .filter(col("view_ct") > 0)
+      .withColumn("prev_day", lag(col("day"), 1).over(userDays))
       .groupBy(date_format(col("day"), "yyyy-MM-dd").as("dt"))
       .agg(count(lit(1)).as("uu_ct"),
         sum(when(datediff(col("day"), col("prev_day")) > 7, 1).otherwise(0))
           .cast("long").as("back_ct"))
-  }
 
   /** /user/uvPerPage (UserStatsMapper.java:12-39): the 5-way UNION ALL
-    * funnel of per-stage unique users across two source tables. */
+    * funnel of per-stage unique users across two source tables — one
+    * aggregate over the union of the (event_type, user) and customer DWS
+    * grains, each of whose rows is one distinct user of its page. */
   def uvPerPage(s: SparkSession, d: String): DataFrame = {
-    val e = Tables.events(s, d)
-    def stage(name: String): DataFrame =
-      e.filter(col("event_type") === name)
-        .agg(countDistinct(col("user_id")).as("uv_ct"))
-        .select(lit(name).as("page_id"), col("uv_ct"))
-    stage("view")
-      .unionAll(stage("click"))
-      .unionAll(stage("signup"))
-      .unionAll(stage("purchase"))
-      .unionAll(Tables.orders(s, d)
-        .agg(countDistinct(col("o_custkey")).as("uv_ct"))
-        .select(lit("trade").as("page_id"), col("uv_ct")))
+    val stages = Seq("view", "click", "signup", "purchase")
+    val visits = DwsStore.byTypeUser(s, d)
+      .filter(col("event_type").isin(stages: _*))
+      .select(col("event_type").as("page_id"), col("user_id").as("uid"))
+      .unionAll(DwsStore.byCustomer(s, d)
+        .select(lit("trade").as("page_id"), col("o_custkey").as("uid")))
+    val uv = (stages :+ "trade").map(p =>
+      count(when(col("page_id") === p, col("uid"))).as(p))
+    visits.agg(uv.head, uv.tail: _*)
+      .unpivot(Array.empty[Column], "page_id", "uv_ct")
   }
 
   /** /user/userTradeCt (UserStatsMapper.java:59-75): order vs payment
-    * unique-user funnel ('F' = fulfilled ≈ payment-success). */
-  def userTradeCt(s: SparkSession, d: String): DataFrame = {
-    val o = Tables.orders(s, d)
-    o.agg(countDistinct(col("o_custkey")).as("ct"))
-      .select(lit("order").as("trade_type"), col("ct"))
-      .unionAll(o.filter(col("o_orderstatus") === "F")
-        .agg(countDistinct(col("o_custkey")).as("ct"))
-        .select(lit("payment").as("trade_type"), col("ct")))
-  }
+    * unique-user funnel ('F' = fulfilled ≈ payment-success), over the
+    * per-customer DWS grain. */
+  def userTradeCt(s: SparkSession, d: String): DataFrame =
+    DwsStore.byCustomer(s, d).agg(
+        count(col("o_custkey")).as("order"),
+        count(when(col("fulfilled_ct") > 0, col("o_custkey"))).as("payment"))
+      .unpivot(Array.empty[Column], "trade_type", "ct")
 
   /** /traffic/visitorPerType (TrafficVisitorStatsMapper.java:11-21): new
     * vs returning visitors — is_new = the event falls on the user's first
-    * active day. */
-  def visitorPerType(s: SparkSession, d: String): DataFrame = {
-    val e = Tables.events(s, d)
-      .select(col("user_id"), to_date(col("ts")).as("day"), col("value"))
-    val firstDay = e.groupBy(col("user_id"))
-      .agg(min(col("day")).as("first_day"))
-    e.join(firstDay, Seq("user_id"))
-      .withColumn("is_new",
-        when(col("day") === col("first_day"), "1").otherwise("0"))
+    * active day. Over the user-day DWS grain: the first day is a window
+    * minimum per user (the source joined it back on `user_id`, which
+    * drops a NULL user), one user-level rollup inside the window's
+    * partitions makes each row one distinct user of its `is_new` side,
+    * and a second rollup counts them. */
+  def visitorPerType(s: SparkSession, d: String): DataFrame =
+    DwsStore.byUserDay(s, d)
+      .filter(col("user_id").isNotNull)
+      .withColumn("is_new", when(col("day") ===
+        min(col("day")).over(Window.partitionBy(col("user_id"))), "1")
+        .otherwise("0"))
+      .groupBy(col("is_new"), col("user_id"))
+      .agg(sum(col("pv")).as("pv"), sum(col("value_dec")).as("value_dec"))
       .groupBy(col("is_new"))
-      .agg(countDistinct(col("user_id")).as("uv_ct"),
-        count(lit(1)).as("pv_ct"),
-        sum(col("value").cast("decimal(18,6)")).cast("double")
-          .as("dur_sum"))
-  }
+      .agg(count(col("user_id")).as("uv_ct"),
+        sum(col("pv")).as("pv_ct"),
+        sum(col("value_dec")).cast("double").as("dur_sum"))
 
   /** /traffic per-channel derived-ratio bundle (TrafficChannelStatsMapper
     * .java:11-49): sessions (30-min gap) attributed to their entry
-    * channel; svCt / pvPerSession / durPerSession / ujRate per channel. */
+    * channel; svCt / pvPerSession / durPerSession / ujRate per channel.
+    * Stays on `events` for the reason [[sessionStats]] does. */
   def channelDerived(s: SparkSession, d: String): DataFrame = {
     val e = Tables.events(s, d)
       .select(col("user_id"), col("event_id"), col("event_type"),

@@ -4,11 +4,11 @@ import graft.Tables
 import org.apache.hadoop.fs.{ChecksumFileSystem, FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** The one lifecycle of every materialized store: [[DwdStore]],
-  * [[Scd2Store]], [[TextIndexStore]] (`textidx`, `textcorpus`),
-  * [[CorpusStore]], [[PostingStore]], [[EmbedStore]], the [[VectorOps]]
-  * PQ index and recall ground truth, the [[CatalogOps]] compaction and
-  * Z-order executors, and the [[BucketStore]] tables.
+/** The one lifecycle of every materialized store: [[DwdStore]] (`dwd`),
+  * [[DwsStore]] (`dws`), [[Scd2Store]], [[TextIndexStore]] (`textidx`,
+  * `textcorpus`), [[CorpusStore]], [[PostingStore]], [[EmbedStore]], the
+  * [[VectorOps]] PQ index and recall ground truth, the [[CatalogOps]]
+  * compaction and Z-order executors, and the [[BucketStore]] tables.
   *
   *   - Build: [[store]] writes a store once per (tag, input fingerprint)
   *     under a PID-scoped tmp root and memoizes the finished directory.

@@ -8,11 +8,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * `CodeGenerator` builds its cache once per JVM from the first session,
   * so this spec checks the behaviour, not the conf string: a dashboard's
   * worth of queries run twice compiles its classes in the first cycle and
-  * (next to) none in the second. Not quite none: under AQE,
-  * `q_ads_user_change` (three independent aggregate branches whose
-  * stages finish in varying order) generates a few source variants from
-  * run to run, and a cycle can meet one it has not compiled yet: 0–6
-  * classes per cycle measured, 0 after its first run with AQE off. With
+  * (next to) none in the second. Not quite none: under AQE, a plan with
+  * independent aggregate branches whose stages finish in varying order
+  * generates a few source variants from run to run, and a cycle can meet
+  * one it has not compiled yet (0–6 classes per cycle measured on such a
+  * plan, 0 with AQE off). With
   * Spark's default of 100 entries the 26 dashboard queries evict every
   * class before its next use and the second cycle recompiles nearly all
   * of them (347 after 377 in the first, measured at sf0.001 with the conf

@@ -246,6 +246,12 @@ class RelationalSpec extends AnyFunSuite {
       .withColumn("ts", timestamp_seconds(col("epoch"))).drop("epoch")
       .withColumn("value", lit(1.0)).withColumn("props", lit("{}"))
       .write.mode("overwrite").parquet(s"$tmp/events.parquet")
+    // userBack reads the DWS store, whose one build reads every input
+    // table: the rest come from sf0.001
+    new java.io.File(TestSession.sf).listFiles()
+      .filterNot(_.getName == "events.parquet").foreach(f =>
+        java.nio.file.Files.copy(f.toPath,
+          java.nio.file.Paths.get(tmp, f.getName)))
     val got = graft.ads.AdsQueries.userBack(spark, tmp)
       .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2)))
       .toMap
